@@ -5,15 +5,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Sessions.local(cpus, appName = "graft-bench")
-    // conf passthrough for branch A/Bs (the ScaleBench gate-env
-    // pattern, generalized): `SPARK_GRAFT_CONF="k=v,k=v"` sets session
-    // confs before any query runs — sbt forks the run JVM, so -D
-    // system properties on the sbt command line never arrive here.
-    // Profiling-only; the driver passes no env and measures defaults.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    // branch A/B conf passthrough (`SPARK_GRAFT_CONF="k=v,k=v"`)
+    Harness.applyConf(spark)
     // warm the session (codegen, parquet reader, shuffle machinery, window
     // exec, text writer) so the first measured query isn't charged ~2-4s
     // of JVM/janino warmup
@@ -62,18 +55,6 @@ object Bench {
     val picked =
       if (wanted.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => wanted(n) }
-    // Several operators Par.materialize/persist() intermediates; those
-    // blocks are only freed when the RDD is GC'd, so over a 67-query run
-    // executor storage and GC pressure accumulate and the tail queries pay
-    // for the head's garbage (r4: q63, a 5000-row map-side filter, read
-    // 8.2s). Drop every persisted block after each measured query so each
-    // query is timed against a clean store. The unpersist itself is OUTSIDE
-    // the timed section: block cleanup cost is harness hygiene, not query
-    // cost.
-    def dropAllBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
     // SPARK_GRAFT_BENCH_PASSES=N (default 3): run each query N times and
     // publish BOTH the first pass (cold plans — the round-over-round
     // comparison number, matching how r3–r5 measured) and the per-query
@@ -125,10 +106,10 @@ object Bench {
     // arbitrary access history — the start-vs-end gap partly measured
     // cache state, not contention.
     def probeReading(): Double = {
-      dropAllBlocks()
+      Harness.dropAllBlocks(spark)
       calibrationProbe()
       val r = calibrationProbe()
-      dropAllBlocks()
+      Harness.dropAllBlocks(spark)
       r
     }
     // ---- continuous hypervisor-steal trace ----
@@ -192,7 +173,7 @@ object Bench {
                catch { case _: Throwable => false }
       // a failed query must read as a FAILURE (-1), not a fast success
       val s = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      dropAllBlocks()
+      Harness.dropAllBlocks(spark)
       s
     }
     def med(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
@@ -270,14 +251,14 @@ object Bench {
     def jNum(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     def jmap(sel: ((Double, Double)) => Double): String =
-      results.map { case (k, v) => s"\"" + k + "\":" + sel(v) }
+      results.map { case (k, v) => Harness.json(k) + ":" + sel(v) }
         .mkString("{", ",", "}")
     // totals count SUCCESSES only — summing the -1.0 failure sentinels
     // would make a broken round read as a speedup; failures are listed so
     // a smaller total can never masquerade as an improvement
     def jtotal(sel: ((Double, Double)) => Double): Double =
       results.collect { case (_, v) if sel(v) >= 0 => sel(v) }.sum
-    val failed = results.collect { case (n, (v, _)) if v < 0 => "\"" + n + "\"" }
+    val failed = results.collect { case (n, (v, _)) if v < 0 => Harness.json(n) }
       .mkString("[", ",", "]")
     // "value"/"queries" stay the FIRST-pass numbers (comparable with prior
     // rounds); "steady_value"/"queries_steady" are the per-query medians.
@@ -319,18 +300,18 @@ object Bench {
       }
       .sortBy(_._1)
       .map { case (n, m) =>
-        "\"" + n + ":build_s=" + String.format(java.util.Locale.ROOT,
+        Harness.json(n + ":build_s=" + String.format(java.util.Locale.ROOT,
           "%.1f", Double.box(m("build_s"))) + ",band=" +
           String.format(java.util.Locale.ROOT, "%.1f",
-            Double.box(memoQuietBand(n))) + "\""
+            Double.box(memoQuietBand(n))))
       }.mkString("[", ",", "]")
     val retriedJson = retried.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      .map(Harness.json).mkString("[", ",", "]")
     // pre-retry steady medians for the queries the retry touched (the
     // full map would double the artifact; untouched queries' pre- and
     // post-retry medians are identical)
     val preRetryJson = retried.sorted
-      .map(n => "\"" + n + "\":" + jNum(preRetrySteady(n)))
+      .map(n => Harness.json(n) + ":" + jNum(preRetrySteady(n)))
       .mkString("{", ",", "}")
     // per-memo build/hit accounting (active memos only): "build_s" is
     // the wall time the first consumer paid to snapshot the shared
@@ -339,8 +320,8 @@ object Bench {
       .filter { case (_, m) => m.values.sum > 0 }
       .sortBy(_._1)
       .map { case (n, m) =>
-        "\"" + n + "\":{" + m.toSeq.sortBy(_._1).map { case (k, v) =>
-          "\"" + k + "\":" + (if (k == "build_s") jNum(v)
+        Harness.json(n) + ":{" + m.toSeq.sortBy(_._1).map { case (k, v) =>
+          Harness.json(k) + ":" + (if (k == "build_s") jNum(v)
                               else v.toLong.toString)
         }.mkString(",") + "}"
       }.mkString("{", ",", "}")
@@ -350,14 +331,19 @@ object Bench {
       else (stealSamples.sum / stealSamples.length, stealSamples.max,
         stealSamples.count(_ >= 2.0).toLong)
     }
-    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"failed":$failed,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"failed":$failed,"sf":${Harness.json(sfDir)}}"""
     println(line)
     // ALSO write the line to a file: the driver's harness captures only
     // the tail of sbt output and has truncated the per-query maps two
     // rounds running — the file keeps the full medians inspectable (and
     // committable as BENCH_LOCAL_r{N}.json) without re-running.
+    // cwd-relative default stamped with cores and scale dir (e.g.
+    // BENCH_LOCAL_c8_sf0.1.json), so runs at different core counts or
+    // scales never overwrite each other; override via env
+    val sfTag = Option(java.nio.file.Paths.get(sfDir).getFileName)
+      .map(_.toString.replaceAll("[^A-Za-z0-9._-]", "_")).getOrElse("sf")
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_LOCAL.json") // cwd-relative default; override via env
+      s"BENCH_LOCAL_c${cpus}_$sfTag.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(benchOut), line + "\n")
     catch { case e: Throwable =>
@@ -380,10 +366,10 @@ object Bench {
       .collect { case (n, (_, s)) if s >= 0 => n -> s }
       .sortBy { case (n, s) => (-s, n) }
       .take(30)
-      .map { case (n, s) => "\"" + n + "\":" + jNum(s) }
+      .map { case (n, s) => Harness.json(n) + ":" + jNum(s) }
       .mkString("{", ",", "}")
     val nOk = results.count(_._2._1 >= 0)
-    println(s"""{"metric":"summary","total":${jtotal(_._1)},"steady":${jtotal(_._2)},"n":$nOk,"failed":$failed,"passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"contended_segments":$contendedSegments,"retried":$retriedJson,"top_steady":$topSteadyJson,"per_query_file":"$benchOut","sf":"$sfDir"}""")
+    println(s"""{"metric":"summary","total":${jtotal(_._1)},"steady":${jtotal(_._2)},"n":$nOk,"failed":$failed,"passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"contended_segments":$contendedSegments,"retried":$retriedJson,"top_steady":$topSteadyJson,"per_query_file":${Harness.json(benchOut)},"sf":${Harness.json(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1,0 +1,61 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** Plumbing shared by the local harnesses (Bench, ScaleBench, Verify). */
+private[graft] object Harness {
+
+  /** Parse a `SPARK_GRAFT_CONF`-style spec: comma-separated `key=value`
+    * entries (value may itself contain `=`). A blank spec sets nothing;
+    * a malformed entry fails naming the entry, never a bare MatchError. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    if (spec.trim.isEmpty) Nil
+    else spec.split(",", -1).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' in '$spec' is not key=value")
+      }
+    }
+
+  /** Branch A/B passthrough: `SPARK_GRAFT_CONF="k=v,k=v"` sets session
+    * confs before any query runs — sbt forks the run JVM, so -D system
+    * properties on the sbt command line never arrive. Profiling-only;
+    * with the env unset every harness measures defaults. */
+  def applyConf(spark: SparkSession): Unit =
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    })
+
+  /** Several operators Par.materialize/persist() intermediates; those
+    * blocks are only freed when the RDD is GC'd, so over a catalog run
+    * executor storage and GC pressure accumulate and later queries pay
+    * for earlier ones' garbage. Harnesses drop every persisted block
+    * after each measured query, outside the timed section. */
+  def dropAllBlocks(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  /** Delete a file tree if it exists, children before parents. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (< 0x20) escaped — a tab or CR in a name or SQL text would
+    * otherwise make a consumer's json.load fail. */
+  def json(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}

@@ -1,21 +1,37 @@
 package graft
 
-import graft.analytics.Par.Mat
+import graft.analytics.{Cluster, Events, Graph, Memo, Similarity, Stats}
+import graft.queries.{Catalog, Tables}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve harness (evidence for SCALE.md; not run by the driver):
-  * materializes 1×/3×/10× copies of the documents and embeddings tables to
-  * parquet and times the dedup / LSH / prefix-sum operator families at each
-  * scale. Copies are content-DISJOINT by construction — every token gets a
-  * per-copy prefix and every embedding a per-copy deterministic ±1 sign
-  * pattern — so the candidate-pair structure per copy matches the base
-  * corpus. (The clustered synthetic embeddings still produce genuine
-  * cross-copy cosine pairs under ANY norm-preserving transform; see
-  * SCALE.md for the measured curves and the log2(n) signature-bits law.)
+  * runs CATALOG entries — the same oracle-verified wiring Verify and
+  * Bench run — over k content-disjoint copies of all ten testdata tables.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.ScaleBench
+  * For each k it writes `<tmp>/x<k>/<table>.parquet`, then per query
+  * times `Catalog.byName(q).run(spark, dir).count()` (Bench's timed op)
+  * once cold (after `Memo.invalidateAll()` and a block drop) and once
+  * warm, printing one JSON line per (k, cpus, query):
+  * `{"k","cpus","query","rows","cold_s","warm_s","error","sf"}`.
+  *
+  * Copy 0 is the base rows unchanged, so x1 is exactly the verified
+  * input. Copy i > 0 shifts every key, primary and foreign alike
+  * (orderkey, partkey, suppkey, custkey, doc/vec/event/user ids), so
+  * joins keep their per-copy fan-out; prefixes every document token
+  * (`c<i>_`) so term and shingle spaces are disjoint; flips embedding
+  * signs by a per-copy ±1 pattern; and moves events +64 days per copy.
+  * `nation` and `region` are dimensions: one copy at every k.
+  *
+  * Only [[overrides]] is hand-wired: parameters that must grow with the
+  * corpus to keep the operator's contract, and named stress fixtures.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 SPARK_GRAFT_SCALE_KS=1,3,10
+  *   runMain graft.ScaleBench [query ...]   (no names: the whole catalog
+  *   plus every stress entry; SPARK_GRAFT_CONF passes session confs, e.g.
+  *   spark.graft.quantile.singleTaskGate=0 to time a distributed branch)
   *
   * Subcommand `split <feed.xml>`: throughput comparison of the S2
   * distributed element splitter vs the native multiLine scan on a
@@ -44,1075 +60,187 @@ object ScaleBench {
     }
   }
 
-  private def scaleDocs(spark: SparkSession, base: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    (0 until k).map { i =>
-      base.select(
-        ($"doc_id" + lit(i.toLong * 10000000L)).as("doc_id"),
-        // per-copy token prefix: term/shingle spaces are disjoint across
-        // copies, so per-copy dedup structure is identical to the base
-        regexp_replace($"text", "(\\S+)", s"c$i" + "_$1").as("text"),
-        $"lang")
-    }.reduce(_ unionByName _)
+  private[graft] val tableNames = Seq("customer", "documents", "embeddings",
+    "events", "lineitem", "nation", "orders", "part", "region", "supplier")
+  private val dimensions = Set("nation", "region")
+
+  /** Copy i of a testdata table (copy 0 = the base rows unchanged). */
+  private def copyOf(base: DataFrame, table: String, i: Int,
+                     dim: Int): DataFrame = if (i == 0) base else {
+    def shift(stride: Long)(c: String) = c -> (col(c) + lit(i * stride))
+    val tpch = shift(100000000L) _
+    val repl: Map[String, Column] = (table match {
+      case "documents" =>
+        val text = regexp_replace(col("text"), "(\\S+)", s"c${i}_$$1")
+        Seq(shift(10000000L)("doc_id"), "text" -> text,
+          "n_chars" -> length(text).cast("long"))
+      case "embeddings" =>
+        // norm-preserving, and two different patterns decorrelate any
+        // pair of vectors — a circular shift would not (smooth embeddings
+        // autocorrelate under shifts, inflating cross-copy LSH pairs)
+        val signs: Seq[Float] = (0 until dim).map { j =>
+          val d = java.security.MessageDigest.getInstance("MD5")
+            .digest(s"copy$i|$j".getBytes("UTF-8"))
+          if ((d(0) & 1) == 0) 1.0f else -1.0f
+        }
+        Seq(shift(10000000L)("vec_id"), "embedding" ->
+          zip_with(col("embedding"), typedLit(signs), (x, s) => x * s))
+      case "events" =>
+        // the base feed spans ~30 days, so copies occupy disjoint hours
+        Seq(shift(1000000000L)("event_id"), shift(1000000L)("user_id"),
+          "ts" -> (col("ts") + expr(s"INTERVAL ${i * 64} DAYS")))
+      case "lineitem" => Seq("l_orderkey", "l_partkey", "l_suppkey").map(tpch)
+      case "orders"   => Seq("o_orderkey", "o_custkey").map(tpch)
+      case "part"     => Seq(tpch("p_partkey"))
+      case "supplier" => Seq(tpch("s_suppkey"))
+      case "customer" => Seq(tpch("c_custkey"))
+    }).toMap
+    base.select(base.columns.toSeq.map(c => repl.getOrElse(c, col(c)).as(c)): _*)
   }
 
-  private def scaleEmb(spark: SparkSession, base: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    val dim = base.select(size($"embedding")).head().getInt(0)
-    (0 until k).map { i =>
-      // per-copy deterministic ±1 sign pattern: norm-preserving, and two
-      // different patterns decorrelate any pair of vectors — a circular
-      // shift would not (smooth embeddings autocorrelate under shifts,
-      // inflating cross-copy LSH pairs superlinearly)
-      val signs: Seq[Float] = (0 until dim).map { j =>
-        val d = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"copy$i|$j".getBytes("UTF-8"))
-        if (i == 0 || (d(0) & 1) == 0) 1.0f else -1.0f
-      }
-      base.select(($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-                  zip_with($"embedding", typedLit(signs),
-                           (x, s) => x * s).as("embedding"))
-    }.reduce(_ unionByName _)
+  /** Write the k-copy tables of `sfDir` into `dir`, plus the named stress
+    * fixtures asked for (`hub`, `hot`; `biggrid` needs no file). */
+  private[graft] def writeScaled(spark: SparkSession, sfDir: String,
+                                 dir: String, k: Int,
+                                 fixtures: Set[String]): Unit = {
+    for (t <- tableNames) {
+      val base = Tables(spark, sfDir, t)
+      val dim = if (t == "embeddings")
+        base.select(size(col("embedding"))).head().getInt(0) else 0
+      (0 until (if (dimensions(t)) 1 else k)).map(copyOf(base, t, _, dim))
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    if (fixtures("hub")) {
+      // hub-heavy pair graph over the scaled doc ids: one hub node of
+      // degree n (the boilerplate-template shape) plus a ring over the
+      // leaves so triangles exist (hub-leaf_i-leaf_{i+1})
+      val idx = Tables(spark, dir, "documents").select(col("doc_id"),
+        row_number().over(Window.orderBy("doc_id")).as("i"))
+      val star = idx.select(lit(-1L).as("a"), col("doc_id").as("b"))
+      val ring = idx.select(col("i"), col("doc_id").as("a"))
+        .join(idx.select((col("i") - 1).as("i"), col("doc_id").as("b")),
+          Seq("i"))
+        .select("a", "b")
+      star.union(ring).write.mode("overwrite").parquet(s"$dir/hub.parquet")
+    }
+    if (fixtures("hot")) {
+      // k UNSHIFTED copies (same ts, same user): per-user in-window touch
+      // density grows k-fold, so user-keyed join volume grows ~k^2 — the
+      // bot-user tail a per-conversion candidate bound can't cap
+      val ev = Tables(spark, sfDir, "events")
+      (0 until k).map(i => ev.withColumn("event_id",
+          col("event_id") + lit(i * 1000000000L)))
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$dir/hot.parquet")
+    }
   }
 
-  private def scaleEvents(spark: SparkSession, base: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    // per-copy +64-day shift: the base feed spans ~30 days, so copies
-    // occupy DISJOINT hour ranges — the (type, hour) window table grows
-    // linearly with copies, the exact stress the trailing-window op sees
-    // from a longer-running feed
-    (0 until k).map { i =>
-      base.select(($"event_id" + lit(i.toLong * 1000000000L)).as("event_id"),
-        ($"ts" + expr(s"INTERVAL ${i * 64} DAYS")).as("ts"),
-        $"event_type",
-        // per-copy user shift: cohorts/values per copy mirror the base
-        ($"user_id" + lit(i.toLong * 1000000L)).as("user_id"),
-        $"value")
-    }.reduce(_ unionByName _)
-  }
+  private type Run = (SparkSession, String, Int) => DataFrame
 
-  private def scaleLineitem(spark: SparkSession, base: DataFrame,
-                            k: Int): DataFrame = {
-    import spark.implicits._
-    // per-copy orderkey AND partkey shifts: baskets and item spaces are
-    // disjoint across copies, so pair structure per copy mirrors the
-    // base and the co-occurrence graph grows linearly with copies
-    (0 until k).map { i =>
-      base.select(
-        ($"l_orderkey" + lit(i.toLong * 100000000L)).as("l_orderkey"),
-        ($"l_partkey" + lit(i.toLong * 100000000L)).as("l_partkey"),
-        $"l_quantity", $"l_extendedprice", $"l_discount",
-        $"l_returnflag", $"l_shipdate")
-    }.reduce(_ unionByName _)
-  }
+  /** The only hand-wired entries: `qNNN_name` replaces that catalog
+    * entry's parameters with ones that grow with k; `qNNN_name@fixture`
+    * runs that entry's operator over a named stress fixture. */
+  private[graft] val overrides: Seq[(String, Run)] = Seq(
+    // signature bits scale with log2(n): a FIXED bit width saturates
+    // (buckets per band are constant, so chance candidates grow n²/2^b)
+    "q59_lsh_neardup" -> ((s, d, k) => Similarity.lshNearDupPairs(
+      Tables(s, d, "embeddings"), "vec_id", "embedding", minCosine = 0.4,
+      bands = 3,
+      planesPerBand = 6 + (math.log(k.toDouble) / math.log(2)).round.toInt)),
+    // cluster count ∝ n holds cluster / inverted-list sizes flat (the
+    // SemDeDup and IVF sizing rules)
+    "q81_semdedup" -> ((s, d, k) => Cluster.semDedup(
+      Tables(s, d, "embeddings"), "vec_id", "embedding", minCosine = 0.45,
+      k = 8 * k, iters = 2)),
+    "q95_kmeans_ivf_topk" -> ((s, d, k) => Cluster.kmeansIvfTopK(
+      Tables(s, d, "embeddings"), "vec_id", "embedding", k = 8 * k,
+      iters = 2, kTop = 5, nprobe = 2)),
+    "q158_cluster_coreset" -> ((s, d, k) => Cluster.clusterCoreset(
+      Tables(s, d, "embeddings"), "vec_id", "embedding", k = 8 * k,
+      iters = 2, m = 25)),
+    "q271_silhouette" -> ((s, d, k) => Cluster.simplifiedSilhouette(
+      Tables(s, d, "embeddings"), "vec_id", "embedding", k = 8 * k,
+      iters = 2)),
+    // degree-ordered wedges: the hub contributes ZERO wedges
+    "q174_triangles@hub" -> ((s, d, _) =>
+      Graph.triangleCounts(Tables(s, d, "hub"), "a", "b")),
+    // nothing peels (all deg >= 2): prices every round at full volume
+    "q197_kcore@hub" -> ((s, d, _) =>
+      Graph.kCore(Tables(s, d, "hub"), "a", "b", k = 2, rounds = 8)),
+    "q264_assortativity@hub" -> ((s, d, _) =>
+      Graph.degreeAssortativity(Tables(s, d, "hub"), "a", "b")),
+    "q189_attribution@hot" -> ((s, d, _) => Events.attribution(
+      Tables(s, d, "hot"), "user_id", "event_type", "ts", "event_id",
+      "value", convType = "purchase", touchType = "click", windowDays = 7)),
+    "q228_abandonment@hot" -> ((s, d, _) => Events.abandonment(
+      Tables(s, d, "hot"), userCol = "user_id", tsCol = "ts",
+      idCol = "event_id", viewType = "view", convType = "purchase",
+      windowMinutes = 30)),
+    // gridCumSum branch receipts: catalog price/value grids repeat across
+    // copies, but the l_orderkey grid grows ~150k x k distinct at sf0.1
+    // and crosses the 4M single-task gate at x30 — pair with
+    // SPARK_GRAFT_CONF=spark.graft.quantile.singleTaskGate=0 for the
+    // all-distributed slope
+    "q262_equal_freq_bins@biggrid" -> ((s, d, _) => Stats.equalFreqBins(
+      Tables(s, d, "lineitem"), "l_orderkey", k = 10, scale = 1L)),
+    "q280_kruskal_wallis@biggrid" -> ((s, d, _) => Stats.kruskalWallis(
+      Tables(s, d, "lineitem"), "l_returnflag", "l_orderkey",
+      valueScale = 1L)))
+
+  private[graft] val fixtures = Set("hub", "hot", "biggrid")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      appName = "graft-scalebench")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local(cpus, appName = "graft-scalebench")
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("split")) {
       splitBench(spark, args.lift(1).getOrElse("/tmp/big_feed.xml"))
       spark.stop()
       return
     }
-    import spark.implicits._
-
-    // force the grid-cumulative gate (e.g. "0" times the distributed
-    // two-level prefix-sum branch of gridCumSum on grids that would
-    // otherwise take the single-task window — the branch-slope receipt
-    // SCALE.md requires)
-    sys.env.get("SPARK_GRAFT_QUANTILE_GATE").foreach(v =>
-      spark.conf.set("spark.graft.quantile.singleTaskGate", v))
-    // same dial for the Bradley-Terry driver gate ("0" times the
-    // distributed MM rounds on match tables the driver branch would
-    // otherwise absorb)
-    sys.env.get("SPARK_GRAFT_BT_GATE").foreach(v =>
-      spark.conf.set("spark.graft.bt.driverGate", v))
-    // same dial for the iterative-graph driver gate ("0" times the
-    // distributed pageRank/kCore/LPA rounds on edge sets the driver
-    // branch would otherwise absorb)
-    sys.env.get("SPARK_GRAFT_GRAPH_GATE").foreach(v =>
-      spark.conf.set("spark.graft.graph.driverGate", v))
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scale")
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-
-    // warm codegen/shuffle machinery outside the measured section
-    analytics.Dedup.exactDupTags(docs0, "doc_id", "text").count()
-
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-
-    println("[scalebench] scale  op                rows      sec")
-    val events0 = queries.Tables(spark, sfDir, "events")
-    // optional scale-point override, e.g. SPARK_GRAFT_SCALE_KS=10,30
-    // (the 30x/100x spot-runs that confirm the 1-10x slopes extrapolate)
+    Harness.applyConf(spark)
     val ks = sys.env.get("SPARK_GRAFT_SCALE_KS")
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(1, 3, 10))
+      .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 3, 10))
+    val catalog = Catalog.byName
+    val wired = overrides.toMap
+    val names = if (args.nonEmpty) args.toSeq
+      else catalog.keys.toSeq.sorted ++ overrides.map(_._1).filter(_.contains('@'))
+    val unknown = names.filterNot(n => catalog.contains(n) || wired.contains(n))
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    // warm codegen/parquet/shuffle machinery outside the measured section
+    Tables(spark, sfDir, "lineitem").groupBy("l_returnflag").count().count()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_scale")
+    def num(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     for (k <- ks) {
-      val dPath = tmp.resolve(s"docs_x$k").toString
-      val ePath = tmp.resolve(s"emb_x$k").toString
-      val evPath = tmp.resolve(s"events_x$k").toString
-      scaleDocs(spark, docs0, k).write.mode("overwrite").parquet(dPath)
-      scaleEmb(spark, emb0, k).write.mode("overwrite").parquet(ePath)
-      scaleEvents(spark, events0, k).write.mode("overwrite").parquet(evPath)
-      val docs = spark.read.parquet(dPath)
-      val emb = spark.read.parquet(ePath)
-      val events = spark.read.parquet(evPath)
-      // hub-heavy pair graph over the scaled doc ids: one hub node of
-      // degree n (the boilerplate-template shape) plus a ring over the
-      // leaves so triangles exist (hub-leaf_i-leaf_{i+1}); built and
-      // written OUTSIDE the timed closure so the curve isolates
-      // triangleCounts itself. Degree-ordered wedges keep this linear
-      // in n; ID-ordered enumeration would pay n^2/2 wedges at the hub.
-      val hubPath = tmp.resolve(s"hub_x$k").toString
-      locally {
-        val idx = docs.select($"doc_id")
-          .withColumn("i", row_number().over(
-            org.apache.spark.sql.expressions.Window.orderBy($"doc_id")))
-        val star = idx.select(lit(-1L).as("a"), $"doc_id".as("b"))
-        val ring = idx.select($"i", $"doc_id".as("a"))
-          .join(idx.select(($"i" - 1).as("i"), $"doc_id".as("b")), Seq("i"))
-          .select($"a", $"b")
-        star.union(ring).write.mode("overwrite").parquet(hubPath)
+      val dir = tmp.resolve(s"x$k").toString
+      writeScaled(spark, sfDir, dir, k, names.flatMap(_.split('@').lift(1)).toSet)
+      for (name <- names) {
+        def run(): Long = wired.get(name)
+          .fold(catalog(name).run(spark, dir))(_(spark, dir, k)).count()
+        def timed(): Either[String, (Long, Double)] = {
+          val t0 = System.nanoTime()
+          val r = try Right(run() -> (System.nanoTime() - t0) / 1e9)
+            catch { case e: Throwable =>
+              Left(e.toString.linesIterator.next().take(300)) }
+          Harness.dropAllBlocks(spark)
+          r
+        }
+        Memo.invalidateAll()
+        Harness.dropAllBlocks(spark)
+        val cold = timed()
+        val res = cold.flatMap(c => timed().map(w => (c._1, c._2, w._2)))
+        val fields = res.fold(
+          e => s""""rows":-1,"cold_s":-1,"warm_s":-1,"error":${Harness.json(e)}""",
+          { case (rows, c, w) =>
+            s""""rows":$rows,"cold_s":${num(c)},"warm_s":${num(w)},"error":null""" })
+        println(s"""{"k":$k,"cpus":$cpus,"query":${Harness.json(name)},$fields,"sf":${Harness.json(sfDir)}}""")
       }
-      val hubPairs = spark.read.parquet(hubPath)
-      // hot-user attribution stress: k unshifted copies (same ts, same
-      // user) — per-user in-window touch density grows k-fold, so the
-      // conversion x touch join volume grows ~k^2 for every user: the
-      // bot-user tail the per-conversion candidate bound can't cap
-      val hotPath = tmp.resolve(s"hot_x$k").toString
-      (0 until k).map { i =>
-        events0.select(
-          ($"event_id" + lit(i.toLong * 1000000000L)).as("event_id"),
-          $"ts", $"event_type", $"user_id", $"value")
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(hotPath)
-      val hotEvents = spark.read.parquet(hotPath)
-      val liPath = tmp.resolve(s"li_x$k").toString
-      scaleLineitem(spark,
-        spark.read.parquet(s"$sfDir/lineitem.parquet"), k)
-        .write.mode("overwrite").parquet(liPath)
-      val li = spark.read.parquet(liPath)
-      val ops: Seq[(String, () => Long)] = Seq(
-        "q17_exact_dedup" -> (() =>
-          analytics.Dedup.exactDupTags(docs, "doc_id", "text").count()),
-        "q19_minhash_lsh" -> (() =>
-          analytics.Dedup.minhashCandidates(
-            analytics.Dedup.minhashBandsFromDocs(docs, "doc_id", "text")).count()),
-        // memo receipt: the catalog's graph-family gates consume ONE
-        // memoized candidate snapshot (Memo.scala) — price the build
-        // (first call at this scale: pipeline + parquet snapshot write)
-        // against the hit (second call: a two-column scan). Each scale
-        // point's docs frame is a distinct key, so within one
-        // ScaleBench run _build is always a true first call.
-        "q19_cand_memo_build" -> (() =>
-          analytics.Dedup.minhashCandidatePairs(docs, "doc_id", "text")
-            .count()),
-        "q19_cand_memo_hit" -> (() =>
-          analytics.Dedup.minhashCandidatePairs(docs, "doc_id", "text")
-            .count()),
-        // signature bits scale with log2(n): a FIXED bit width saturates
-        // (buckets per band are constant, so chance candidates grow n²/2^b).
-        // 6 bits at n=2k keeps E[bucket] ≈ 31; hold that ratio as n grows.
-        "q59_lsh_neardup" -> (() =>
-          analytics.Similarity.lshNearDupPairs(
-            emb, "vec_id", "embedding", minCosine = 0.4,
-            bands = 3,
-            planesPerBand = 6 + (math.log(k.toDouble) / math.log(2)).round.toInt)
-            .count()),
-        "q64_token_shards" -> (() =>
-          analytics.Sampling.tokenBudgetShards(
-            docs, "doc_id", "text", budgetTokens = 10000L).count()),
-        // vocabulary grows ~linearly with copies (disjoint token spaces),
-        // so this exercises the non-broadcast word-keyed join path
-        "q77_surprisal" -> (() =>
-          analytics.TextAnalysis.unigramSurprisal(
-            docs, "doc_id", "text").count()),
-        "q78_pq_encode" -> (() =>
-          analytics.Pq.encode(emb, "vec_id", "embedding").count()),
-        // k grows with the corpus (the SemDeDup contract: hold n_c flat);
-        // 8 clusters at 2k vectors -> keep ~250/cluster as n scales
-        "q81_semdedup" -> (() =>
-          analytics.Cluster.semDedup(emb, "vec_id", "embedding",
-            minCosine = 0.45, k = 8 * k, iters = 2).count()),
-        "q84_dup_coverage" -> (() =>
-          analytics.Dedup.dupShingleCoverage(docs, "doc_id", "text").count()),
-        "q85_bigram_surprisal" -> (() =>
-          analytics.TextAnalysis.bigramSurprisal(docs, "doc_id", "text").count()),
-        "q87_phash_neardup" -> (() =>
-          analytics.Multimodal.phashNearDupPairs(
-            analytics.Multimodal.perceptualHash(
-              analytics.Multimodal.syntheticImageBlobs(docs, "doc_id")),
-            maxHamming = 4).count()),
-        // k ∝ n holds inverted-list sizes flat (the IVF sizing rule)
-        "q95_kmeans_ivf" -> (() =>
-          analytics.Cluster.kmeansIvfTopK(emb, "vec_id", "embedding",
-            k = 8 * k, iters = 2, kTop = 5, nprobe = 2).count()),
-        // rides the q18 inverted-index machinery with 5-gram SPANS — the
-        // span df distribution is thinner than 3-gram shingles (fewer
-        // hot keys), so the curve must hold at least as flat
-        "q93_substring_dups" -> (() =>
-          analytics.Dedup.substringDupPairs(docs, "doc_id", "text",
-            spanLen = 5, minShared = 1).count()),
-        // per-copy token prefixes keep boilerplate-line sets disjoint per
-        // copy, so removal structure (and the hash-keyed df table) scales
-        // linearly with copies — the shape the line rule must hold
-        "q99_line_dedup" -> (() =>
-          analytics.Dedup.removeBoilerplateLines(
-            docs.select($"doc_id",
-              analytics.Dedup.reflowLines($"text", 5).as("text")),
-            "doc_id", "text", minDocFreq = 3).count()),
-        // q18 machinery at minJaccard=0 (every candidate pair survives
-        // to the bucket agg) — the worst-case pair volume of the family
-        "q96_jaccard_hist" -> (() =>
-          analytics.Dedup.ngramJaccardPairsFromDocs(docs, "doc_id", "text",
-              minJaccard = 0.0, n = 3, maxDocFreq = 1000)
-            .select(least(floor($"jaccard" * 10).cast("int"), lit(9))
-              .as("bucket"))
-            .groupBy("bucket").agg(count(lit(1)).as("n_pairs")).count()),
-        // fixed d(d+1)/2 output; per-row term generation is the only
-        // n-proportional work — the curve must be linear-or-better
-        "q102_covariance" -> (() =>
-          analytics.Stats.covarianceMatrix(emb, "vec_id", "embedding").count()),
-        // per-copy token prefixes make the word vocab grow ~linearly with
-        // copies — each merge iteration runs over that vocab, so this
-        // exercises the vocab-bound (not corpus-bound) training claim
-        "q103_bpe_train" -> (() =>
-          analytics.Bpe.train(docs, "text", numMerges = 20)._1.count()),
-        "q105_standardize" -> (() =>
-          analytics.Stats.standardize(emb, "vec_id", "embedding").count()),
-        // labels are synthesized (vec_id % 10): the label-dim agg and the
-        // 10-centroid broadcast probe both scale linearly in n
-        "q106_centroid" -> (() =>
-          analytics.Similarity.centroidClassify(
-            emb.withColumn("label", ($"vec_id" % 10).cast("int")),
-            "vec_id", "embedding", "label").count()),
-        // 64-bucket model + 1-row totals broadcast: only the corpus scan
-        // and one (id,bucket) exchange scale with n
-        "q108_dsir" -> (() =>
-          analytics.Selection.dsirWeights(docs, "doc_id", "text",
-            ($"doc_id" % 2) === 0).count()),
-        // model is classes x 64 rows regardless of n; scoring joins the
-        // pre-aggregated (id,bucket) counts against the broadcast grid
-        "q110_nb" -> (() =>
-          analytics.TfIdf.hashedNaiveBayes(
-            docs, "doc_id", "text", "lang").count()),
-        // one codegen kernel call/row, zero shuffles: must be scan-flat
-        "q111_winnow" -> (() =>
-          analytics.Dedup.winnowFingerprints(
-            docs, "doc_id", "text").count()),
-        // 64 integer registers per group; disjoint per-copy token spaces
-        // grow true cardinality ~linearly while state stays constant
-        "q112_hll" -> (() =>
-          analytics.Sketches.hllDistinct(
-            docs.select($"lang",
-              explode(analytics.Dedup.tokens($"text")).as("w")),
-            "lang", $"w").count()),
-        // bounded k-long sketch state per group (native aggregate)
-        "q113_kmv" -> (() =>
-          analytics.Sketches.kmvDistinct(
-            docs.select($"lang",
-              explode(analytics.Dedup.tokens($"text")).as("w")),
-            "lang", $"w").count()),
-        // eval shingle set stays broadcast-sized (10% of docs), probe is
-        // map-side — the decontaminate shape with a per-doc agg on top
-        "q114_contam" -> (() =>
-          analytics.Dedup.contaminationScore(docs, "doc_id", "text",
-            ($"doc_id" % 10) === 0).count()),
-        // threshold row is 9 doubles however large n gets; bucket assign
-        // is map-side — the no-ntile-window claim under load
-        "q116_qbuckets" -> (() =>
-          analytics.Stats.quantileBuckets(
-            docs.select($"doc_id",
-              size(analytics.Dedup.tokens($"text")).cast("long").as("sc")),
-            "doc_id", $"sc").count()),
-        // the whole q119 curation decision end-to-end: verdict window +
-        // LSH components + split, all on machinery with measured curves
-        "q119_pipeline" -> (() => {
-          val cf = analytics.TextAnalysis
-            .corpusFilter(docs, "doc_id", "text").materialized()
-          val kept = docs.join(
-            cf.filter($"keep" === 1).select("doc_id"), "doc_id")
-          val split = analytics.Dedup.leakageSafeSplit(
-            analytics.Dedup.dupClusters(kept, "doc_id", "text"),
-            "doc_id", "component")
-          cf.join(split, Seq("doc_id"), "left").count()
-        }),
-        // depth x width integer counters per group — bounded state, so
-        // only the tokenization scan grows with n
-        "q120_cm" -> (() =>
-          analytics.Sketches.cmEstimate(
-            analytics.Sketches.cmCounters(
-              docs.select($"lang",
-                explode(analytics.Dedup.tokens($"text")).as("w")),
-              "lang", $"w"),
-            Seq("the", "a", "zzz_absent")).count()),
-        // q108 weights + a 1-row exact-percentile broadcast threshold:
-        // only the two corpus scans grow with n
-        "q121_dsir_select" -> (() =>
-          analytics.Selection.dsirSelect(docs, "doc_id", "text",
-            ($"doc_id" % 2) === 0, topFrac = 0.25).count()),
-        // per-copy token prefixes keep repeated-span sets disjoint per
-        // copy, so the (doc,pos,hash) span table and the hash-keyed df
-        // both scale linearly — no pair term anywhere in the plan
-        "q122_span_dedup" -> (() =>
-          analytics.Dedup.removeRepeatedSpans(docs, "doc_id", "text",
-            spanLen = 5, minDocFreq = 3).count()),
-        // filter state is 16 longs per group however large n gets; the
-        // register build is one bit_or partial agg over the token scan
-        "q123_bloom" -> (() =>
-          analytics.Sketches.bloomContains(
-            analytics.Sketches.bloomRegisters(
-              docs.select($"lang",
-                explode(analytics.Dedup.tokens($"text")).as("w")),
-              "lang", $"w"),
-            Seq("the", "data", "zzz_absent")).count()),
-        // map-side keys + bounded TakeOrdered: k rows per partition to
-        // the driver merge, no window, no global sort
-        "q124_weighted_sample" -> (() =>
-          analytics.Sampling.weightedSample(
-            docs.select($"doc_id",
-              size(analytics.Dedup.tokens($"text")).cast("long").as("w")),
-            "doc_id", $"w", k = 100).count()),
-        // cost rides the q19 candidate volume (pairs, not corpus): two
-        // id-keyed text joins + one banded kernel per candidate
-        "q125_edit_verify" -> (() =>
-          analytics.Dedup.editDistanceVerify(
-            analytics.Dedup.minhashCandidates(
-              analytics.Dedup.minhashBandsFromDocs(docs, "doc_id", "text")),
-            docs, "doc_id", "text", maxDist = 100).count()),
-        // shard pays one scan of itself + artifact-keyed joins (fp and
-        // (band,bucket)); the 80/20 split times index build AND probe
-        "q126_incremental" -> (() => {
-          val old = docs.filter($"doc_id" % 5 === 0)
-          val fresh = docs.filter($"doc_id" % 5 =!= 0)
-          analytics.Dedup.incrementalDedup(fresh, "doc_id", "text",
-            analytics.Dedup.corpusFingerprints(old, "text"),
-            analytics.Dedup.minhashBandsFromDocs(old, "doc_id", "text"))
-            .count()
-        }),
-        // map-side: tokenize, explode starts, slice — zero shuffles,
-        // output volume = sigma ceil(n_d/stride)
-        "q127_chunk_windows" -> (() =>
-          analytics.Sampling.chunkTokenWindows(docs, "doc_id", "text",
-            chunkSize = 128, stride = 64).count()),
-        // one dictionary-sized count agg + broadcast rate join; the
-        // corpus itself never shuffles
-        "q128_mixture" -> (() =>
-          analytics.Sampling.mixtureBalance(docs, "doc_id", "lang",
-            Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1))
-            .count()),
-        // two-level distributed rank over md5 order: range exchange +
-        // per-input-partition windows + broadcast offset table
-        "q129_shuffle" -> (() =>
-          analytics.Sampling.shuffleShards(docs, "doc_id", 100L).count()),
-        // one native moments pass + bounded d^2 collect; the projection
-        // itself is map-side — corpus growth only widens the scan
-        "q130_pca" -> (() =>
-          analytics.Stats.pcaProject(emb, "vec_id", "embedding").count()),
-        // two partial-aggregated corpus scans + word-keyed model joins;
-        // the per-copy token prefixes grow the vocab linearly, the exact
-        // stress a web corpus applies
-        "q131_stupid_backoff" -> (() =>
-          analytics.TextAnalysis.stupidBackoffSurprisal(
-            docs, "doc_id", "text").count()),
-        // the q131 shape + two extra aggregates OF the pair table
-        // (fan-outs, continuation counts) — must track q131's curve
-        "q147_kneser_ney" -> (() =>
-          analytics.TextAnalysis.kneserNeySurprisal(
-            docs, "doc_id", "text").count()),
-        // dictionary count agg + broadcast rate join + map-side explode;
-        // output volume is the upsampled corpus, the only growing term
-        "q132_mixture_epochs" -> (() =>
-          analytics.Sampling.mixtureEpochs(docs, "doc_id", "lang",
-            Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1))
-            .count()),
-        // queries grow with copies (id shifts preserve % 100) but per-copy
-        // term spaces are disjoint, so candidates-per-query stay flat and
-        // total posting-join work is linear in n
-        "q135_bm25" -> (() =>
-          analytics.Retrieval.bm25TopK(docs, "doc_id", "text",
-            $"doc_id" % 100 === 0, k = 10).count()),
-        // BM25 branch + brute-force vector branch + bounded RRF merge;
-        // the vector branch is the documented small-corpus baseline (swap
-        // ivfTopK in at scale — the fusion is branch-agnostic)
-        "q136_hybrid" -> (() =>
-          analytics.Retrieval.hybridTopK(docs, "doc_id", "text",
-            emb, "vec_id", "embedding",
-            $"doc_id" % 100 === 0, $"vec_id" % 100 === 0,
-            k = 5, poolK = 20).count()),
-        // (doc,char) partial agg pre-compressed to alphabet-size rows
-        // per partition — the exchange carries ~100 rows/doc regardless
-        // of doc length; must be scan-flat
-        "q148_char_entropy" -> (() =>
-          analytics.TextAnalysis.charEntropy(docs, "doc_id", "text")
-            .count()),
-        // map-side line-array folds, zero shuffles — must be scan-flat
-        "q150_gopher_lines" -> (() =>
-          analytics.TextAnalysis.gopherLineRules(
-            docs.select($"doc_id",
-              analytics.Dedup.reflowLines($"text", 7).as("text")),
-            "doc_id", "text").count()),
-        // map-side line folds + page-flag probes — must be scan-flat
-        "q152_c4_filters" -> (() =>
-          analytics.TextAnalysis.c4Filters(
-            docs.select($"doc_id",
-              analytics.Dedup.reflowLines($"text", 5).as("text")),
-            "doc_id", "text").count()),
-        // keep-first dedup: hashed-line exchange + min(struct) winner agg
-        // + doc-keyed drop join — must track q99's curve
-        "q151_keep_first" -> (() =>
-          analytics.Dedup.keepFirstLines(
-            docs.select($"doc_id",
-              analytics.Dedup.reflowLines($"text", 5).as("text")),
-            "doc_id", "text").count()),
-        // three long counters per row, one dictionary-sized agg — the
-        // flattest shape in the catalog; must be scan-flat
-        "q137_fertility" -> (() =>
-          analytics.TextAnalysis.fertility(docs, "doc_id", "text", "lang")
-            .count()),
-        // 30 GD iterations as treeAggregate over the persisted dense
-        // RDD (one scan + model-sized reduce per step, r14 shape): the
-        // curve must be linear in tokenize/densify + iters x dense
-        // scans, with NO per-iteration corpus re-tokenization and no
-        // per-step Catalyst planning
-        "q141_logreg" -> (() =>
-          analytics.Selection.logregQuality(docs, "doc_id", "text",
-            $"lang" === "en").count()),
-        // q141's cost + the distinct-score running sum: the tail is
-        // data-DEPENDENT (bounded at 1e6+1 rows by round-6 scores, but
-        // how close it gets depends on score diversity) so it earns its
-        // own measured curve — must track q141's, the tail staying flat.
-        // NOTE: since the Selection model memo, running this in the same
-        // session AFTER q141 at the same scale point rides the cached
-        // model — the curve then measures the TAIL alone; run it in its
-        // own session (ops filter) to measure train+tail
-        "q144_auc" -> (() =>
-          analytics.Stats.aucScore(
-            analytics.Selection.logregQuality(docs, "doc_id", "text",
-              $"lang" === "en"), "score", "y").count()),
-        // same bounded distinct-score machinery, descending sweep
-        "q145_avg_prec" -> (() =>
-          analytics.Stats.averagePrecision(
-            analytics.Selection.logregQuality(docs, "doc_id", "text",
-              $"lang" === "en"), "score", "y").count()),
-        // the q77 shape: one (group, word) agg + word-keyed corpus join;
-        // per-copy token prefixes grow the vocab linearly — linear-flat
-        "q143_vocab_drift" -> (() =>
-          analytics.TextAnalysis.vocabDrift(docs, "text", "lang").count()),
-        // pass 1 is k counters/partition + a 1-row driver merge; pass 2
-        // a <=k-key recount — the most bounded sketch in the family;
-        // must be scan-flat even as the prefixed vocab grows linearly
-        "q153_heavy_hitters" -> (() =>
-          analytics.Sketches.heavyHitters(
-            docs.select(explode(analytics.Dedup.tokens($"text")).as("w")),
-            $"w", k = 32).count()),
-        // bucketed write (the only n-proportional cost) then the
-        // exchange-free merge join — times the write-once/join-many
-        // layout end-to-end at each scale
-        "q154_bucketed" -> (() => {
-          val bb = tmp.resolve(s"bkt_x$k").toString
-          operators.Bucketing.writeBucketed(docs.select($"doc_id", $"lang"),
-            "graft_scale_docs", s"$bb/docs", "doc_id", 16)
-          operators.Bucketing.writeBucketed(emb.select($"vec_id"),
-            "graft_scale_emb", s"$bb/emb", "vec_id", 16)
-          val d = spark.table("graft_scale_docs")
-          val e = spark.table("graft_scale_emb")
-          d.hint("merge").join(e, d("doc_id") === e("vec_id")).count()
-        }),
-        // word-count exchange + bounded TakeOrdered + 1-row moments agg:
-        // everything after the count is N-bounded — scan-flat
-        "q155_zipf" -> (() =>
-          analytics.TextAnalysis.zipfSlope(docs, "doc_id", "text").count()),
-        // percentile state is distinct-length-bounded per group; the
-        // thresholds table broadcasts — scan-flat
-        "q156_length_gate" -> (() =>
-          analytics.Selection.lengthPercentileGate(
-            docs.withColumn("n_chars", length($"text").cast("long")),
-            "doc_id", "n_chars", "lang").count()),
-        // the feed compresses to (type, hour) rows before any window;
-        // +64-day copy shifts grow that table linearly — linear-flat
-        "q157_rate_anomaly" -> (() =>
-          analytics.Stats.rateAnomaly(events, "event_type", "ts").count()),
-        // assignment rides q80's lloyd (k ∝ n holds clusters flat);
-        // selection state is m pairs per cluster per partial — the
-        // window-free per-group top-k claim under load
-        "q158_coreset" -> (() =>
-          analytics.Cluster.clusterCoreset(emb, "vec_id", "embedding",
-            k = 8 * k, iters = 2, m = 25).count()),
-        // both sides compress to (id, md5) before the full-outer join;
-        // id spaces disjoint per copy so diff structure scales linearly
-        "q159_snapshot_diff" -> (() => {
-          val newSnap = docs.filter($"doc_id" % 7 =!= 0)
-            .select($"doc_id",
-              when($"doc_id" % 5 === 0, concat($"text", lit(" rev2")))
-                .otherwise($"text").as("text"))
-          analytics.Dedup.snapshotDiff(docs, newSnap, "doc_id", "text")
-            .count()
-        }),
-        // coalesce rewrite, no shuffle: cost = one read + one write of
-        // the data — must scale with bytes, never with file count
-        "q161_compaction" -> (() => {
-          val b = tmp.resolve(s"compact_x$k").toString
-          docs.repartition(64).write.mode("overwrite").parquet(s"$b/small")
-          sinks.Layout.compactParquet(spark, s"$b/small", s"$b/out",
-            targetBytes = 8L * 1024 * 1024).toLong
-        }),
-        // range-partition + in-file sort rewrite, then the selective
-        // filtered scan that the tight footer stats prune
-        "q162_clustered" -> (() => {
-          val b = tmp.resolve(s"cluster_x$k").toString
-          sinks.Layout.writeClustered(
-            docs.withColumn("n_chars", length($"text").cast("long")),
-            b, 4 * k, "n_chars")
-          spark.read.parquet(b).filter($"n_chars" >= 400).count()
-        }),
-        // 960 integer counters per group, map-side combined; everything
-        // after the sketch agg is keys x <=960 rows — scan-flat
-        "q167_loghist" -> (() =>
-          analytics.Sketches.logHistQuantiles(
-            docs.withColumn("n_chars", length($"text").cast("long")),
-            "lang", $"n_chars").count()),
-        // the prefix index holds each doc's rarest ~(1-tau) shingles;
-        // per-copy token prefixes keep copies content-disjoint, so true
-        // pairs and candidate volume both grow linearly with k
-        "q168_prefix_join" -> (() =>
-          analytics.Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-            minJaccard = 0.5).count()),
-        // two bounded percentile aggs broadcast back, flag map-side;
-        // percentile state grows with distinct values — scan-linear
-        "q170_mad" -> (() =>
-          analytics.Stats.madOutliers(events, "event_id", "value",
-            "event_type").count()),
-        // the feed compresses to (user, day)-distinct rows before any
-        // join; per-copy user shifts grow cohorts linearly
-        "q172_retention" -> (() =>
-          analytics.Events.cohortRetention(events, "user_id", "ts")
-            .count()),
-        // 10 join+agg rounds over the persisted symmetrized LSH
-        // candidate graph — edge volume grows linearly (disjoint-copy
-        // shingle spaces), so each round's shuffle does too
-        "q173_pagerank" -> (() =>
-          analytics.Graph.pageRank(
-            analytics.Dedup.minhashCandidates(
-              analytics.Dedup.minhashBandsFromDocs(docs, "doc_id", "text")),
-            "doc_a", "doc_b").count()),
-        // one per-user lead window then states x states — scan-flat
-        "q177_transitions" -> (() =>
-          analytics.Events.transitionMatrix(events, "user_id",
-            "event_type", "ts", "event_id").count()),
-        // (type, DAY) windows parallelize over the calendar; +64-day
-        // copies grow the day set linearly
-        "q180_twap" -> (() =>
-          analytics.Events.twap(events, "event_type", "ts", "value",
-            "event_id").count()),
-        // register build is one pass; the merge window is keys x hours
-        // x 64 integer rows — calendar-linear, volume-flat
-        "q183_sliding_hll" -> (() =>
-          analytics.Sketches.hllSlidingDistinct(events, "event_type",
-            "ts", col("user_id").cast("string")).count()),
-        // densified (type, hour) medians over 24 slots, broadcast back
-        "q185_seasonal" -> (() =>
-          analytics.Stats.seasonalAnomaly(events, "event_type", "ts")
-            .count()),
-        // two per-user lead windows + path-keyed count + group limit
-        "q187_journeys" -> (() =>
-          analytics.Events.topJourneys(events, "user_id", "event_type",
-            "ts", "event_id").count()),
-        // degree-ordered wedges: the hub contributes ZERO wedges, the
-        // ring leaves O(1) each — linear in n where ID-ordering is n^2
-        "q174_tri_hub" -> (() =>
-          analytics.Graph.triangleCounts(hubPairs, "a", "b").count()),
-        // user-shifted copies hold per-conversion candidates flat —
-        // the healthy-feed curve (volume-linear)
-        "q189_attribution" -> (() =>
-          analytics.Events.attribution(events, "user_id", "event_type",
-            "ts", "event_id", "value", convType = "purchase",
-            touchType = "click", windowDays = 7).count()),
-        // UNSHIFTED copies: per-user in-window touches grow k-fold, so
-        // conv x touch candidates grow ~k^2 — the bot-user tail
-        "q189_attr_hot" -> (() =>
-          analytics.Events.attribution(hotEvents, "user_id", "event_type",
-            "ts", "event_id", "value", convType = "purchase",
-            touchType = "click", windowDays = 7).count()),
-        // two user-keyed min-aggs + one percentile row — scan-flat
-        "q190_time_to_conv" -> (() =>
-          analytics.Events.timeToConvert(events, "user_id", "event_type",
-            "ts", startType = "view", endType = "purchase").count()),
-        // 8 fixed peel rounds x (degree agg + survivor semi-join) over
-        // the hub graph — nothing peels (all deg >= 2), so this prices
-        // the pure round overhead at edge-volume scale
-        "q197_kcore_hub" -> (() =>
-          analytics.Graph.kCore(hubPairs, "a", "b", k = 2, rounds = 8)
-            .count()),
-        // (key, bin) partial aggs + dictionary-sized join — scan-linear
-        "q195_psi" -> (() =>
-          analytics.Stats.psiDrift(events, "event_type", "value",
-            col("user_id") % 2 === 0, col("user_id") % 2 === 1).count()),
-        // (key, value)-distinct compression + one window sort over the
-        // compressed table — grows with distinct values, not volume
-        "q196_ks" -> (() =>
-          analytics.Stats.ksDrift(events, "event_type", "value",
-            col("user_id") % 2 === 0, col("user_id") % 2 === 1).count()),
-        // 10 MM rounds over the node-keyed match table: comparisons
-        // grow with the candidate graph, round count constant
-        "q199_bradley_terry" -> (() => {
-          val cand = analytics.Dedup.minhashCandidates(
-            analytics.Dedup.minhashBandsFromDocs(docs, "doc_id", "text"))
-          val cmp = cand
-            .join(docs.selectExpr("doc_id AS doc_a",
-              "length(text) AS la"), Seq("doc_a"))
-            .join(docs.selectExpr("doc_id AS doc_b",
-              "length(text) AS lb"), Seq("doc_b"))
-            .select(
-              when(col("la") >= col("lb"), col("doc_a"))
-                .otherwise(col("doc_b")).as("w"),
-              when(col("la") >= col("lb"), col("doc_b"))
-                .otherwise(col("doc_a")).as("l"))
-          analytics.Preference.bradleyTerry(cmp, "w", "l").count()
-        }),
-        // one scan + fingerprint window + source agg — scan-linear
-        "q200_scorecard" -> (() =>
-          analytics.TextAnalysis.sourceScorecard(docs, "doc_id", "text",
-            "lang").count()),
-        // disjoint per-copy basket/item spaces: the support>=2 graph,
-        // its wedges, and the rule table all grow linearly with copies;
-        // the per-basket expansion is the only quadratic and its bound
-        // (basket size) is copy-invariant
-        "q202_adamic" -> (() =>
-          analytics.Graph.adamicAdar(
-            analytics.Baskets.coOccurrencePairs(li, "l_orderkey",
-              "l_partkey", minSupport = 2L),
-            "item_a", "item_b", maxDegree = 1000, topK = 200).count()),
-        "q204_assoc_rules" -> (() =>
-          analytics.Baskets.associationRules(li, "l_orderkey",
-            "l_partkey").count()),
-        // 5 fixed rounds of node-keyed join + two hash aggs over the
-        // LSH candidate graph; per-copy disjoint token spaces keep the
-        // graph linear in copies, so each round must be too
-        "q203_lpa" -> (() =>
-          analytics.Graph.labelPropagation(
-            analytics.Dedup.minhashCandidates(
-              analytics.Dedup.minhashBandsFromDocs(docs, "doc_id", "text")),
-            "doc_a", "doc_b", rounds = 5).count()),
-        // per-key windows only — must track the q54 sessionize curve
-        "q205_scd2" -> (() =>
-          operators.Scd.scd2Intervals(events, "user_id", "ts",
-            "event_id", Seq("event_type")).count()),
-        // union + one key-partitioned window pass (two carries, one
-        // sort) — must be scan-flat like the asof family
-        "q206_interp" -> (() =>
-          operators.AsOfJoin.interpolateJoin(
-            events.filter($"event_type" === "purchase")
-              .select($"user_id", $"event_id", $"ts"),
-            events.filter($"event_type" === "view")
-              .select($"user_id", $"ts", $"value"),
-            "user_id", "ts", "value").count()),
-        // the cumulative window runs over DISTINCT (grp, value) rows —
-        // grows with value cardinality, not row volume
-        "q207_wpct" -> (() =>
-          analytics.Stats.weightedPercentiles(li, "l_returnflag",
-            "l_extendedprice", "l_quantity").count()),
-        // three regexp counts per row, zero exchanges — must be
-        // scan-flat
-        "q209_readability" -> (() =>
-          analytics.TextAnalysis.readability(docs, "doc_id", "text")
-            .count()),
-        // test table is slice-dictionary-sized however large n gets;
-        // only the two arm-stat scans grow
-        "q210_welch_bh" -> (() =>
-          analytics.Stats.welchTestsBH(
-            events.withColumn("hr", hour($"ts").cast("long")),
-            Seq("event_type", "hr"), "value",
-            $"user_id" % 2 === 0, $"user_id" % 2 =!= 0).count()),
-        // day count grows linearly with copies (disjoint +64d shifts),
-        // pair volume quadratically in DAYS — the calendar-bounded
-        // quadratic the maxPoints cap exists for
-        "q211_theil_sen" -> (() =>
-          analytics.Stats.theilSenSlope(
-            events.groupBy($"event_type",
-              datediff(to_date($"ts"), lit("1970-01-01"))
-                .cast("long").as("x"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "x", "n", maxPoints = 10000).count()),
-        // blocks here are synthetic (doc_id % 997): block count fixed,
-        // block SIZE grows linearly with copies, so candidate volume
-        // grows ~k^2 per block — exactly the over-coarse-key stress the
-        // maxBlock cap is for; the kernel itself is one codegen call
-        // per surviving pair
-        "q212_name_link" -> (() =>
-          analytics.Dedup.blockedNameLink(
-            docs.select($"doc_id", ($"doc_id" % 997L).as("blk"),
-              substring($"text", 0, 40).as("nm")),
-            "doc_id", "nm", Seq("blk"), minSim = 0.85,
-            maxBlock = 10000).count()),
-        // two slice-keyed aggs + one rank window over CALIBRATION rows
-        // only — must be scan-linear
-        "q213_conformal" -> (() =>
-          analytics.Stats.conformalGate(events, "event_type", "value",
-            $"user_id" % 2 =!= 0).count()),
-        // one rank window + one group agg over the doc table
-        "q214_gini" -> (() =>
-          analytics.Stats.giniConcentration(docs, "lang",
-            "doc_id").count()),
-        // one rank window + one group agg over lineitem
-        "q215_trimmed" -> (() =>
-          analytics.Stats.trimmedMean(li, "l_returnflag",
-            "l_extendedprice").count()),
-        // one group-keyed window sort (the sweep IS the sort) — must
-        // track a plain per-group sort's curve
-        "q216_pareto" -> (() =>
-          operators.Skyline.paretoFrontier2d(
-            li.select($"l_partkey", $"l_extendedprice", $"l_quantity",
-              $"l_returnflag"),
-            "l_returnflag", "l_extendedprice", "l_quantity",
-            "l_partkey").count()),
-        // one key-partitioned window sort serves every lag feature
-        "q217_lag_features" -> (() =>
-          analytics.Events.lagFeatures(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        // one customer agg + two ONE-ROW broadcasts (max date,
-        // threshold arrays); the percentile agg is the only sort
-        "q218_rfm" -> (() =>
-          analytics.Events.rfmSegments(
-            events.filter($"event_type" === "purchase")
-              .select($"user_id".as("ck"), $"ts".as("od"),
-                $"value".as("amt")),
-            "ck", "od", "amt").count()),
-        // prefix-sum window + argmax per key over the day series —
-        // the day count grows with the +64d copy shifts
-        "q219_changepoint" -> (() =>
-          analytics.Stats.changepoint(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        "q220_mase" -> (() =>
-          analytics.Stats.maseBacktest(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        // item-revenue agg + distinct-revenue tie-block windows — the
-        // cumulative ranking never sees raw row volume
-        "q221_abc" -> (() =>
-          analytics.Baskets.abcClassification(li, "l_returnflag",
-            "l_partkey", "l_extendedprice").count()),
-        // the per-key recurrence as ONE map-side array fold — the day
-        // array is calendar-bounded, so this must be scan-flat
-        "q222_holt" -> (() =>
-          analytics.Stats.holtSmoothing(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        // one window sort collecting 7-bounded arrays + map-side folds
-        "q225_hampel" -> (() =>
-          analytics.Stats.hampelFilter(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        // audit rollup: one child agg + keyed left join + 1-row rollups
-        "q223_reconcile" -> (() =>
-          analytics.DataAudit.reconcile(
-            spark.read.parquet(s"$sfDir/orders.parquet"), li,
-            "t", "o_orderkey", "l_orderkey", "o_totalprice",
-            $"l_extendedprice").count()),
-        // bigram explode + three keyed aggs + broadcast one-row total
-        "q224_pmi" -> (() =>
-          analytics.TextAnalysis.pmiCollocations(docs, "doc_id",
-            "text").count()),
-        // corpus x broadcast query sample, 4 scored dims — queries
-        // scale with copies (id shifts preserve % 10), so the probe
-        // volume grows ~k^2: the documented brute-force ceiling before
-        // IVF takes over
-        "q227_trunc_recall" -> (() =>
-          analytics.Similarity.truncationRecall(emb, "vec_id",
-            "embedding", $"vec_id" % 97 === 0).count()),
-        // user-keyed bracket join; hot-copy events multiply per-user
-        // purchase density ~k-fold, the candidate bound under stress
-        "q228_abandonment" -> (() =>
-          analytics.Events.abandonment(hotEvents, "user_id", "ts",
-            "event_id", "view", "purchase").count()),
-        // one keyed agg + broadcast one-row feed max
-        "q229_freshness" -> (() =>
-          analytics.DataAudit.freshness(events, "event_type", "ts")
-            .count()),
-        // one digit agg + one-row total; 9-row checkpointed result
-        "q230_benford" -> (() =>
-          analytics.DataAudit.benford(
-            events.select($"value".as("amt")), "amt").count()),
-        // one keyed power-sum aggregate
-        "q231_pearson" -> (() =>
-          analytics.Stats.pearsonByGroup(li, "l_returnflag",
-            "l_quantity", "l_extendedprice").count()),
-        // one (label, dim) keyed agg + dictionary-sized fold — vectors
-        // never pairwise-join, so this must be scan-flat (the scaled
-        // table carries no label column; a synthetic id-derived one
-        // exercises the identical plan)
-        "q232_centroid_drift" -> (() =>
-          analytics.Similarity.centroidDrift(
-            emb.withColumn("label", ($"vec_id" % 8).cast("int")),
-            "label", "embedding", $"vec_id" % 2 === 0).count()),
-        // one keyed agg to cells; margins and the r x c spine are
-        // dictionary-sized broadcasts (event_type x a 10-bucket user
-        // slice — the scaled docs table drops `source`)
-        "q233_chi_square" -> (() =>
-          analytics.Stats.chiSquareCells(
-            events.withColumn("ub", ($"user_id" % 10).cast("string")),
-            "event_type", "ub").count()),
-        // one keyed agg + map-side scalar noise
-        "q234_dp_noisy" -> (() =>
-          analytics.DataAudit.dpNoisyCounts(
-            events.select($"event_type", to_date($"ts").as("day")),
-            1.0, "event_type", "day").count()),
-        // postings filtered to the phrase's terms before the join —
-        // only the phrase's posting lists move (scaled copies prefix
-        // tokens c<i>_, so the copy-0 phrase holds its postings FLAT
-        // while the corpus grows — exactly the curve the design claims)
-        "q235_phrase" -> (() =>
-          analytics.Retrieval.phraseOccurrences(docs, "doc_id", "text",
-            "c0_table c0_key").count()),
-        // fan-out x7 of the pre-aggregated day series + one power-sum agg
-        "q236_acf" -> (() =>
-          analytics.Stats.acfByKey(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n", maxLag = 7).count()),
-        // calendar-bounded pairwise self-join of the day series
-        "q237_mann_kendall" -> (() =>
-          analytics.Stats.mannKendall(
-            events.groupBy($"event_type", to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "event_type", "day", "n").count()),
-        // one user-keyed agg + ONE 1-row power-sum aggregate
-        "q238_cuped" -> (() =>
-          analytics.Events.cupedLift(events, "user_id", "ts",
-            "event_type", "purchase", "value", "2024-01-16",
-            $"user_id" % 2).count()),
-        // per-user lead windows + dictionary model agg + broadcast join
-        "q239_markov" -> (() =>
-          analytics.Events.markovAccuracy(events, "user_id", "ts",
-            "event_id", "event_type", "2024-01-16").count()),
-        // per-user calendar spine + ONE keyed window over spine rows
-        "q240_locf" -> (() =>
-          analytics.Stats.locfGapfill(
-            events.groupBy($"user_id".as("key"), to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "key", "day", "n").count()),
-        // facts agg to the (growing) item dictionary + one-row max date;
-        // dim synthesized from the scaled item space so every copy joins
-        "q241_decayed_topk" -> (() =>
-          analytics.Baskets.decayedTopK(li, "l_partkey", "l_shipdate",
-            li.select($"l_partkey".as("k")).distinct()
-              .withColumn("grp", ($"k" % 25).cast("string")),
-            "k", "grp", lambda = 0.05, k = 3).count()),
-        // hive-partitioned write + pruned-listing read of one slice
-        "q242_partition_prune" -> (() => {
-          val out = tmp.resolve(s"hivepart_x$k").toString
-          sinks.Layout.writePartitioned(events, out, "event_type")
-          spark.read.parquet(out)
-            .filter($"event_type" === "purchase")
-            .groupBy(to_date($"ts").as("day"))
-            .agg(count(lit(1)).cast("long").as("n")).count()
-        }),
-        // one user agg + ONE 1-row power-sum aggregate
-        "q243_mde" -> (() =>
-          analytics.Events.mdeReadout(events, "user_id", "event_type",
-            "purchase", "value", $"user_id" % 2).count()),
-        // one distinct-user pass + a 1-row aggregate
-        "q244_srm" -> (() =>
-          analytics.Events.srmCheck(events, "user_id",
-            analytics.Sketches.h60($"user_id".cast("string")) % 2)
-            .count()),
-        // detection map-side over the growing corpus, dictionary cells
-        "q245_lang_confusion" -> (() =>
-          analytics.TextAnalysis.langConfusion(docs, "lang", "text")
-            .count()),
-        // distinct keys grow 10x; 9-way fan + min_by placements
-        "q246_reshard" -> (() =>
-          analytics.Sampling.reshardMovement(docs, "doc_id", 8, 9)
-            .count()),
-        // one keyed agg to dictionary cells + one-row class totals
-        "q247_woe" -> (() =>
-          analytics.Selection.woeBuckets(emb,
-            element_at($"embedding", 1).cast("double"),
-            $"vec_id" % 2).count()),
-        // word agg absorbs the 10x corpus; top-k never sorts the vocab
-        "q248_vocab_coverage" -> (() =>
-          analytics.TextAnalysis.vocabCoverage(docs, "text",
-            ks = Seq(5, 10, 20)).count()),
-        // distinct-value windows only; raw volume stops at the value agg
-        "q249_decile_lift" -> (() =>
-          analytics.Selection.decileLift(emb,
-            element_at($"embedding", 1).cast("double"),
-            $"vec_id" % 2).count()),
-        // map-side 32x explode + one (rep, arm) agg with partials
-        "q250_bootstrap_diff" -> (() =>
-          analytics.Stats.bootstrapDiffCI(events, $"user_id" % 2,
-            "value", "event_id", b = 32).count()),
-        // dow cells from the pre-aggregated day series
-        "q251_dow_seasonality" -> (() =>
-          analytics.Stats.dowSeasonalIndex(
-            events.groupBy($"event_type".as("key"),
-              to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "key", "day", "n").count()),
-        // one per-user window sort + session-keyed max_by/distinct aggs
-        "q252_exit_rates" -> (() =>
-          analytics.Events.exitRates(events, "user_id", "ts",
-            "event_id", "event_type").count()),
-        // one user agg to membership flags + 1-row rollup
-        "q253_capture_recapture" -> (() =>
-          analytics.Sketches.captureRecapture(events, "user_id",
-            $"event_id" % 2 === 0, $"event_id" % 2 === 1).count()),
-        // word agg absorbs the 10x corpus; 1-row rollup
-        "q254_vocab_richness" -> (() =>
-          analytics.TextAnalysis.vocabRichness(docs, "text").count()),
-        // user agg + dictionary stratum agg + 1-row rollup
-        "q255_post_stratified" -> (() =>
-          analytics.Events.postStratifiedDiff(events, "user_id",
-            "event_type", "purchase", "value", $"user_id" % 2,
-            $"user_id" % 5).count()),
-        // one keyed window lag over the per-user day series
-        "q256_gap_episodes" -> (() =>
-          analytics.DataAudit.gapEpisodes(
-            events.select($"user_id".as("key"),
-              to_date($"ts").as("day")).distinct(),
-            "key", "day").count()),
-        // candidates + exact verify over the capped LSH set only
-        "q257_minhash_calibration" -> (() =>
-          analytics.Dedup.minhashCalibration(docs, "doc_id", "text")
-            .count()),
-        // one keyed power-sum aggregate over the day series
-        "q258_fano" -> (() =>
-          analytics.Stats.fanoFactor(
-            events.groupBy($"event_type".as("key"),
-              to_date($"ts").as("day"))
-              .agg(count(lit(1)).cast("long").as("n")),
-            "key", "n").count()),
-        // rank dictionaries: quantity grid is FIXED (1..50) while the
-        // price grid grows with the part space — one scan into the
-        // (grp, x, y) grid, all moments fold out of the dictionaries
-        "q259_spearman" -> (() =>
-          analytics.Stats.spearmanByGroup(li, "l_returnflag",
-            "l_quantity", "l_extendedprice").count()),
-        // two dictionary aggs + a 1-row cross: must be scan-flat
-        "q260_js_drift" -> (() =>
-          analytics.Stats.jsDrift(events, "event_type",
-            $"user_id" % 2 === 0, $"user_id" % 2 === 1).count()),
-        // category dictionary grows linearly with copies (disjoint part
-        // spaces) — the high-cardinality-encoder stress by construction
-        "q261_target_encode" -> (() =>
-          analytics.Selection.targetEncode(li, $"l_partkey",
-            $"l_returnflag" === "R").count()),
-        // distinct-value compression: the cumulative window runs over
-        // the price grid, which grows ~linearly with copies
-        "q262_equal_freq_bins" -> (() =>
-          analytics.Stats.equalFreqBins(li, "l_extendedprice",
-            k = 10).count()),
-        // (quasi, sensitive) cells absorb raw volume map-side; the
-        // completion cross is classes x 5-value dictionary
-        "q263_t_closeness" -> (() =>
-          analytics.DataAudit.tCloseness(
-            events.withColumn("seg", ($"user_id" % 5).cast("string")),
-            0.2, "seg", "event_type").count()),
-        // the hub graph: one degree-n node — degrees join edge-keyed,
-        // ONE moment agg; no wedge term anywhere, so the hub is free
-        "q264_assortativity" -> (() =>
-          analytics.Graph.degreeAssortativity(hubPairs, "a", "b")
-            .count()),
-        // 16 integer sums map-side + one key-keyed exact agg
-        "q265_ams_f2" -> (() =>
-          analytics.Sketches.amsF2(li, "l_orderkey").count()),
-        // same bounded distinct-lifetime table as q182
-        "q266_nelson_aalen" -> (() =>
-          analytics.Events.nelsonAalen(events, "user_id", "ts").count()),
-        // corpus x 1% query sample: probe volume grows ~k^2 (the q24
-        // brute baseline shape; IVF substitutes upstream at serving
-        // scale) — but per-query state is the BOUNDED top-k buffer
-        "q267_hubness" -> (() =>
-          analytics.Similarity.hubnessAudit(emb, "vec_id", "embedding",
-            $"vec_id" % 100 === 0, k = 5).count()),
-        // one key agg absorbs raw volume; the multiplicity-frequency
-        // window and the top-10 TakeOrdered are both bounded
-        "q268_join_skew" -> (() =>
-          analytics.DataAudit.joinSkewAudit(li, "l_partkey").count()),
-        // the q233 contingency machinery + a 1-row fold (the scaled
-        // docs copies carry no source column; the scaled feed's
-        // type x user-segment grid exercises the same shape)
-        "q269_cramers_v" -> (() =>
-          analytics.Stats.cramersV(
-            events.withColumn("seg", ($"user_id" % 5).cast("string")),
-            "event_type", "seg").count()),
-        // cells/margins dictionary-sized after the one raw-volume agg
-        "q270_mutual_information" -> (() =>
-          analytics.Stats.mutualInformation(
-            events.withColumn("seg", ($"user_id" % 5).cast("string")),
-            "event_type", "seg").count()),
-        // k grows with the corpus (the q81/q95 sizing rule): inverted
-        // assignment work is one broadcast-model map pass either way
-        "q271_silhouette" -> (() =>
-          analytics.Cluster.simplifiedSilhouette(emb, "vec_id",
-            "embedding", k = 8 * k, iters = 2).count()),
-        // one keyed bucket agg absorbs rows; the pair grid is the
-        // FIXED discount-grid squared however large the feed
-        "q272_isotonic" -> (() =>
-          analytics.Selection.isotonicCalibration(li, $"l_discount",
-            $"l_returnflag" === "R", scale = 1000L).count()),
-        // both CDF dictionaries grow with the price grid (~linear in
-        // the part space); the one union window runs over them only
-        "q273_quantile_normalize" -> (() =>
-          analytics.Stats.quantileNormalize(li, "l_returnflag",
-            "l_extendedprice").count()),
-        // word agg absorbs the corpus; TakeOrdered head is <= k+1
-        "q274_hill" -> (() =>
-          analytics.TextAnalysis.hillEstimator(docs, "text", k = 100)
-            .count()),
-        // global rank cumulative over the distinct-value grid — the
-        // second gridCumSum consumer (q262 is the other): force
-        // spark.graft.quantile.singleTaskGate low (the
-        // SPARK_GRAFT_QUANTILE_GATE passthrough in main) to time the
-        // DISTRIBUTED two-level prefix-sum branch past the gate
-        "q280_kruskal_wallis" -> (() =>
-          analytics.Stats.kruskalWallis(events, "event_type", "value")
-            .count()),
-        // gridCumSum BRANCH receipts: the catalog gates' price/value
-        // grids repeat across scaled copies (scaleLineitem shifts keys,
-        // not prices), so their cumulative work is ~constant in k.
-        // These two run the same operators over the l_orderkey grid,
-        // which grows linearly with copies (~150k x k distinct) and
-        // crosses the 4M single-task gate naturally at x30 — measure
-        // with SPARK_GRAFT_QUANTILE_GATE=0 (all-distributed),
-        // =10000000000 (all-single-task), and default (gate engages at
-        // the crossover) for the branch-slope comparison
-        "q262_bins_biggrid" -> (() =>
-          analytics.Stats.equalFreqBins(li, "l_orderkey", k = 10,
-            scale = 1L).count()),
-        "q280_kw_biggrid" -> (() =>
-          analytics.Stats.kruskalWallis(li, "l_returnflag",
-            "l_orderkey", valueScale = 1L).count()))
-      // optional comma-separated prefix filter, e.g. SPARK_GRAFT_SCALE_OPS=q93,q96
-      val opFilter = sys.env.get("SPARK_GRAFT_SCALE_OPS")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      val selected = opFilter match {
-        case Some(prefixes) => ops.filter { case (n, _) => prefixes.exists(n.startsWith) }
-        case None           => ops
-      }
-      selected.foreach { case (name, f) =>
-        val (sec, rows) = time(f())
-        println(f"[scalebench] x$k%-5d $name%-17s $rows%8d  $sec%6.2f")
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.sharedState.cacheManager.clearCache()
-      }
+      Memo.invalidateAll()
+      Harness.deleteTree(tmp.resolve(s"x$k"))
     }
+    Harness.deleteTree(tmp)
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -26,33 +25,15 @@ object Verify {
         // PASS for a now-broken query
         // the scrub itself must not abort the loop: a still-flushing
         // failed task can recreate files between walk and delete
-        try {
-          val stale = java.nio.file.Paths.get(s"$outDir/$name")
-          if (java.nio.file.Files.exists(stale)) {
-            val walk = java.nio.file.Files.walk(stale)
-            val all =
-              try walk.iterator().asScala.toSeq finally walk.close()
-            all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
-        } catch { case e2: Throwable =>
+        try Harness.deleteTree(Paths.get(s"$outDir/$name"))
+        catch { case e2: Throwable =>
           System.err.println(s"[verify] $name stale-scrub failed: ${e2.getMessage}")
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -780,9 +780,9 @@ object Dedup {
   }
 
   /** Reflow `text` into newline-delimited lines of `wordsPerLine`
-    * whitespace tokens — the deterministic line constructor the q99 gate
-    * and ScaleBench share (a single-line corpus needs line structure
-    * before the line rule can bite; both engines reflow identically).
+    * whitespace tokens — the q99 gate's deterministic line constructor
+    * (a single-line corpus needs line structure before the line rule can
+    * bite; both engines reflow identically).
     * Zero-token docs reflow to ONE empty line (`greatest(1, …)` — the
     * oracle mirrors it), never a descending `sequence(0, -1)` phantom
     * pair. */
@@ -949,14 +949,16 @@ object Dedup {
     estimateMemo.getOrCompute(
       Seq(docs0.select(col(idCol), col(textCol))),
       s"n=$n,h=$numHashes,bs=$bandSize,cap=$maxBucket") {
-      val docs = Par.ensure(docs0)
-      val spark = docs.sparkSession
+      val spark = docs0.sparkSession
       import spark.implicits._
       // the sig table feeds banding + both score-join sides; when the
       // sig memo snapshots, it is ALREADY a materialized parquet read —
       // only the bypass posture (non-local master, no shared dir) still
-      // needs the explicit checkpoint to avoid three corpus passes
-      val sigsDf0 = minhashSigs(docs, idCol, textCol, n, numHashes)
+      // needs the explicit checkpoint to avoid three corpus passes.
+      // The RAW frame goes to the memoized callee (its build closure
+      // applies Par.ensure): a repartitioned input would key the same
+      // corpus apart from q19's call and rebuild the shared snapshots
+      val sigsDf0 = minhashSigs(docs0, idCol, textCol, n, numHashes)
       val sigsDf =
         if (Memo.snapshotsActive(spark)) sigsDf0 else sigsDf0.materialized()
       val cand = minhashCandidates(
@@ -990,10 +992,11 @@ object Dedup {
                          n: Int = 3, numHashes: Int = 8,
                          bandSize: Int = 2,
                          maxBucket: Int = 1000): DataFrame = {
-    val docs = Par.ensure(docs0)
-    val spark = docs.sparkSession
+    // raw frame into both memoized callees (Par.ensure runs inside their
+    // builds) so the corpus keys like every other dedup-family consumer
+    val spark = docs0.sparkSession
     import spark.implicits._
-    val est = minhashJaccardEstimate(docs, idCol, textCol,
+    val est = minhashJaccardEstimate(docs0, idCol, textCol,
       minEstimate = 0.0, n, numHashes, bandSize, maxBucket)
     // both pair sides join this per-doc shingle-array table — it now
     // reads MAP-SIDE off the shared [[docShingleArrays]] snapshot
@@ -1003,7 +1006,7 @@ object Dedup {
     // estimate/jaccard count joins already key per doc ROW); only the
     // bypass posture still checkpoints, since there the arrays carry
     // raw lineage read by both join sides.
-    val sets0 = docShingleArrays(docs, idCol, textCol, n)
+    val sets0 = docShingleArrays(docs0, idCol, textCol, n)
       .select($"doc", sort_array($"shs").as("toks"),
         size($"shs").cast("long").as("sz"))
     val sets =

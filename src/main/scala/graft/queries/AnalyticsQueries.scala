@@ -1538,7 +1538,6 @@ object AnalyticsQueries {
       (s, dir) => {
         // reflow into 5-word lines: the corpus text is single-line, so
         // the gate constructs the newline structure the operator keys on
-        // (shared helper — ScaleBench's q99 op measures the same plan)
         val reflowed = Tables(s, dir, "documents").select(col("doc_id"),
           Dedup.reflowLines(col("text"), 5).as("text"))
         Dedup.removeBoilerplateLines(reflowed, "doc_id", "text",

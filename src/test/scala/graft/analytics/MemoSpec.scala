@@ -268,6 +268,27 @@ class MemoSpec extends SparkTestBase {
     assert(Dedup.shingleMemo.hits.get() > 0 && Dedup.sigsMemo.hits.get() > 0)
   }
 
+  test("a 1-partition corpus (Par.ensure repartitions it) keys ONE " +
+       "doc_shingles and ONE minhash_sigs entry across the q19 -> q90 " +
+       "-> q257 sequence") {
+    val d = docs("onepart").repartition(1)
+    Memo.invalidateAll()
+    val sh0 = Dedup.shingleMemo.builds.get()
+    val sg0 = Dedup.sigsMemo.builds.get()
+    val shHits0 = Dedup.shingleMemo.hits.get()
+    val sgHits0 = Dedup.sigsMemo.hits.get()
+    Dedup.minhashCandidatePairs(d, "doc_id", "text").count()
+    Dedup.minhashJaccardEstimate(d, "doc_id", "text", minEstimate = 0.5)
+      .count()
+    Dedup.minhashCalibration(d, "doc_id", "text").count()
+    assert(Dedup.shingleMemo.builds.get() - sh0 === 1,
+      "the repartitioned corpus must not key a second shingle build")
+    assert(Dedup.sigsMemo.builds.get() - sg0 === 1,
+      "the repartitioned corpus must not key a second signature build")
+    assert(Dedup.shingleMemo.hits.get() > shHits0 &&
+      Dedup.sigsMemo.hits.get() > sgHits0)
+  }
+
   test("eviction past maxEntries CONDEMNS, never deletes under a " +
        "reader: an earlier handed-out lazy frame still reads correctly " +
        "inside the grace window") {
