@@ -162,8 +162,10 @@ object Bench {
     // artifact's `memos` map attributes snapshot-build cost to the memo
     // itself — pass-1 `queries` numbers still INCLUDE each build in
     // whichever consumer gate ran first in catalog order (that is the
-    // honest cold cost); `memos` makes the attribution explicit.
+    // honest cold cost); `memos` makes the attribution explicit. The
+    // `gates` map counts size-gate branches over the same section.
     graft.analytics.Memo.resetStats()
+    graft.analytics.Par.resetGateStats()
     val retried = scala.collection.mutable.ArrayBuffer[String]()
     val ordered = picked.toSeq.sortBy(_._1)
     def timeQuery(fn: (SparkSession, String) =>
@@ -331,7 +333,7 @@ object Bench {
       else (stealSamples.sum / stealSamples.length, stealSamples.max,
         stealSamples.count(_ >= 2.0).toLong)
     }
-    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"failed":$failed,"sf":${Harness.json(sfDir)}}"""
+    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"gates":${Harness.gatesJson()},"failed":$failed,"sf":${Harness.json(sfDir)}}"""
     println(line)
     // ALSO write the line to a file: the driver's harness captures only
     // the tail of sbt output and has truncated the per-query maps two

@@ -46,6 +46,16 @@ private[graft] object Harness {
       finally walk.close()
     }
 
+  /** Size-gate decisions since the last `Par.resetGateStats`, as a JSON
+    * object over the gates that decided, e.g.
+    * `{"cumsum":{"distributed":1,"local":2}}`. */
+  def gatesJson(): String = graft.analytics.Par.gateStats().toSeq
+    .filter(_._2.values.sum > 0).sortBy(_._1)
+    .map { case (g, m) =>
+      json(g) + m.toSeq.sortBy(_._1)
+        .map { case (b, n) => json(b) + ":" + n }.mkString(":{", ",", "}")
+    }.mkString("{", ",", "}")
+
   /** JSON string literal: backslash, quote, and ALL control chars
     * (< 0x20) escaped — a tab or CR in a name or SQL text would
     * otherwise make a consumer's json.load fail. */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.analytics.{Cluster, Events, Graph, Memo, Similarity, Stats}
+import graft.analytics.{Cluster, Events, Graph, Memo, Par, Similarity, Stats}
 import graft.queries.{Catalog, Tables}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * times `Catalog.byName(q).run(spark, dir).count()` (Bench's timed op)
   * once cold (after `Memo.invalidateAll()` and a block drop) and once
   * warm, printing one JSON line per (k, cpus, query):
-  * `{"k","cpus","query","rows","cold_s","warm_s","error","sf"}`.
+  * `{"k","cpus","query","rows","cold_s","warm_s","error","gates","sf"}`,
+  * where `gates` counts the size-gate decisions of both runs
+  * (`Par.gateStats`, gates that decided only).
   *
   * Copy 0 is the base rows unchanged, so x1 is exactly the verified
   * input. Copy i > 0 shifts every key, primary and foreign alike
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Usage: SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 SPARK_GRAFT_SCALE_KS=1,3,10
   *   runMain graft.ScaleBench [query ...]   (no names: the whole catalog
   *   plus every stress entry; SPARK_GRAFT_CONF passes session confs, e.g.
-  *   spark.graft.quantile.singleTaskGate=0 to time a distributed branch)
+  *   spark.graft.gate.cumsum=0 to time a distributed branch)
   *
   * Subcommand `split <feed.xml>`: throughput comparison of the S2
   * distributed element splitter vs the native multiLine scan on a
@@ -179,9 +181,9 @@ object ScaleBench {
       windowMinutes = 30)),
     // gridCumSum branch receipts: catalog price/value grids repeat across
     // copies, but the l_orderkey grid grows ~150k x k distinct at sf0.1
-    // and crosses the 4M single-task gate at x30 — pair with
-    // SPARK_GRAFT_CONF=spark.graft.quantile.singleTaskGate=0 for the
-    // all-distributed slope
+    // and crosses the 4M cumsum gate at x30 (the `gates` field shows
+    // it) — pair with SPARK_GRAFT_CONF=spark.graft.gate.cumsum=0 for
+    // the all-distributed slope
     "q262_equal_freq_bins@biggrid" -> ((s, d, _) => Stats.equalFreqBins(
       Tables(s, d, "lineitem"), "l_orderkey", k = 10, scale = 1L)),
     "q280_kruskal_wallis@biggrid" -> ((s, d, _) => Stats.kruskalWallis(
@@ -229,13 +231,14 @@ object ScaleBench {
         }
         Memo.invalidateAll()
         Harness.dropAllBlocks(spark)
+        Par.resetGateStats()
         val cold = timed()
         val res = cold.flatMap(c => timed().map(w => (c._1, c._2, w._2)))
         val fields = res.fold(
           e => s""""rows":-1,"cold_s":-1,"warm_s":-1,"error":${Harness.json(e)}""",
           { case (rows, c, w) =>
             s""""rows":$rows,"cold_s":${num(c)},"warm_s":${num(w)},"error":null""" })
-        println(s"""{"k":$k,"cpus":$cpus,"query":${Harness.json(name)},$fields,"sf":${Harness.json(sfDir)}}""")
+        println(s"""{"k":$k,"cpus":$cpus,"query":${Harness.json(name)},$fields,"gates":${Harness.gatesJson()},"sf":${Harness.json(sfDir)}}""")
       }
       Memo.invalidateAll()
       Harness.deleteTree(tmp.resolve(s"x$k"))

@@ -4,6 +4,7 @@ import Par.Mat
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
 import org.apache.spark.storage.StorageLevel
 
 /** Link-analysis operators over pair tables (near-dup candidate pairs,
@@ -42,23 +43,6 @@ object Graph {
     * the first-level memo already snapshots. */
   private[graft] val edgeMemo = new FrameMemo("graph_edges")
   private[graft] val degMemo = new FrameMemo("graph_deg")
-
-  /** Size gate for the driver-recurrence branches of the ITERATIVE
-    * graph operators (pageRank, kCore, labelPropagation) —
-    * `spark.graft.graph.driverGate`, default 500k canonical edge rows,
-    * the bradleyTerry/gridCumSum gate pattern. At or below the gate
-    * the operator collects the (two-id-column) edge snapshot once and
-    * runs its fixed-round recurrence driver-side: at dictionary size
-    * the distributed rounds cost pure per-round stage scheduling (the
-    * q199 A/B measured the per-round join work at milliseconds), and
-    * the round count × the scheduling floor dominated each gate's
-    * wall time. Above the gate the node-keyed distributed rounds are
-    * unchanged — the 100-TB path. Branch equality is spec-pinned per
-    * operator with the gate forced to 0 (GraphSpec); arithmetic is
-    * identical up to float-sum order, which each operator's final
-    * rounding absorbs (kCore and LPA are integer/label-exact). */
-  private def driverGateOf(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.graph.driverGate", "500000").toLong
 
   /** The canonical UNDIRECTED edge table of a pair list, memoized:
     * (a, b) = (least, greatest) per pair, distinct — self-loops KEPT
@@ -129,11 +113,9 @@ object Graph {
     * Ranks and degrees are node-keyed so every round reuses the same
     * hash partitioning over the persisted edge table; the node count N
     * is a driver scalar — the one collect, O(1). A dictionary-sized
-    * edge set (<= [[driverGateOf]]) instead runs the identical
-    * recurrence driver-side over one collect of the canonical
-    * snapshot — at that size the distributed rounds cost pure stage
-    * scheduling (branch equality spec-pinned; see the gate scaladoc).
-    * For deep iteration
+    * edge set (the `graph` gate, [[Par.gate]]) instead runs the
+    * identical recurrence driver-side over one collect of the
+    * canonical snapshot. For deep iteration
     * (`iters > 10`) ranks are `Par.materialize`d every 5 rounds: the
     * lineage would otherwise nest one join per round and plan
     * compilation / recovery cost grows superlinearly past ~10 joins,
@@ -166,18 +148,10 @@ object Graph {
     // that distinct as one row, which is one (x, x) canonical row here.
     val canon = canonEdges(pairs, aCol, bCol)
     val teleport = 1.0 - damping
-    // ---- size-gated driver branch (the bradleyTerry precedent) ----
-    // A near-dup candidate graph at catalog scale is dictionary-sized
-    // (canonical edges <= pairs), and ten distributed rounds at that
-    // size cost pure per-round stage scheduling — the same profile the
-    // q199 A/B measured. At or below the gate the recurrence runs
-    // driver-side over ONE collect of the canonical edge snapshot;
-    // above it the node-keyed rounds below are unchanged. Both
-    // branches fold the same arithmetic — float-sum order differs by
-    // ulps the final round-6 absorbs (GraphSpec pins branch equality
-    // with the gate forced to 0).
-    val canonCnt = canon.count()
-    if (canonCnt > 0 && canonCnt <= driverGateOf(spark)) {
+    // ---- local branch (Par.gate "graph") ----
+    // float-sum order differs from the distributed rounds by ulps the
+    // final round-6 absorbs
+    if (Par.gate(spark, "graph", canon.count())) {
       val rows = canon.collect()
       val idx = scala.collection.mutable.HashMap[Any, Int]()
       val nodeVals = scala.collection.mutable.ArrayBuffer[Any]()
@@ -214,17 +188,11 @@ object Graph {
             math.round(math.abs(r(k) - prevArr(k)) * 1e9) / 1e9)
         else org.apache.spark.sql.Row(nodeVals(k), math.round(r(k) * 1e6) / 1e6)
       }
-      val fields = Seq(
-        org.apache.spark.sql.types.StructField("node",
-          canon.schema("a").dataType),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType)) ++
-        (if (emitDelta) Seq(org.apache.spark.sql.types.StructField("delta",
-          org.apache.spark.sql.types.DoubleType)) else Nil)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows,
-          spark.sparkContext.defaultParallelism),
-        org.apache.spark.sql.types.StructType(fields))
+      return Par.localFrame(spark,
+        Seq(StructField("node", canon.schema("a").dataType),
+          StructField("rank", DoubleType)) ++
+          (if (emitDelta) Seq(StructField("delta", DoubleType)) else Nil),
+        outRows)
     }
     val edges = canon.filter($"a" =!= $"b")
       .select($"a".as("src"), $"b".as("dst"))
@@ -412,12 +380,12 @@ object Graph {
     * survivor semi-join of the edge table — the pageRank round shape;
     * the per-round degree table and edge survivors are
     * `Par.materialize`d (node-keyed / shrinking tables), so lineage
-    * stays one round deep. Dictionary-sized edge sets
-    * (<= [[driverGateOf]]) peel driver-side over one collect —
-    * integer-exact, branch equality spec-pinned including the
-    * non-converged partial peel. Output: (node, deg, in_core 0/1) for every
-    * ORIGINAL node; deg = the node's degree within the surviving
-    * subgraph, null for peeled nodes. */
+    * stays one round deep. Dictionary-sized edge sets (the `graph`
+    * gate, [[Par.gate]]) peel driver-side over one collect —
+    * integer-exact, including the non-converged partial peel.
+    * Output: (node, deg, in_core 0/1) for every ORIGINAL node; deg =
+    * the node's degree within the surviving subgraph, null for peeled
+    * nodes. */
   def kCore(pairs: DataFrame, aCol: String, bCol: String,
             k: Int = 2, rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
@@ -431,14 +399,9 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select($"a".as("node")).union(e.select($"b".as("node")))
         .groupBy($"node").agg(count(lit(1)).cast("long").as("deg"))
-    // ---- size-gated driver branch (see [[driverGateOf]]) ----
-    // The peel is integer-exact, so the branches agree bit-for-bit
-    // (GraphSpec pins it with the gate forced to 0). Each distributed
-    // round costs a degree agg + two semi-joins of scheduling floor;
-    // below the gate the whole peel runs over one collect instead.
+    // ---- local branch (Par.gate "graph"): integer-exact peel ----
     val simple0 = simpleEdges(pairs, aCol, bCol).select($"a", $"b")
-    val simpleCnt = simple0.count()
-    if (simpleCnt > 0 && simpleCnt <= driverGateOf(spark)) {
+    if (Par.gate(spark, "graph", simple0.count())) {
       val degRows = deg0.collect()
       val nn = degRows.length
       val idx = scala.collection.mutable.HashMap[Any, Int]()
@@ -485,16 +448,11 @@ object Graph {
           if (in) java.lang.Long.valueOf(surv(v)) else null,
           if (in) 1 else 0)
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          deg0.schema("node").dataType),
-        org.apache.spark.sql.types.StructField("deg",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("in_core",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows,
-          spark.sparkContext.defaultParallelism), schema)
+      return Par.localFrame(spark,
+        Seq(StructField("node", deg0.schema("node").dataType),
+          StructField("deg", LongType),
+          StructField("in_core", IntegerType, nullable = false)),
+        outRows)
     }
     var edges = simple0
     var finalDeg: DataFrame = null
@@ -605,8 +563,8 @@ object Graph {
     * symmetrized half-edge table, node-keyed) + two hash aggregates;
     * labels are `Par.materialize`d each round so lineage stays one
     * round deep. Dictionary-sized edge sets with numerically-ordered
-    * node ids (<= [[driverGateOf]]) propagate driver-side over one
-    * collect — label-exact, branch equality spec-pinned. Output:
+    * node ids (the `graph` gate, [[Par.gate]]) propagate driver-side
+    * over one collect — label-exact. Output:
     * (node, label, community_size), community size
     * counted over the final labeling. */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
@@ -619,12 +577,11 @@ object Graph {
     // persisted copy, and the initial label universe is the degree
     // snapshot's node column — no distinct shuffle
     val edges = simpleEdges(pairs, aCol, bCol)
-    // ---- size-gated driver branch (see [[driverGateOf]]) ----
-    // The (count desc, label asc) argmax is exact, so the branches
-    // agree bit-for-bit on any graph whose node ids carry a numeric
-    // ordering — the only ids the distributed tie-break (`-label`)
-    // accepts anyway. GraphSpec pins equality with the gate forced
-    // to 0. Non-numeric ids fall through to the distributed rounds.
+    // ---- local branch (Par.gate "graph") ----
+    // The (count desc, label asc) argmax is exact on any graph whose
+    // node ids carry a numeric ordering — the only ids the distributed
+    // tie-break (`-label`) accepts anyway. Non-numeric ids take the
+    // distributed rounds without consulting the gate.
     val nodeDt = canonDegrees(pairs, aCol, bCol).schema("node").dataType
     val numericKey: Option[Any => Double] = nodeDt match {
       case org.apache.spark.sql.types.LongType |
@@ -636,9 +593,7 @@ object Graph {
         Some((x: Any) => x.asInstanceOf[Number].doubleValue)
       case _ => None
     }
-    val simpleCnt = edges.count()
-    if (simpleCnt > 0 && simpleCnt <= driverGateOf(spark) &&
-        numericKey.isDefined) {
+    if (numericKey.isDefined && Par.gate(spark, "graph", edges.count())) {
       val key = numericKey.get
       val degRows = canonDegrees(pairs, aCol, bCol).select($"node").collect()
       val nn = degRows.length
@@ -680,14 +635,10 @@ object Graph {
         org.apache.spark.sql.Row(degRows(v).get(0),
           degRows(lab(v)).get(0), sizes(lab(v)))
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeDt),
-        org.apache.spark.sql.types.StructField("label", nodeDt),
-        org.apache.spark.sql.types.StructField("community_size",
-          org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(outRows,
-          spark.sparkContext.defaultParallelism), schema)
+      return Par.localFrame(spark,
+        Seq(StructField("node", nodeDt), StructField("label", nodeDt),
+          StructField("community_size", LongType)),
+        outRows)
     }
     val half = edges.select($"a".as("node"), $"b".as("nb"))
       .union(edges.select($"b".as("node"), $"a".as("nb")))

@@ -1,6 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Parallelism guard for CPU-heavy map stages. A small input file (one
   * parquet row group) plans as ONE scan partition, so everything fused
@@ -120,6 +123,69 @@ object Par {
     def materialized(): Dataset[T] = materialize(ds)
     def lazyMaterialized(): Dataset[T] = materializeLazy(ds)
   }
+
+  /** Default threshold and (local, distributed) decision counts per gate. */
+  private val gates: Map[String, (Long, AtomicLong, AtomicLong)] =
+    Seq("graph" -> 500000L, "bt" -> 200000L, "mmr" -> 2000000L,
+      "cumsum" -> 4000000L)
+      .map { case (n, d) => n -> (d, new AtomicLong, new AtomicLong) }.toMap
+
+  /** The one driver-vs-distributed decision: true (take the LOCAL branch
+    * — a driver-side replay over one collect, or one window task) iff
+    * `0 < Σ sizes <= spark.graft.gate.<name>`, the sum saturating at
+    * `Long.MaxValue`. At dictionary size a distributed loop costs pure
+    * per-round stage scheduling (the q199 A/B measured the per-round
+    * work at milliseconds); above the gate it is the 100-TB path. Both
+    * branches fold the same arithmetic, spec-pinned per operator. A
+    * threshold of 0 forces the distributed branch, a large one the local
+    * branch; every decision is counted in [[gateStats]].
+    * {{{
+    * gate    conf key                 default  size counted
+    * graph   spark.graft.gate.graph   500000   pageRank: canonical edge rows;
+    *                                           kCore, labelPropagation:
+    *                                           non-loop edge rows
+    * bt      spark.graft.gate.bt      200000   bradleyTerry match-table rows
+    * mmr     spark.graft.gate.mmr     2000000  mmrRerankFrom shortlist rows
+    *                                           + Σ per-qid candidates²
+    * cumsum  spark.graft.gate.cumsum  4000000  gridCumSum grid rows (exact
+    *                                           or the caller's estimate)
+    * }}}
+    * Type and null guards stay at the call sites: labelPropagation and
+    * mmrRerankFrom ask only for orderable ids, and an mmr shortlist
+    * holding nulls falls through after a local decision. */
+  def gate(spark: SparkSession, name: String, sizes: Long*): Boolean = {
+    val (default, local, distributed) = gates.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown size gate '$name' " +
+        s"(known: ${gates.keys.toSeq.sorted.mkString(", ")})"))
+    val key = s"spark.graft.gate.$name"
+    val raw = spark.conf.get(key, default.toString)
+    val threshold = raw.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a whole number of rows, got '$raw'"))
+    val total = sizes.foldLeft(0L)((acc, n) =>
+      if (acc > Long.MaxValue - n) Long.MaxValue else acc + n)
+    val isLocal = total > 0 && total <= threshold
+    (if (isLocal) local else distributed).incrementAndGet()
+    isLocal
+  }
+
+  /** Decisions per gate since the last [[resetGateStats]], every gate
+    * listed: `gate -> Map("local" -> n, "distributed" -> n)`. */
+  def gateStats(): Map[String, Map[String, Long]] =
+    gates.map { case (n, (_, l, d)) =>
+      n -> Map("local" -> l.get(), "distributed" -> d.get()) }
+
+  /** Reset the [[gateStats]] counters (bench isolation). */
+  private[graft] def resetGateStats(): Unit =
+    gates.values.foreach { case (_, l, d) => l.set(0); d.set(0) }
+
+  /** A driver-computed result as a frame over the default parallelism:
+    * the epilogue of every local gate branch. */
+  def localFrame(spark: SparkSession, fields: Seq[StructField],
+                 rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism),
+      StructType(fields))
 
   def ensure(df: DataFrame): DataFrame = {
     // streaming plans have no .rdd and micro-batch sizing is the

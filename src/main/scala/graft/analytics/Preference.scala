@@ -4,6 +4,7 @@ import Par.Mat
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField}
 import org.apache.spark.storage.StorageLevel
 
 /** Pairwise-preference aggregation — the RLHF / eval-pipeline shape:
@@ -27,14 +28,10 @@ object Preference {
     * standard shrinkage.
     *
     * Scale shape: the match table `(i, j, n_ij)` is symmetrized,
-    * persisted, and ITEMS²-bounded — so the rounds are size-GATED
-    * (`spark.graft.bt.driverGate`, default 200k pair rows — sized so
-    * the one collect stays tens of MB even with string ids; the
-    * gridCumSum-gate pattern). At or below the gate the whole MM
-    * recurrence runs driver-side over one collect: at dictionary size
-    * the distributed rounds' cost is pure per-round stage scheduling
-    * (a same-JVM A/B measured the join work at milliseconds), and ten
-    * rounds of scheduling dominated the gate's wall time. Above the
+    * persisted, and ITEMS²-bounded — so the rounds are size-gated (the
+    * `bt` gate, [[Par.gate]]; its default keeps the one collect tens
+    * of MB even with string ids). At or below the gate the whole MM
+    * recurrence runs driver-side over one collect. Above the
     * gate, each round is two node-keyed joins of the theta table
     * against the match table + one aggregate + a geometric-mean
     * normalize — the pageRank round shape. The round's RAW scores are
@@ -70,23 +67,13 @@ object Preference {
       .agg(sum($"nij").cast("long").as("n_games"))
       .join(winCounts, Seq("node"), "left")
       .select($"node", $"n_games", coalesce($"wins", lit(0L)).as("wins"))
-    // ---- size-gated branch (the gridCumSum precedent) ----
-    // The symmetrized match table m is ITEMS²-bounded, not comparison-
-    // volume-bounded — for preference aggregation it is usually
-    // model-count- or candidate-pair-sized. Below the gate the 10 MM
-    // rounds run DRIVER-SIDE over one collect of (m, base): the
-    // distributed rounds' cost at dictionary size is pure per-round
-    // stage scheduling (a same-JVM A/B measured the join work itself
-    // at milliseconds), 10 rounds of which dominated the q199 gate.
-    // Above the gate (a genuinely huge pair graph) the node-keyed
-    // distributed recurrence below is unchanged. Both branches fold
-    // the SAME arithmetic — sum order differs by ulps the final
-    // round-6 absorbs (the logreg/kruskal equality tolerance);
-    // StatsSpec pins branch equality with the gate forced to 0.
-    val mCnt = m.count() // also populates m's cache for either branch
-    val driverGate = spark.conf
-      .get("spark.graft.bt.driverGate", "200000").toLong
-    if (mCnt > 0 && mCnt <= driverGate) {
+    // ---- local branch (Par.gate "bt") ----
+    // m is ITEMS²-bounded, not comparison-volume-bounded — usually
+    // model-count- or candidate-pair-sized. Sum order differs from the
+    // distributed rounds by ulps the final round-6 absorbs
+    // (AnalyticsSpec pins branch equality). The count also populates
+    // m's cache for either branch.
+    if (Par.gate(spark, "bt", m.count())) {
       val baseRows = base0.collect()
       val n = baseRows.length
       val idx = scala.collection.mutable.HashMap[Any, Int]()
@@ -114,12 +101,9 @@ object Preference {
         org.apache.spark.sql.Row(r.get(0), r.getLong(1), r.getLong(2),
           math.round(thArr(k) * 1e6) / 1e6)
       }
-      val schema = org.apache.spark.sql.types.StructType(
-        base0.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "score", org.apache.spark.sql.types.DoubleType))
-      val out = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          spark.sparkContext.defaultParallelism), schema)
+      val out = Par.localFrame(spark,
+        base0.schema.fields.toSeq :+ StructField("score", DoubleType),
+        rows.toSeq)
       m.unpersist()
       return out
     }

@@ -4,6 +4,7 @@ import Par.Mat
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -107,13 +108,11 @@ object Similarity {
     * in [[ivfTopK]]/[[graft.analytics.Cluster.ivfPqTopK]] upstream for
     * big corpora — MMR only needs (qid, vid, simq) + vectors); the
     * pairwise penalty table is candidates² rows PER QUERY (bounded,
-    * e.g. 10² = 100). A dictionary-sized shortlist
-    * (<= `spark.graft.mmr.driverGate` rows, default 200k, AND
-    * Σ per-qid candidates² <= `spark.graft.mmr.pairDriverGate`,
-    * default 2M — the row gate alone cannot bound the PAIR collect
-    * when one qid hoards the shortlist) collects the
-    * probe output + pair table once and replays the greedy selection
-    * driver-side (the graph/bradleyTerry gate pattern — the similarity
+    * e.g. 10² = 100). A dictionary-sized shortlist (the `mmr` gate,
+    * [[Par.gate]], over shortlist rows + Σ per-qid candidates² — a row
+    * count alone cannot bound the PAIR collect when one qid hoards the
+    * shortlist) collects the probe output + pair table once and
+    * replays the greedy selection driver-side (the similarity
     * arithmetic itself stays distributed either way); above the gate
     * each greedy step is one query-keyed anti-join + penalty max +
     * argmax — k unrolled DataFrame steps over dictionary-sized tables,
@@ -169,36 +168,12 @@ object Similarity {
     // leaves DuckDB's internal x*1e6 free to cross a half-way point
     // Spark's exact-decimal rounding does not (bit-level knife edge)
     val penalty = 1.0 - lambda
-    // ---- size-gated driver branch (the graph/bradleyTerry pattern) ----
-    // The SIMILARITY arithmetic stays distributed either way: the
-    // shortlist is the upstream probe's output and the pairwise table
-    // is the same codegen cosine plan both branches share — the driver
-    // branch collects those two bounded tables (queries x candidates /
-    // x candidates² rows) and replays only the GREEDY SELECTION, which
-    // is pure argmax over already-rounded scores. The distributed
-    // unfold prices k steps x (anti-join + penalty agg + argmax window
-    // + a materialize action) of stage scheduling on dictionary-sized
-    // tables — the q199 profile. Above the gate (a shortlist too big
-    // to collect — millions of queries) the unrolled plan below is
-    // unchanged. Score arithmetic is replicated to the bit: the same
-    // doubles (collected, not recomputed) fold through the same
-    // lambda/penalty literals and the same HALF_UP scaled round
-    // (AnalyticsSpec pins branch equality with the gate forced to 0).
-    val driverGate = spark.conf
-      .get("spark.graft.mmr.driverGate", "200000").toLong
-    // the driver branch collects TWO tables: the shortlist (candCnt
-    // rows) and the pair table (Σ per-qid candidates² rows — NOT
-    // bounded by the row gate: one skewed qid with 200k candidates is
-    // 4·10¹⁰ pair rows). Gate each on its own volume; both counts come
-    // from one aggregate over the already-materialized shortlist.
-    val pairGate = spark.conf
-      .get("spark.graft.mmr.pairDriverGate", "2000000").toLong
-    val (candCnt, pairCnt) = {
-      val r = cand.groupBy($"qid").agg(count(lit(1)).as("nq"))
-        .agg(coalesce(sum($"nq"), lit(0L)),
-          coalesce(sum($"nq" * $"nq"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    // ---- local branch (Par.gate "mmr") ----
+    // The driver branch collects the two bounded tables both branches
+    // share — the shortlist and the codegen cosine pair table — and
+    // replays only the GREEDY SELECTION, pure argmax over already-
+    // rounded scores: the same collected doubles fold through the same
+    // lambda/penalty literals and the same HALF_UP scaled round.
     val vidOrd: Option[(Any, Any) => Int] =
       cand.schema("vid").dataType match {
         case org.apache.spark.sql.types.LongType |
@@ -217,8 +192,18 @@ object Similarity {
             Bpe.utf8Compare(x.asInstanceOf[String], y.asInstanceOf[String]))
         case _ => None
       }
-    if (candCnt > 0 && candCnt <= driverGate && pairCnt <= pairGate &&
-        vidOrd.isDefined) {
+    // the gate counts every row the local branch collects: the
+    // shortlist plus the pair table (Σ per-qid candidates² — one skewed
+    // qid with 200k candidates is 4·10¹⁰ pair rows), the square sum in
+    // decimal and clamped so it cannot wrap
+    def collected(): Seq[Long] = {
+      val r = cand.groupBy($"qid").agg(count(lit(1)).as("nq"))
+        .agg(coalesce(sum($"nq"), lit(0L)),
+          coalesce(sum($"nq".cast("decimal(38,0)") * $"nq"), lit(0))).head()
+      Seq(r.getLong(0), r.getDecimal(1)
+        .min(java.math.BigDecimal.valueOf(Long.MaxValue)).longValue)
+    }
+    if (vidOrd.isDefined && Par.gate(spark, "mmr", collected(): _*)) {
       val candRows = cand.collect()
       // a null qid/vid/simq has no defined greedy semantics (the
       // distributed window ranks null scores last) — fall through to
@@ -283,18 +268,12 @@ object Similarity {
             step += 1
           }
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("qid",
-            cand.schema("qid").dataType),
-          org.apache.spark.sql.types.StructField("step",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            cand.schema("vid").dataType),
-          org.apache.spark.sql.types.StructField("mmr_score",
-            org.apache.spark.sql.types.DoubleType)))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(out.toSeq,
-            spark.sparkContext.defaultParallelism), schema)
+        return Par.localFrame(spark,
+          Seq(StructField("qid", cand.schema("qid").dataType),
+            StructField("step", IntegerType, nullable = false),
+            StructField("neighbor_id", cand.schema("vid").dataType),
+            StructField("mmr_score", DoubleType)),
+          out.toSeq)
       }
     }
     val pair = pairPlan.materialized()

@@ -1980,11 +1980,10 @@ object Stats {
           .as("js_distance"))
   }
 
-  /** Cumulative sum over a distinct-value GRID, gated by grid size:
-    * the running sum runs as ONE window task below
-    * `spark.graft.quantile.singleTaskGate` (default 4M — the
-    * quantileNormalize dial, shared deliberately) and as the two-level
-    * distributed prefix sum above it: range-partition by the order
+  /** Cumulative sum over a distinct-value GRID, gated by grid size (the
+    * `cumsum` gate, [[Par.gate]]): the running sum runs as ONE window
+    * task at or below the gate and as the two-level distributed prefix
+    * sum above it or on an empty grid: range-partition by the order
     * column, per-partition running sums, plus a broadcast prefix of
     * the per-partition totals (the q91 tokenPrefixes shape). Both
     * branches produce identical integers — the spec pins equality with
@@ -2014,9 +2013,7 @@ object Stats {
     require(!dv0.columns.contains("__pid") && !dv0.columns.contains("__off"),
       "gridCumSum input must not carry reserved columns __pid/__off")
     val dv = if (sizeHint.isEmpty) dv0.materialized() else dv0
-    val gate = spark.conf
-      .get("spark.graft.quantile.singleTaskGate", "4000000").toLong
-    if (sizeHint.getOrElse(dv.count()) <= gate)
+    if (Par.gate(spark, "cumsum", sizeHint.getOrElse(dv.count())))
       dv.withColumn(cumName, sum(col(cntCol)).over(
         Window.orderBy(col(orderCol))
           .rowsBetween(Window.unboundedPreceding, 0)))

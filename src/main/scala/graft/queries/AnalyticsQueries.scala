@@ -3461,7 +3461,7 @@ object AnalyticsQueries {
         "boilerplate templates a raw dup-count misses; each round is " +
         "one edge-keyed join + node-keyed agg over the persisted " +
         "symmetrized edges (N is the single driver scalar); a " +
-        "dictionary-sized edge set (<= spark.graft.graph.driverGate) " +
+        "dictionary-sized edge set (<= spark.graft.gate.graph) " +
         "runs the same recurrence driver-side over one edge collect " +
         "(the bradleyTerry gate pattern, branch equality spec-pinned)",
       Some(pageRankOracleSql(iters = 10, damping = 0.85)),
@@ -3689,7 +3689,7 @@ object AnalyticsQueries {
         "relevance minus max-similarity-to-selected, so near-duplicate " +
         "hits can't crowd the result page; candidate pair table is " +
         "10^2 rows per query; a dictionary-sized shortlist " +
-        "(<= spark.graft.mmr.driverGate) collects probe + pair tables " +
+        "(<= spark.graft.gate.mmr collected rows) collects probe + pair tables " +
         "once and replays the greedy argmax driver-side (the graph " +
         "gate pattern, branch equality spec-pinned), above the gate 5 " +
         "unrolled anti-join + penalty-max + argmax steps (the pageRank " +

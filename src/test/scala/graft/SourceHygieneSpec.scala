@@ -13,6 +13,9 @@ import scala.jdk.CollectionConverters._
   *    deployment dial for local-vs-reliable checkpointing) — a direct
   *    `.localCheckpoint(` call elsewhere silently opts out of the
   *    reliable path and reintroduces the lost-executor failure mode;
+  *  - every driver-vs-distributed size decision routes through Par.gate
+  *    (one conf namespace, one size arithmetic, one decision record) —
+  *    a hand-rolled conf read elsewhere is a gate nobody can see;
   *  - no raw control bytes in source: grep classifies such a file as
   *    BINARY and every text-based audit sweep (leak checks included)
   *    silently skips it (found live: a NUL literal in Excel.scala);
@@ -33,6 +36,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       .filter(p => Files.readString(p).contains(".localCheckpoint("))
     assert(offenders.isEmpty,
       s"route lineage truncation through Par.materialize: $offenders")
+  }
+
+  test("size gates: only Par.gate reads spark.graft.gate.* confs, and " +
+       "the retired per-site gate keys are gone") {
+    // a read is `.get(` / `.getOption(` with a literal or interpolated
+    // key — doc strings may still name a key
+    val read = """\.(get|getOption)\(\s*s?"spark\.graft\.gate\.""".r
+    val reads = for {
+      p <- mainSources.filterNot(_.endsWith("Par.scala"))
+      (l, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if read.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}"
+    assert(reads.isEmpty, s"decide through Par.gate: $reads")
+    val retired = for {
+      p <- mainSources
+      text = Files.readString(p)
+      // spelled in parts so a repo-wide grep for the names stays empty
+      name <- Seq("driver", "pairDriver", "singleTask").map(_ + "Gate")
+      if text.contains(name)
+    } yield s"$p: $name"
+    assert(retired.isEmpty, s"retired gate names in main source: $retired")
   }
 
   test("no raw control bytes in main source (audit sweeps must see " +

@@ -31,4 +31,26 @@ abstract class SparkTestBase extends AnyFunSuite {
   }
   def evalBool(c: org.apache.spark.sql.Column): Boolean =
     spark.range(1).select(c.as("v")).collect().head.getBoolean(0)
+
+  /** Run `body` with session confs set, restoring each prior value (or
+    * its absence) afterwards. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Size-gate decisions made by `body`: gate -> (local, distributed),
+    * gates that decided only (see `Par.gate`). */
+  def gatesOf[A](body: => A): (A, Map[String, (Long, Long)]) = {
+    graft.analytics.Par.resetGateStats()
+    val out = body
+    (out, graft.analytics.Par.gateStats().collect {
+      case (g, m) if m.values.sum > 0 => g -> (m("local"), m("distributed"))
+    })
+  }
 }

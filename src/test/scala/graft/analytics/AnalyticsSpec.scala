@@ -783,15 +783,18 @@ class SimilaritySpec extends SparkTestBase {
         .orderBy("qid", "step").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
           r.getDouble(3))).toSeq
-    def withGate0[A](body: => A): A = {
-      val prev = spark.conf.getOption("spark.graft.mmr.driverGate")
-      spark.conf.set("spark.graft.mmr.driverGate", "0")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.graft.mmr.driverGate", v)
-        case None => spark.conf.unset("spark.graft.mmr.driverGate")
-      }
+    // each call asserts the branch its gate decision took
+    def local[A](body: => A): A = {
+      val (out, g) = gatesOf(body)
+      assert(g === Map("mmr" -> (1L, 0L)), "default gate: local")
+      out
     }
+    def withGate0[A](body: => A): A =
+      withConf("spark.graft.gate.mmr" -> "0") {
+        val (out, g) = gatesOf(body)
+        assert(g === Map("mmr" -> (0L, 1L)), "gate 0: distributed")
+        out
+      }
     // negative-cosine fixture: candidate 2 is ANTI-correlated with 1,
     // so its step-2 penalty max is negative and a driver branch that
     // floors ms at 0 would diverge here
@@ -803,14 +806,14 @@ class SimilaritySpec extends SparkTestBase {
         col("vec_id") === 0, k = 3)
       .select(col("qid"), col("neighbor_id").as("vid"),
         col("cos_sim").as("simq"))
-    val drv = run(emb, sl, k = 3, lambda = 0.5)
+    val drv = local(run(emb, sl, k = 3, lambda = 0.5))
     assert(drv.nonEmpty)
     assert(withGate0(run(emb, sl, k = 3, lambda = 0.5)) === drv)
     // a shortlist entry whose vid has NO vector: it never appears in
     // the pair table, so its penalty coalesces to 0.0 in both branches
     val slExtra = sl.unionByName(
       Seq((0L, 99L, 0.5)).toDF("qid", "vid", "simq"))
-    val drvX = run(emb, slExtra, k = 4, lambda = 0.5)
+    val drvX = local(run(emb, slExtra, k = 4, lambda = 0.5))
     assert(drvX.exists(_._3 == 99L))
     assert(withGate0(run(emb, slExtra, k = 4, lambda = 0.5)) === drvX)
     // seeded randomized differentials: signed random vectors (negative
@@ -825,7 +828,7 @@ class SimilaritySpec extends SparkTestBase {
             col("vec_id") % 6 === 0, k = 6)
           .select(col("qid"), col("neighbor_id").as("vid"),
             col("cos_sim").as("simq")))
-      val d = run(rEmb, rSl, k = 4, lambda = 0.7)
+      val d = local(run(rEmb, rSl, k = 4, lambda = 0.7))
       assert(d.nonEmpty)
       assert(withGate0(run(rEmb, rSl, k = 4, lambda = 0.7)) === d,
         s"seed=$seed branches disagree")
@@ -834,65 +837,34 @@ class SimilaritySpec extends SparkTestBase {
 
   test("mmrRerank pair gate: a SKEWED shortlist (one qid hoarding " +
        "candidates) falls through to the distributed branch when " +
-       "Σ per-qid candidates² exceeds spark.graft.mmr.pairDriverGate, " +
-       "even though the ROW gate would admit it — and the result is " +
-       "identical to the driver replay") {
+       "the collected rows (shortlist + Σ per-qid candidates²) exceed " +
+       "spark.graft.gate.mmr, even though the shortlist rows alone are " +
+       "under it — and the result is identical to the driver replay") {
     import spark.implicits._
-    // 1 qid × 30 candidates: 30 rows (far under the 200k row gate) but
-    // 900 pair rows — the collected volume the row gate cannot see
+    // 1 qid × 30 candidates: 30 shortlist rows but 900 pair rows — a
+    // threshold of 100 admits the shortlist, not the 930 collected rows
     val rnd = new scala.util.Random(77L)
     val emb = (0L until 31L).map(i =>
       (i, Array.fill(4)(rnd.nextFloat() * 2f - 1f)))
       .toDF("vec_id", "embedding")
-    // NOT pre-materialized: the branch observable below clears all
-    // persisted blocks between runs, which would orphan a
-    // localCheckpointed shortlist; the brute probe is deterministic
-    // (rounded scores), so recomputing it per run is equivalent
     val sl = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
         col("vec_id") === 0L, k = 30)
       .select(col("qid"), col("neighbor_id").as("vid"),
         col("cos_sim").as("simq"))
-    def withConf[A](kvs: (String, String)*)(body: => A): A = {
-      val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
     def run() =
       Similarity.mmrRerankFrom(sl, emb, "vec_id", "embedding",
           k = 4, lambda = 0.7)
         .orderBy("qid", "step").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
           r.getDouble(3))).toSeq
-    def persistedAfter(body: => Unit): Int = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-      body
-      spark.sparkContext.getPersistentRDDs.size
-    }
-    // branch observable: the driver replay materializes ONLY the
-    // shortlist (1 persisted block); the distributed unfold also
-    // materializes the pair table and the per-step selection unions
-    var driverOut: Seq[(Long, Int, Long, Double)] = Seq.empty
-    val driverBlocks = persistedAfter {
-      driverOut = withConf("spark.graft.mmr.pairDriverGate" -> "100000") {
-        run()
-      }
-    }
-    assert(driverBlocks === 1, "driver replay should persist only cand")
-    var distOut: Seq[(Long, Int, Long, Double)] = Seq.empty
-    val distBlocks = persistedAfter {
-      distOut = withConf("spark.graft.mmr.pairDriverGate" -> "100") {
-        run()
-      }
-    }
-    assert(distBlocks > 1,
-      "pair volume 900 > gate 100 must fall through to the " +
-        "distributed unfold (pair table + step unions persist)")
+    val (driverOut, gD) =
+      gatesOf(withConf("spark.graft.gate.mmr" -> "100000")(run()))
+    assert(gD === Map("mmr" -> (1L, 0L)), "930 <= 100000: driver replay")
+    val (distOut, gX) =
+      gatesOf(withConf("spark.graft.gate.mmr" -> "100")(run()))
+    assert(gX === Map("mmr" -> (0L, 1L)),
+      "collected volume 930 > gate 100 must fall through to the " +
+        "distributed unfold")
     assert(distOut === driverOut)
     assert(distOut.nonEmpty && distOut.map(_._2) === Seq(1, 2, 3, 4))
   }
@@ -2576,20 +2548,17 @@ class StatsSpec extends SparkTestBase {
           .orderBy("node").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
             r.getDouble(3))).toSeq
-      val driver = run()
-      val prev = spark.conf.getOption("spark.graft.bt.driverGate")
-      spark.conf.set("spark.graft.bt.driverGate", "0")
-      try {
-        val dist = run()
+      val (driver, gD) = gatesOf(run())
+      assert(gD === Map("bt" -> (1L, 0L)), s"seed=$seed default: local")
+      withConf("spark.graft.gate.bt" -> "0") {
+        val (dist, gX) = gatesOf(run())
+        assert(gX === Map("bt" -> (0L, 1L)), s"seed=$seed gate 0")
         assert(driver.map(t => (t._1, t._2, t._3)) ===
           dist.map(t => (t._1, t._2, t._3)), s"seed=$seed base cols")
         driver.zip(dist).foreach { case ((id, _, _, s1), (_, _, _, s2)) =>
           assert(math.abs(s1 - s2) <= 1.000001e-6,
             s"seed=$seed $id score $s1 vs $s2")
         }
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.graft.bt.driverGate", v)
-        case None => spark.conf.unset("spark.graft.bt.driverGate")
       }
     }
   }
@@ -2606,16 +2575,13 @@ class StatsSpec extends SparkTestBase {
         .orderBy("node").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSeq
-    val driver = run() // gate default 1M >> 8 pair rows
-    val prev = spark.conf.getOption("spark.graft.bt.driverGate")
-    spark.conf.set("spark.graft.bt.driverGate", "0")
-    try {
-      val distributed = run()
+    val (driver, gD) = gatesOf(run()) // gate default 200k >> 8 pair rows
+    assert(gD === Map("bt" -> (1L, 0L)), "default gate: local")
+    withConf("spark.graft.gate.bt" -> "0") {
+      val (distributed, gX) = gatesOf(run())
+      assert(gX === Map("bt" -> (0L, 1L)), "gate 0: distributed")
       assert(driver === distributed,
         s"branches must agree:\n$driver\n$distributed")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.bt.driverGate", v)
-      case None => spark.conf.unset("spark.graft.bt.driverGate")
     }
   }
 

@@ -107,17 +107,15 @@ class AssocOpsSpec extends SparkTestBase {
     val df = rows.toDF("v").repartition(16)
     val kw = (0 until 400).map(i => (s"g${i % 4}", ((i * 31) % 23).toDouble))
       .toDF("g", "v").repartition(16)
-    val defBins = Stats.equalFreqBins(df, "v", k = 7, scale = 1L)
-      .orderBy("bin").collect().map(_.toString).toSeq
-    val defKw = Stats.kruskalWallis(kw, "g", "v", valueScale = 1L)
-      .collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.quantile.singleTaskGate", "0")
-    val (distBins, distKw) =
-      try (Stats.equalFreqBins(df, "v", k = 7, scale = 1L)
-            .orderBy("bin").collect().map(_.toString).toSeq,
-           Stats.kruskalWallis(kw, "g", "v", valueScale = 1L)
-            .collect().map(_.toString).toSeq)
-      finally spark.conf.unset("spark.graft.quantile.singleTaskGate")
+    def both() = (Stats.equalFreqBins(df, "v", k = 7, scale = 1L)
+        .orderBy("bin").collect().map(_.toString).toSeq,
+      Stats.kruskalWallis(kw, "g", "v", valueScale = 1L)
+        .collect().map(_.toString).toSeq)
+    val ((defBins, defKw), gD) = gatesOf(both())
+    assert(gD === Map("cumsum" -> (2L, 0L)), "default gate: single task")
+    val ((distBins, distKw), gX) =
+      gatesOf(withConf("spark.graft.gate.cumsum" -> "0")(both()))
+    assert(gX === Map("cumsum" -> (0L, 2L)), "gate 0: distributed")
     assert(distBins === defBins,
       "equalFreqBins branches must produce identical bins")
     assert(distKw === defKw,
@@ -403,10 +401,9 @@ class AssocOpsSpec extends SparkTestBase {
     val df = rows.toDF("g", "x").repartition(16)
     // force the distributed two-level prefix-sum branch (the 100 TB
     // path the size gate skips at test volumes)
-    spark.conf.set("spark.graft.quantile.singleTaskGate", "0")
-    val out =
-      try Stats.quantileNormalize(df, "g", "x", scale = 1L)
-      finally spark.conf.unset("spark.graft.quantile.singleTaskGate")
+    val (out, gX) = gatesOf(withConf("spark.graft.gate.cumsum" -> "0")(
+      Stats.quantileNormalize(df, "g", "x", scale = 1L)))
+    assert(gX === Map("cumsum" -> (0L, 1L)), "gate 0: distributed")
     val got = out.collect()
       .map(r => (r.getString(0), r.getDouble(1)) ->
         (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
@@ -455,10 +452,12 @@ class AssocOpsSpec extends SparkTestBase {
         s"unpartitioned window over a non-offset table:\n$w")
     // the default path (size gate admits this grid) must return the
     // identical table through its single global window
-    val viaGate = Stats.quantileNormalize(df, "g", "x", scale = 1L)
+    val (viaGate, gD) = gatesOf(Stats.quantileNormalize(df, "g", "x",
+        scale = 1L)
       .collect()
       .map(r => (r.getString(0), r.getDouble(1)) ->
-        (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
+        (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap)
+    assert(gD === Map("cumsum" -> (1L, 0L)), "default gate: single task")
     assert(viaGate == got,
       "size-gated single-window branch diverged from the distributed branch")
   }

@@ -277,13 +277,13 @@ class GraphSpec extends SparkTestBase {
     def lpa() = Graph.labelPropagation(g, "a", "b", rounds = 3)
       .orderBy("node").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val (prD, kcD, kcpD, lpaD) = (pr(), kc(), kcPartial(), lpa())
-    // sanity: the default gate routed these through the driver branch
-    assert(prD.nonEmpty && kcD.nonEmpty && lpaD.nonEmpty)
-    val prev = spark.conf.getOption("spark.graft.graph.driverGate")
-    spark.conf.set("spark.graft.graph.driverGate", "0")
-    try {
-      val (prX, kcX, kcpX, lpaX) = (pr(), kc(), kcPartial(), lpa())
+    val ((prD, kcD, kcpD, lpaD), gD) =
+      gatesOf((pr(), kc(), kcPartial(), lpa()))
+    assert(gD === Map("graph" -> (4L, 0L)), "default gate: all local")
+    withConf("spark.graft.gate.graph" -> "0") {
+      val ((prX, kcX, kcpX, lpaX), gX) =
+        gatesOf((pr(), kc(), kcPartial(), lpa()))
+      assert(gX === Map("graph" -> (0L, 4L)), "gate 0: all distributed")
       // kCore and LPA are integer/label-exact: bit-for-bit equality
       assert(kcD === kcX, s"kCore branches disagree:\n$kcD\n$kcX")
       assert(kcpD === kcpX,
@@ -298,9 +298,6 @@ class GraphSpec extends SparkTestBase {
           math.abs(d1 - d2) <= 1.000001e-9,
           s"node $n rank/delta drift: ($r1,$d1) vs ($r2,$d2)")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.graph.driverGate", v)
-      case None => spark.conf.unset("spark.graft.graph.driverGate")
     }
   }
 
@@ -315,11 +312,12 @@ class GraphSpec extends SparkTestBase {
       // ~5% null endpoints, ~10% loops, duplicates free to collide
       def end(): Option[Long] =
         if (rnd.nextInt(20) == 0) None else Some(1L + rnd.nextInt(n))
-      val pairs = (1 to m).map { _ =>
+      val raw = (1 to m).map { _ =>
         val a = end()
         val b = if (rnd.nextInt(10) == 0) a else end()
         (a, b)
-      }.toDF("a", "b")
+      }
+      val pairs = raw.toDF("a", "b")
       def all() = (
         Graph.pageRank(pairs, "a", "b", iters = 5).orderBy("node")
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
@@ -329,11 +327,17 @@ class GraphSpec extends SparkTestBase {
         Graph.labelPropagation(pairs, "a", "b", rounds = 2)
           .orderBy("node").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
-      val (prD, kcD, lpaD) = all()
-      val prev = spark.conf.getOption("spark.graft.graph.driverGate")
-      spark.conf.set("spark.graft.graph.driverGate", "0")
-      try {
-        val (prX, kcX, lpaX) = all()
+      val ((prD, kcD, lpaD), gD) = gatesOf(all())
+      // pageRank gates on all edges, kCore/LPA on non-loop edges; an
+      // empty size routes distributed
+      val edges = raw.collect { case (Some(a), Some(b)) => (a, b) }
+      val local = (if (edges.nonEmpty) 1L else 0L) +
+        (if (edges.exists { case (a, b) => a != b }) 2L else 0L)
+      assert(gD === Map("graph" -> (local, 3L - local)),
+        s"seed=$seed default: $gD")
+      withConf("spark.graft.gate.graph" -> "0") {
+        val ((prX, kcX, lpaX), gX) = gatesOf(all())
+        assert(gX === Map("graph" -> (0L, 3L)), s"seed=$seed gate 0: $gX")
         assert(kcD === kcX, s"seed=$seed kCore:\n$kcD\n$kcX")
         assert(lpaD === lpaX, s"seed=$seed LPA:\n$lpaD\n$lpaX")
         assert(prD.map(_._1) === prX.map(_._1), s"seed=$seed PR nodes")
@@ -341,9 +345,6 @@ class GraphSpec extends SparkTestBase {
           assert(math.abs(r1 - r2) <= 1.000001e-6,
             s"seed=$seed node $node rank $r1 vs $r2")
         }
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.graft.graph.driverGate", v)
-        case None => spark.conf.unset("spark.graft.graph.driverGate")
       }
     }
   }

@@ -170,4 +170,52 @@ class ParSpec extends SparkTestBase {
     // a checkpointed frame's plan is a leaf scan, not the filter tree
     assert(out.queryExecution.optimizedPlan.collectLeaves().size == 1)
   }
+
+  test("size gate: local iff 0 < Σ sizes <= threshold (inclusive); an " +
+       "empty size, a saturating sum and a forced 0 go distributed; " +
+       "every decision is counted per (gate, branch)") {
+    val (_, g) = gatesOf {
+      withConf("spark.graft.gate.graph" -> "10") {
+        assert(Par.gate(spark, "graph", 10L))
+        assert(Par.gate(spark, "graph", 4L, 6L))
+        assert(!Par.gate(spark, "graph", 11L))
+        assert(!Par.gate(spark, "graph", 0L))
+        assert(!Par.gate(spark, "graph"))
+      }
+      // the sum saturates: wrapping would read Long.MinValue for the
+      // first call and 1 — a local answer — for the second
+      assert(!Par.gate(spark, "graph", Long.MaxValue, 1L))
+      assert(!Par.gate(spark, "graph", Long.MaxValue, Long.MaxValue, 3L))
+      assert(Par.gate(spark, "cumsum", 1L))
+      withConf("spark.graft.gate.bt" -> "0")(assert(!Par.gate(spark, "bt", 1L)))
+    }
+    assert(g === Map("graph" -> (2L, 5L), "cumsum" -> (1L, 0L),
+      "bt" -> (0L, 1L)))
+  }
+
+  test("size gate: an unknown gate name and a malformed threshold fail " +
+       "naming what is wrong") {
+    val unknown = intercept[IllegalArgumentException](
+      Par.gate(spark, "graphs", 1L))
+    assert(unknown.getMessage.contains("graphs"))
+    val bad = withConf("spark.graft.gate.graph" -> "2M") {
+      intercept[IllegalArgumentException](Par.gate(spark, "graph", 1L))
+    }
+    assert(bad.getMessage.contains("spark.graft.gate.graph") &&
+      bad.getMessage.contains("2M"), bad.getMessage)
+  }
+
+  test("gridCumSum on an empty grid takes the distributed branch and " +
+       "returns an empty frame with the single-task branch's schema") {
+    import spark.implicits._
+    val grid = Seq((1L, 2L), (3L, 4L)).toDF("v", "cnt")
+    val (full, gFull) = gatesOf(Stats.gridCumSum(grid, "v", "cnt", "cum"))
+    assert(gFull === Map("cumsum" -> (1L, 0L)))
+    assert(full.orderBy("v").collect().map(_.getLong(2)).toSeq === Seq(2L, 6L))
+    val (empty, gEmpty) =
+      gatesOf(Stats.gridCumSum(grid.filter($"v" < 0), "v", "cnt", "cum"))
+    assert(gEmpty === Map("cumsum" -> (0L, 1L)))
+    assert(empty.collect().isEmpty)
+    assert(empty.schema === full.schema)
+  }
 }
