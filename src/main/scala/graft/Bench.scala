@@ -253,14 +253,14 @@ object Bench {
     def jNum(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     def jmap(sel: ((Double, Double)) => Double): String =
-      results.map { case (k, v) => Harness.json(k) + ":" + sel(v) }
+      results.map { case (k, v) => Json.str(k) + ":" + sel(v) }
         .mkString("{", ",", "}")
     // totals count SUCCESSES only — summing the -1.0 failure sentinels
     // would make a broken round read as a speedup; failures are listed so
     // a smaller total can never masquerade as an improvement
     def jtotal(sel: ((Double, Double)) => Double): Double =
       results.collect { case (_, v) if sel(v) >= 0 => sel(v) }.sum
-    val failed = results.collect { case (n, (v, _)) if v < 0 => Harness.json(n) }
+    val failed = results.collect { case (n, (v, _)) if v < 0 => Json.str(n) }
       .mkString("[", ",", "]")
     // "value"/"queries" stay the FIRST-pass numbers (comparable with prior
     // rounds); "steady_value"/"queries_steady" are the per-query medians.
@@ -302,18 +302,18 @@ object Bench {
       }
       .sortBy(_._1)
       .map { case (n, m) =>
-        Harness.json(n + ":build_s=" + String.format(java.util.Locale.ROOT,
+        Json.str(n + ":build_s=" + String.format(java.util.Locale.ROOT,
           "%.1f", Double.box(m("build_s"))) + ",band=" +
           String.format(java.util.Locale.ROOT, "%.1f",
             Double.box(memoQuietBand(n))))
       }.mkString("[", ",", "]")
     val retriedJson = retried.sorted
-      .map(Harness.json).mkString("[", ",", "]")
+      .map(Json.str).mkString("[", ",", "]")
     // pre-retry steady medians for the queries the retry touched (the
     // full map would double the artifact; untouched queries' pre- and
     // post-retry medians are identical)
     val preRetryJson = retried.sorted
-      .map(n => Harness.json(n) + ":" + jNum(preRetrySteady(n)))
+      .map(n => Json.str(n) + ":" + jNum(preRetrySteady(n)))
       .mkString("{", ",", "}")
     // per-memo build/hit accounting (active memos only): "build_s" is
     // the wall time the first consumer paid to snapshot the shared
@@ -322,8 +322,8 @@ object Bench {
       .filter { case (_, m) => m.values.sum > 0 }
       .sortBy(_._1)
       .map { case (n, m) =>
-        Harness.json(n) + ":{" + m.toSeq.sortBy(_._1).map { case (k, v) =>
-          Harness.json(k) + ":" + (if (k == "build_s") jNum(v)
+        Json.str(n) + ":{" + m.toSeq.sortBy(_._1).map { case (k, v) =>
+          Json.str(k) + ":" + (if (k == "build_s") jNum(v)
                               else v.toLong.toString)
         }.mkString(",") + "}"
       }.mkString("{", ",", "}")
@@ -333,7 +333,7 @@ object Bench {
       else (stealSamples.sum / stealSamples.length, stealSamples.max,
         stealSamples.count(_ >= 2.0).toLong)
     }
-    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"gates":${Harness.gatesJson()},"failed":$failed,"sf":${Harness.json(sfDir)}}"""
+    val line = s"""{"metric":"total","value":${jtotal(_._1)},"unit":"sec","passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"steal_epoch_samples":$stealEpochs,"contended_segments":$contendedSegments,"retried":$retriedJson,"steady_preretry":$preRetryJson,"steady_value":${jtotal(_._2)},"queries":${jmap(_._1)},"queries_steady":${jmap(_._2)},"memos":$memosJson,"gates":${Harness.gatesJson()},"failed":$failed,"sf":${Json.str(sfDir)}}"""
     println(line)
     // ALSO write the line to a file: the driver's harness captures only
     // the tail of sbt output and has truncated the per-query maps two
@@ -368,10 +368,10 @@ object Bench {
       .collect { case (n, (_, s)) if s >= 0 => n -> s }
       .sortBy { case (n, s) => (-s, n) }
       .take(30)
-      .map { case (n, s) => Harness.json(n) + ":" + jNum(s) }
+      .map { case (n, s) => Json.str(n) + ":" + jNum(s) }
       .mkString("{", ",", "}")
     val nOk = results.count(_._2._1 >= 0)
-    println(s"""{"metric":"summary","total":${jtotal(_._1)},"steady":${jtotal(_._2)},"n":$nOk,"failed":$failed,"passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"contended_segments":$contendedSegments,"retried":$retriedJson,"top_steady":$topSteadyJson,"per_query_file":${Harness.json(benchOut)},"sf":${Harness.json(sfDir)}}""")
+    println(s"""{"metric":"summary","total":${jtotal(_._1)},"steady":${jtotal(_._2)},"n":$nOk,"failed":$failed,"passes":$passes,"pass_order":"interleaved","load_start":$loadStart,"load_end":$loadEnd,"probe_start_s":${jNum(probeStart)},"probe_end_s":${jNum(probeEnd)},"steal_mean_pct":${jNum(stealMean)},"steal_max_pct":${jNum(stealMax)},"contended_segments":$contendedSegments,"retried":$retriedJson,"top_steady":$topSteadyJson,"per_query_file":${Json.str(benchOut)},"sf":${Json.str(sfDir)}}""")
     spark.stop()
   }
 }

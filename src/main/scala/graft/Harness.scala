@@ -52,20 +52,7 @@ private[graft] object Harness {
   def gatesJson(): String = graft.analytics.Par.gateStats().toSeq
     .filter(_._2.values.sum > 0).sortBy(_._1)
     .map { case (g, m) =>
-      json(g) + m.toSeq.sortBy(_._1)
-        .map { case (b, n) => json(b) + ":" + n }.mkString(":{", ",", "}")
+      Json.str(g) + m.toSeq.sortBy(_._1)
+        .map { case (b, n) => Json.str(b) + ":" + n }.mkString(":{", ",", "}")
     }.mkString("{", ",", "}")
-
-  /** JSON string literal: backslash, quote, and ALL control chars
-    * (< 0x20) escaped — a tab or CR in a name or SQL text would
-    * otherwise make a consumer's json.load fail. */
-  def json(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -99,8 +99,8 @@ object Pipeline {
         CsvSink.writeSingleFile(CsvSink.exportColumns(flat), out.toString)
         returnUrl.foreach { cb =>
           val body =
-            s"""{"file_url": ${jsonStr(out.toString)}, """ +
-              s""""preset_id": ${jsonStr(targetNode)}, "status": "completed"}"""
+            s"""{"file_url": ${Json.str(out.toString)}, """ +
+              s""""preset_id": ${Json.str(targetNode)}, "status": "completed"}"""
           try HttpFetch.postJson(cb, body)
           catch { case e: Exception =>
             System.err.println(s"[pipeline] callback error: ${e.getMessage}")
@@ -326,17 +326,6 @@ object Pipeline {
     if (dot > 0) name.substring(0, dot) else name
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** PDF -> structured JSON (main.py:981-1053): document_info envelope,
     * per-page text + tables + image counts, plus flat `tables` /
     * `text_content` indexes. Table structure comes from
@@ -372,21 +361,21 @@ object Pipeline {
     }
     def tableJson(tbl: Int, headers: Seq[String], rows: Seq[Seq[String]],
                   extra: String = ""): String =
-      s"""{$extra"table_number": $tbl, "headers": [${headers.map(jsonStr).mkString(", ")}], """ +
-        s""""rows": [${rows.map(r => "[" + r.map(jsonStr).mkString(", ") + "]").mkString(", ")}], """ +
+      s"""{$extra"table_number": $tbl, "headers": [${headers.map(Json.str).mkString(", ")}], """ +
+        s""""rows": [${rows.map(r => "[" + r.map(Json.str).mkString(", ") + "]").mkString(", ")}], """ +
         s""""rows_count": ${rows.length}, "columns_count": ${headers.length}}"""
     val pageObjs = pages.map { case (pg, lines, nImages) =>
       val text = lines.mkString("\n")
       val pageTables = tables.filter(_._1 == pg)
         .map { case (_, tbl, h, rs) => tableJson(tbl, h, rs) }
-      s"""{"page_number": $pg, "text": ${jsonStr(text)}, """ +
+      s"""{"page_number": $pg, "text": ${Json.str(text)}, """ +
         s""""tables": [${pageTables.mkString(", ")}], "images_count": $nImages}"""
     }
     val flatTables = tables.map { case (pg, tbl, h, rs) =>
       tableJson(tbl, h, rs, extra = s""""page": $pg, """)
     }
     val textContent = pages.filter(_._2.nonEmpty).map { case (pg, lines, _) =>
-      s"""{"page": $pg, "text": ${jsonStr(lines.mkString("\n"))}}"""
+      s"""{"page": $pg, "text": ${Json.str(lines.mkString("\n"))}}"""
     }
     val doc =
       s"""{

@@ -235,10 +235,10 @@ object ScaleBench {
         val cold = timed()
         val res = cold.flatMap(c => timed().map(w => (c._1, c._2, w._2)))
         val fields = res.fold(
-          e => s""""rows":-1,"cold_s":-1,"warm_s":-1,"error":${Harness.json(e)}""",
+          e => s""""rows":-1,"cold_s":-1,"warm_s":-1,"error":${Json.str(e)}""",
           { case (rows, c, w) =>
             s""""rows":$rows,"cold_s":${num(c)},"warm_s":${num(w)},"error":null""" })
-        println(s"""{"k":$k,"cpus":$cpus,"query":${Harness.json(name)},$fields,"gates":${Harness.gatesJson()},"sf":${Harness.json(sfDir)}}""")
+        println(s"""{"k":$k,"cpus":$cpus,"query":${Json.str(name)},$fields,"gates":${Harness.gatesJson()},"sf":${Json.str(sfDir)}}""")
       }
       Memo.invalidateAll()
       Harness.deleteTree(tmp.resolve(s"x$k"))

@@ -32,7 +32,7 @@ object Verify {
       }
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -228,10 +228,9 @@ object Dedup {
     // shingle — Σ_sh C(min(df, maxDocFreq), 2) rows of three scalars,
     // bounded by the df-cap, never corpus text. That is the same volume
     // the un-memoized operator already shuffled to score; the memo adds
-    // one parquet write of it. A single-threshold-only workload that
-    // wants to skip even that writes nothing by leaving the memo
-    // bypassed (no shared dir on a non-local master) — locally the
-    // write is bench-measured in the artifact's `memos` map.
+    // one parquet write of it (a bypassed memo — no shared dir on a
+    // non-local master — materializes it instead); locally the write
+    // is bench-measured in the artifact's `memos` map.
     jaccardMemo.getOrCompute(
       Seq(docs0.select(col(idCol), col(textCol))),
       s"n=$n,df=$maxDocFreq") {
@@ -951,16 +950,9 @@ object Dedup {
       s"n=$n,h=$numHashes,bs=$bandSize,cap=$maxBucket") {
       val spark = docs0.sparkSession
       import spark.implicits._
-      // the sig table feeds banding + both score-join sides; when the
-      // sig memo snapshots, it is ALREADY a materialized parquet read —
-      // only the bypass posture (non-local master, no shared dir) still
-      // needs the explicit checkpoint to avoid three corpus passes.
-      // The RAW frame goes to the memoized callee (its build closure
-      // applies Par.ensure): a repartitioned input would key the same
-      // corpus apart from q19's call and rebuild the shared snapshots
-      val sigsDf0 = minhashSigs(docs0, idCol, textCol, n, numHashes)
-      val sigsDf =
-        if (Memo.snapshotsActive(spark)) sigsDf0 else sigsDf0.materialized()
+      // the sig table feeds banding + both score-join sides: a memo
+      // result is already materialized, so nothing re-runs the corpus
+      val sigsDf = minhashSigs(docs0, idCol, textCol, n, numHashes)
       val cand = minhashCandidates(
         bandsFromSigs(sigsDf, numHashes, bandSize), maxBucket)
       cand
@@ -992,25 +984,24 @@ object Dedup {
                          n: Int = 3, numHashes: Int = 8,
                          bandSize: Int = 2,
                          maxBucket: Int = 1000): DataFrame = {
-    // raw frame into both memoized callees (Par.ensure runs inside their
-    // builds) so the corpus keys like every other dedup-family consumer
     val spark = docs0.sparkSession
     import spark.implicits._
     val est = minhashJaccardEstimate(docs0, idCol, textCol,
       minEstimate = 0.0, n, numHashes, bandSize, maxBucket)
-    // both pair sides join this per-doc shingle-array table — it now
-    // reads MAP-SIDE off the shared [[docShingleArrays]] snapshot
-    // (sort_array + size of the already-distinct array), replacing the
-    // old explode → distinct → collect_list shuffle with zero exchanges.
-    // Doc ids are assumed unique (the family-wide contract: the
-    // estimate/jaccard count joins already key per doc ROW); only the
-    // bypass posture still checkpoints, since there the arrays carry
-    // raw lineage read by both join sides.
-    val sets0 = docShingleArrays(docs0, idCol, textCol, n)
-      .select($"doc", sort_array($"shs").as("toks"),
-        size($"shs").cast("long").as("sz"))
-    val sets =
-      if (Memo.snapshotsActive(spark)) sets0 else sets0.materialized()
+    // both pair sides join this per-doc shingle-array table — it reads
+    // MAP-SIDE off the shared [[docShingleArrays]] snapshot (sort_array
+    // + size of the already-distinct array), zero exchanges. Both joins
+    // key per doc ROW, so a reused id would silently pair texts that
+    // were never candidates: reject it with one aggregate over the
+    // snapshot's doc column (docs under n tokens carry no row, and
+    // cannot pair either)
+    val arrays = docShingleArrays(docs0, idCol, textCol, n)
+    arrays.groupBy($"doc").count().filter($"count" > 1).limit(1)
+      .collect().headOption.foreach(r => throw new IllegalArgumentException(
+        s"minhashCalibration needs unique $idCol values; ${r.get(0)} " +
+          "appears more than once"))
+    val sets = arrays.select($"doc", sort_array($"shs").as("toks"),
+      size($"shs").cast("long").as("sz"))
     val den = $"na" + $"nb" - $"inter_n"
     val scored = est
       .join(sets.select($"doc".as("doc_a"), $"toks".as("ta"),
@@ -1124,8 +1115,7 @@ object Dedup {
     * MinHash; a hit is bit-identical to a recompute) as a parquet
     * snapshot and every consumer after the first reads a two-column
     * scan instead of re-running shingle → signature → band → bucket
-    * self-join from raw text. The trained-model memo (Selection.scala)
-    * is the same pattern for model weights. */
+    * self-join from raw text. */
   def minhashCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                             n: Int = 3, numHashes: Int = 8,
                             bandSize: Int = 2,

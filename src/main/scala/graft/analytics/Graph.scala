@@ -57,27 +57,19 @@ object Graph {
     * consumer defines semantics for it, so the edge is excluded rather
     * than half-kept.
     *
-    * In memo-BYPASS mode (non-local master, no shared directory) the
-    * memo hands back the raw build plan — which every consumer here
-    * references several times (LPA joins it every round, adamicAdar's
-    * wedge self-join reads it twice), each reference re-running the
-    * whole upstream pair pipeline. The bypass result is therefore
-    * materialized per call: the one-copy cost the old per-operator
-    * persist() paid, without recompute amplification in exactly the
-    * degraded deployment mode. On the snapshot path the frame is
-    * already a two-column parquet scan — nothing extra to do. */
+    * Every consumer here references the result several times (LPA
+    * joins it every round, adamicAdar's wedge self-join reads it
+    * twice); a memo result is a snapshot scan or a materialized build,
+    * so no reference re-runs the upstream pair pipeline. */
   private def canonEdges(pairs: DataFrame, aCol: String,
-                         bCol: String): DataFrame = {
-    val built = edgeMemo.getOrCompute(
+                         bCol: String): DataFrame =
+    edgeMemo.getOrCompute(
       Seq(pairs.select(col(aCol), col(bCol))), "canon") {
       pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
         .select(least(col(aCol), col(bCol)).as("a"),
           greatest(col(aCol), col(bCol)).as("b"))
         .distinct()
     }
-    if (Memo.resolveRootUri(pairs.sparkSession).isEmpty) built.materialized()
-    else built
-  }
 
   /** Loop-free canonical edges — what every consumer except pageRank
     * means by "the graph". */
@@ -88,21 +80,16 @@ object Graph {
   /** (node, deg) over the loop-free canonical edges, memoized — the
     * degree table five consumers re-derived independently. Its node
     * set is exactly the graph's node set, so consumers needing "all
-    * nodes" project this instead of running their own distinct.
-    * Bypass mode materializes (the [[canonEdges]] rule — kCore joins
-    * this table back after its peel loop). */
+    * nodes" project this instead of running their own distinct. */
   private def canonDegrees(pairs: DataFrame, aCol: String,
-                           bCol: String): DataFrame = {
-    val built = degMemo.getOrCompute(
+                           bCol: String): DataFrame =
+    degMemo.getOrCompute(
       Seq(pairs.select(col(aCol), col(bCol))), "deg") {
       val e = simpleEdges(pairs, aCol, bCol)
       e.select(col("a").as("node")).union(e.select(col("b").as("node")))
         .groupBy(col("node"))
         .agg(count(lit(1)).cast("long").as("deg"))
     }
-    if (Memo.resolveRootUri(pairs.sparkSession).isEmpty) built.materialized()
-    else built
-  }
 
   /** PageRank over an UNDIRECTED pair list: pairs symmetrize into a
     * directed edge table, every node then has in- and out-degree >= 1

@@ -4,33 +4,47 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+  Project, Repartition, RepartitionByExpression}
 
-/** Session-scoped memo of deterministic DERIVED FRAMES, keyed by the
-  * canonicalized analyzed plans of their inputs — the frame-valued
-  * sibling of the trained-model memo (Selection.scala): several catalog
-  * gates legitimately share one expensive subtree (the q19 LSH candidate
-  * graph feeds PageRank, triangles, k-core, LPA, Bradley-Terry; the BM25
-  * ranking feeds its own gate and the retrieval-metrics gate), and each
-  * gate must stay independently verifiable — so the ENGINE caches, the
-  * gates don't know.
+import Par.Mat
+
+/** The engine's one session cache: memos of deterministic DERIVED
+  * results, keyed by the canonicalized analyzed plans of their inputs.
+  * Several catalog gates legitimately share one expensive subtree (the
+  * q19 LSH candidate graph feeds PageRank, triangles, k-core, LPA,
+  * Bradley-Terry; the BM25 ranking feeds its own gate and the
+  * retrieval-metrics gate; seven gates score two trained logreg
+  * models), and each gate must stay independently verifiable — so the
+  * ENGINE caches, the gates don't know. Two storage policies share one
+  * [[SessionMemo]] base (key, LRU, counters, stats row): [[FrameMemo]]
+  * snapshots derived frames, [[ValueMemo]] holds driver-side values
+  * (centroids, trained models).
   *
   * Soundness contract: memoized operators must be DETERMINISTIC
   * functions of their input frames (every candidate here is — md5-seeded
   * MinHash, fixed-iteration recurrences, round-6 pinned scores), so a
-  * memo hit is bit-identical to a recompute. Keys hold the CANONICALIZED
-  * analyzed plan of each input (expr ids normalized — two reads of the
-  * same table match, in-memory inputs compare their data) plus the
-  * session UUID (a new session may see new data at the same path;
-  * `sessionUUID` rather than an identity hash so a restarted session can
-  * never collide into a prior session's entries).
+  * memo hit is bit-identical to a recompute. The key is built in ONE
+  * place ([[SessionMemo]]): the session UUID (a new session may see new
+  * data at the same path; `sessionUUID` rather than an identity hash so
+  * a restarted session can never collide into a prior session's
+  * entries), the CANONICALIZED analyzed plan of each input (expr ids
+  * normalized — two reads of the same table match, in-memory inputs
+  * compare their data), and the params string. Before canonicalizing,
+  * shuffle-only repartitions under nothing but deterministic row-wise
+  * operators are dropped, so a frame that went through `Par.ensure` or
+  * `.repartition(n)` keys the same entry as the raw frame; a
+  * repartition under a Limit or Sample changes content and stays.
+  * A `.materialized()` input still never hits: its checkpoint leaf
+  * carries a fresh RDD identity per materialization.
   *
-  * Storage: each entry is a PARQUET SNAPSHOT, NOT a cached/checkpointed
-  * RDD — block-manager entries die to any `unpersist`-all hygiene sweep
-  * (the bench does one per measured query) and executor loss, while a
-  * file snapshot survives both and re-reads as a plain pruned columnar
-  * scan. Snapshot PLACEMENT is a deployment dial (the same shape as
-  * [[Par.materialize]]'s reliable-checkpoint dial):
+  * Frame storage: each entry is a PARQUET SNAPSHOT, NOT a
+  * cached/checkpointed RDD — block-manager entries die to any
+  * `unpersist`-all hygiene sweep (the bench does one per measured
+  * query) and executor loss, while a file snapshot survives both and
+  * re-reads as a plain pruned columnar scan. Snapshot PLACEMENT is a
+  * deployment dial (the same shape as [[Par.materialize]]'s
+  * reliable-checkpoint dial):
   *
   *   1. `spark.graft.memo.dir` set → snapshots live under it. Point it
   *      at the shared filesystem (HDFS/S3) on any multi-node cluster —
@@ -45,10 +59,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *      HDFS `defaultFS` cannot split the write and the exists/delete
   *      bookkeeping across two filesystems.
   *   4. else (non-local master, nothing configured) → the memo is
-  *      BYPASSED: every call computes its build expression directly.
-  *      Correct (the build path is the priced, verified pipeline) and
-  *      safe — a driver-local snapshot on a multi-node cluster would be
-  *      a partial or failed read for every consumer.
+  *      BYPASSED: every call materializes its build expression
+  *      (`Par.materialize`) and hands that back. A driver-local
+  *      snapshot on a multi-node cluster would be a partial or failed
+  *      read for every consumer; the materialized build keeps the
+  *      one guarantee operators rely on — a memo result is safe to read
+  *      more than once without re-running its pipeline — so no
+  *      operator ever asks where snapshots live.
   *
   * All snapshot IO (write, read, exists, delete) goes through the Hadoop
   * `FileSystem` resolved from the SAME qualified path, so eviction and
@@ -62,7 +79,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * snapshot directory immediately — handed-out frames are lazy, so a
   * consumer planned before an eviction/publish may scan after it.
   * Dropped entries are CONDEMNED and their directories reaped only once
-  * they are older than `spark.graft.memo.grace.ms` (default 15 min —
+  * they are older than the grace window ([[Memo.graceMs]], 15 min —
   * far beyond any plan-to-scan gap in a serving micro-batch or bench
   * pass); a JVM shutdown hook purges everything unconditionally.
   *
@@ -75,65 +92,31 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object Memo {
 
   private val memos =
-    new java.util.concurrent.CopyOnWriteArrayList[SessionMemo]()
+    new java.util.concurrent.CopyOnWriteArrayList[SessionMemo[_]]()
 
-  private[analytics] def register(m: SessionMemo): Unit = memos.add(m)
+  private[analytics] def register(m: SessionMemo[_]): Unit = memos.add(m)
 
-  /** Drop every memoized frame/value AND every memoized trained model,
-    * engine-wide. Call after overwriting any dataset a memoized
-    * operator may have read. Snapshot directories are condemned, not
-    * deleted — see the grace-period contract in the class doc. */
-  def invalidateAll(): Unit = {
-    memos.asScala.foreach(_.invalidate())
-    Selection.invalidateModels()
-  }
+  /** Drop every memoized frame, value and trained model, engine-wide.
+    * Call after overwriting any dataset a memoized operator may have
+    * read. Snapshot directories are condemned, not deleted — see the
+    * grace-period contract in the class doc. */
+  def invalidateAll(): Unit = memos.asScala.foreach(_.invalidate())
 
   /** Grace window (ms) before a condemned snapshot directory is
-    * deleted. Adopted from `spark.graft.memo.grace.ms` on each frame
-    * memo call; the default outlives any plan-to-scan gap a lazy
-    * consumer realistically carries. */
+    * deleted: 15 min outlives any plan-to-scan gap a lazy consumer
+    * realistically carries. A var only so specs can lapse it. */
   @volatile private[graft] var graceMs: Long = 15 * 60 * 1000L
 
-  /** Per-memo counters for the bench artifact: builds (snapshot writes
-    * for frame memos, driver-value computes for value memos, model
-    * trainings for the logreg cache), their total wall seconds, hits,
-    * and bypasses — so build cost is attributed to the memo, not to
-    * whichever gate happened to run first in catalog order. */
+  /** Per-memo counters for the bench artifact, one row per memo:
+    * builds (snapshot writes, driver-value computes, model trainings),
+    * their total wall seconds and hits; frame memos add bypasses — so
+    * build cost is attributed to the memo, not to whichever gate
+    * happened to run first in catalog order. */
   def stats(): Map[String, Map[String, Double]] =
-    memos.asScala.flatMap {
-      case f: FrameMemo =>
-        Some(f.memoName -> Map(
-          "builds" -> f.builds.get().toDouble,
-          "build_s" -> f.buildNanos.get() / 1e9,
-          "hits" -> f.hits.get().toDouble,
-          "bypasses" -> f.bypasses.get().toDouble))
-      case v: ValueMemo[_] =>
-        Some(v.memoName -> Map(
-          "builds" -> v.builds.get().toDouble,
-          "build_s" -> v.buildNanos.get() / 1e9,
-          "hits" -> v.hits.get().toDouble))
-      case _ => None // a future SessionMemo kind reports nothing,
-                     // never a MatchError at bench time
-    }.toMap ++ Map(
-      "logreg_models" -> Map(
-        "builds" -> Selection.modelCacheBuilds.get().toDouble,
-        "build_s" -> Selection.modelCacheBuildNanos.get() / 1e9,
-        "hits" -> Selection.modelCacheHits.get().toDouble))
+    memos.asScala.map(m => m.memoName -> m.stats).toMap
 
   /** Reset the [[stats]] counters (bench isolation). */
-  private[graft] def resetStats(): Unit = {
-    memos.asScala.foreach {
-      case f: FrameMemo =>
-        f.builds.set(0); f.buildNanos.set(0); f.hits.set(0)
-        f.bypasses.set(0)
-      case v: ValueMemo[_] =>
-        v.builds.set(0); v.buildNanos.set(0); v.hits.set(0)
-      case _ => ()
-    }
-    Selection.modelCacheBuilds.set(0)
-    Selection.modelCacheBuildNanos.set(0)
-    Selection.modelCacheHits.set(0)
-  }
+  private[graft] def resetStats(): Unit = memos.asScala.foreach(_.resetStats())
 
   // Traffic-free reaping: sweep() otherwise runs only inside
   // getOrCompute/invalidate, so a long-lived server that stops calling
@@ -149,10 +132,8 @@ object Memo {
         th.setDaemon(true)
         th
       })
-    t.scheduleWithFixedDelay(() => memos.asScala.foreach {
-      case f: FrameMemo =>
-        try f.sweep() catch { case _: Throwable => () }
-      case _ => ()
+    t.scheduleWithFixedDelay(() => memos.asScala.foreach { m =>
+      try m.sweep() catch { case _: Throwable => () }
     }, SweepTickMs, SweepTickMs,
       java.util.concurrent.TimeUnit.MILLISECONDS)
   }
@@ -164,11 +145,7 @@ object Memo {
   // the delete runs while the filesystems are still open.
   org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
     new Runnable {
-      override def run(): Unit =
-        memos.asScala.foreach {
-          case f: FrameMemo => f.purge()
-          case _ => ()
-        }
+      override def run(): Unit = memos.asScala.foreach(_.purge())
     }, 25)
 
   /** Stable per-session identity for memo keys: a UUID assigned to each
@@ -215,14 +192,6 @@ object Memo {
         sc.isLocal)
     }
 
-  /** Whether frame memos will snapshot (vs bypass) in this session —
-    * operators whose build consumes a memoized frame several times use
-    * this to decide if they must Par.materialize it themselves: a
-    * snapshot IS already materialized (a parquet read), while a
-    * bypassed memo hands back the raw lineage. */
-  private[graft] def snapshotsActive(spark: SparkSession): Boolean =
-    resolveRootUri(spark).isDefined
-
   /** Test seam: a local[N] suite cannot present a non-local master, so
     * the bypass EXECUTION path (not just the decision function) is
     * pinned by forcing the resolved placement. `Some(None)` = bypass;
@@ -231,165 +200,190 @@ object Memo {
       : Option[Option[String]] = None
 }
 
-/** Common surface of the session memos, for central invalidation. */
-private[graft] trait SessionMemo { def invalidate(): Unit }
-
-/** Plan-keyed LRU of DRIVER-SIDE values (trained centroid models,
-  * bounded dictionaries — anything model-sized that gates re-derive
-  * from the same inputs). The value lives on the driver, so unlike
-  * [[FrameMemo]] no snapshot lifecycle (and no placement dial) exists;
-  * the soundness contract is the same — the computing closure must be a
-  * deterministic function of the keyed inputs. */
-private[graft] final class ValueMemo[V](name: String, maxEntries: Int = 64)
-    extends SessionMemo {
-
-  Memo.register(this)
+/** One session memo: the plan key, the LRU of `maxEntries` entries of
+  * type `E`, the builds / build time / hits counters and the stats row.
+  * Subclasses are storage policies; their hooks run on a dropped entry
+  * (evicted or invalidated), on the periodic sweep and at JVM exit. */
+private[graft] abstract class SessionMemo[E](name: String, maxEntries: Int) {
 
   private[graft] def memoName: String = name
 
-  private case class Key(session: String, plans: Seq[LogicalPlan], params: String)
+  private case class Key(session: String, plans: Seq[LogicalPlan],
+                         params: String)
 
-  private val cache =
-    new java.util.LinkedHashMap[Key, V](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, V]): Boolean = size() > maxEntries
+  private val entries =
+    new java.util.LinkedHashMap[Key, E](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, E]): Boolean = {
+        val evict = size() > maxEntries
+        if (evict) dropped(e.getValue)
+        evict
+      }
     }
 
   private[graft] val hits = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val builds = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val buildNanos = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def getOrCompute(inputs: Seq[DataFrame], params: String)(build: => V): V = {
-    require(inputs.nonEmpty, "memo needs at least one input frame")
-    val key = Key(Memo.sessionId(inputs.head.sparkSession),
-      inputs.map(_.queryExecution.analyzed.canonicalized), params)
-    synchronized { Option(cache.get(key)) } match {
-      case Some(v) => hits.incrementAndGet(); v
+  Memo.register(this)
+
+  /** The live entry keyed on (inputs, params), or `build`'s result
+    * stored under that key. Two concurrent first calls both build (same
+    * bits — the contract); the first stored entry wins and the loser is
+    * dropped. */
+  protected final def getOrBuild(inputs: Seq[DataFrame], params: String)
+                                (build: => E): E = {
+    val key = keyOf(inputs, params)
+    synchronized { Option(entries.get(key)) }.filter(live) match {
+      case Some(e) => hits.incrementAndGet(); e
       case None =>
         val t0 = java.lang.System.nanoTime()
-        val v = build
+        val e = build
         builds.incrementAndGet()
         buildNanos.addAndGet(java.lang.System.nanoTime() - t0)
         synchronized {
-          Option(cache.get(key)).getOrElse { cache.put(key, v); v }
+          Option(entries.get(key)).filter(live) match {
+            case Some(existing) => dropped(e); existing
+            case None => entries.put(key, e); e
+          }
         }
     }
   }
 
-  def invalidate(): Unit = synchronized { cache.clear() }
+  private def keyOf(inputs: Seq[DataFrame], params: String): Key = {
+    require(inputs.nonEmpty, "memo needs at least one input frame")
+    Key(Memo.sessionId(inputs.head.sparkSession),
+      inputs.map(df => SessionMemo.placementFree(df.queryExecution.analyzed)
+        .canonicalized),
+      params)
+  }
+
+  /** Whether a stored entry can still be served. */
+  protected def live(e: E): Boolean = true
+  protected def dropped(e: E): Unit = ()
+  private[analytics] def sweep(): Unit = ()
+  private[analytics] def purge(): Unit = ()
+
+  private[graft] def stats: Map[String, Double] = Map(
+    "builds" -> builds.get().toDouble,
+    "build_s" -> buildNanos.get() / 1e9,
+    "hits" -> hits.get().toDouble)
+
+  private[graft] def resetStats(): Unit = {
+    builds.set(0); buildNanos.set(0); hits.set(0)
+  }
+
+  /** Drop every entry (each through the [[dropped]] hook). */
+  def invalidate(): Unit = synchronized {
+    entries.values().asScala.foreach(dropped)
+    entries.clear()
+  }
 }
 
-/** One memo table: plan-keyed LRU of parquet-snapshot directories on
-  * the filesystem [[Memo.resolveRootUri]] selects (bypassing entirely
+private[analytics] object SessionMemo {
+
+  /** `plan` without the repartitions that change only placement: a
+    * Repartition / RepartitionByExpression reached from the root through
+    * deterministic Project and Filter nodes alone is dropped. Anything
+    * else (a Limit, Sample, join, aggregate, or a nondeterministic
+    * expression that sees partition layout) keeps its subtree as is. */
+  def placementFree(plan: LogicalPlan): LogicalPlan = plan match {
+    case r: Repartition => placementFree(r.child)
+    case r: RepartitionByExpression => placementFree(r.child)
+    case p @ (_: Project | _: Filter) if p.expressions.forall(_.deterministic) =>
+      p.withNewChildren(Seq(placementFree(p.children.head)))
+    case other => other
+  }
+}
+
+/** Plan-keyed LRU of DRIVER-SIDE values (trained centroid and logreg
+  * models, bounded dictionaries — anything model-sized that gates
+  * re-derive from the same inputs). The value lives on the driver, so
+  * unlike [[FrameMemo]] no snapshot lifecycle (and no placement dial)
+  * exists; the soundness contract is the same — the computing closure
+  * must be a deterministic function of the keyed inputs. */
+private[graft] final class ValueMemo[V](name: String, maxEntries: Int = 64)
+    extends SessionMemo[V](name, maxEntries) {
+
+  def getOrCompute(inputs: Seq[DataFrame], params: String)(build: => V): V =
+    getOrBuild(inputs, params)(build)
+}
+
+/** Plan-keyed LRU of parquet-snapshot directories on the filesystem
+  * [[Memo.resolveRootUri]] selects (handing back the materialized build
   * when a non-local master has no shared directory configured).
   * Eviction and invalidation CONDEMN directories; a sweep deletes them
-  * only after `spark.graft.memo.grace.ms`, so a lazily-planned frame
-  * handed out before the drop still reads its files. */
+  * only after [[Memo.graceMs]], so a lazily-planned frame handed out
+  * before the drop still reads its files. */
 private[graft] final class FrameMemo(name: String, maxEntries: Int = 32)
-    extends SessionMemo {
+    extends SessionMemo[FrameMemo.Snap](name, maxEntries) {
 
-  Memo.register(this)
-
-  private[graft] def memoName: String = name
-
-  private case class Key(session: String, plans: Seq[LogicalPlan], params: String)
-  private case class Snap(fs: FileSystem, dir: HPath)
-
-  private val cache =
-    new java.util.LinkedHashMap[Key, Snap](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, Snap]): Boolean = {
-        val evict = size() > maxEntries
-        if (evict) condemn(e.getValue)
-        evict
-      }
-    }
+  import FrameMemo.Snap
 
   // (snapshot, condemnedAt nanos) — deleted by sweep() once older than
   // the grace window, or unconditionally by purge() at JVM exit
   private val condemned =
     new java.util.concurrent.ConcurrentLinkedQueue[(Snap, Long)]()
 
-  private[graft] val hits = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val builds = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val buildNanos = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val bypasses = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Return the memoized frame for (inputs, params), computing and
     * snapshotting `build` on first use. `inputs` should be the MINIMAL
     * column projections the operator actually reads (so an unrelated
     * extra column on the caller's frame does not fragment the key).
-    * Feed LOGICAL plans, never checkpointed/materialized frames: a
-    * localCheckpoint leaf carries a fresh RDD identity per
-    * materialization, so such a key can never hit and re-snapshots on
-    * every call (file-backed reads and in-memory relations both
-    * canonicalize stably). */
+    * The result is a parquet scan or (bypass) a materialized frame:
+    * either way safe to read several times. */
   def getOrCompute(inputs: Seq[DataFrame], params: String)
                   (build: => DataFrame): DataFrame = {
-    require(inputs.nonEmpty, "memo needs at least one input frame")
     val spark = inputs.head.sparkSession
-    spark.conf.getOption("spark.graft.memo.grace.ms")
-      .flatMap(_.toLongOption).foreach(Memo.graceMs = _)
     sweep()
-    val rootUri = Memo.resolveRootUri(spark)
-    if (rootUri.isEmpty) {
-      // non-local master, no shared directory configured: a snapshot
-      // would be driver-local and unreadable (or partial) from the
-      // executors — compute the priced build path instead
-      bypasses.incrementAndGet()
-      return build
-    }
-    val key = Key(Memo.sessionId(spark),
-      inputs.map(_.queryExecution.analyzed.canonicalized), params)
-    val cached = synchronized { Option(cache.get(key)) }
-    cached match {
-      case Some(snap) if snap.fs.exists(snap.dir) =>
-        hits.incrementAndGet()
-        spark.read.parquet(snap.dir.toString)
-      case _ =>
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val root = new HPath(rootUri.get)
-        val fs = root.getFileSystem(hconf)
-        // session-scoped, collision-free leaf under the shared root;
-        // qualified so read/exists/delete address the FS the write used
-        val dir = fs.makeQualified(new HPath(root,
-          s"${Memo.sessionId(spark)}/${name}_" +
-            java.util.UUID.randomUUID().toString.take(12)))
-        val t0 = java.lang.System.nanoTime()
-        build.write.mode("overwrite").parquet(dir.toString)
-        builds.incrementAndGet()
-        buildNanos.addAndGet(java.lang.System.nanoTime() - t0)
-        val snap = Snap(fs, dir)
-        val winner = synchronized {
-          // two concurrent first calls both compute (same bits — the
-          // operators are deterministic); keep one snapshot
-          Option(cache.get(key)).filter(s => s.fs.exists(s.dir)) match {
-            case Some(existing) => condemn(snap); existing
-            case None => cache.put(key, snap); snap
-          }
+    Memo.resolveRootUri(spark) match {
+      case None =>
+        // non-local master, no shared directory configured: a snapshot
+        // would be driver-local and unreadable (or partial) from the
+        // executors — materialize the build instead, so the result is
+        // still safe to read several times
+        bypasses.incrementAndGet()
+        build.materialized()
+      case Some(rootUri) =>
+        val snap = getOrBuild(inputs, params) {
+          val root = new HPath(rootUri)
+          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // session-scoped, collision-free leaf under the shared root;
+          // qualified so read/exists/delete address the FS the write used
+          val dir = fs.makeQualified(new HPath(root,
+            s"${Memo.sessionId(spark)}/${name}_" +
+              java.util.UUID.randomUUID().toString.take(12)))
+          build.write.mode("overwrite").parquet(dir.toString)
+          Snap(fs, dir)
         }
-        spark.read.parquet(winner.dir.toString)
+        spark.read.parquet(snap.dir.toString)
     }
+  }
+
+  protected override def live(snap: Snap): Boolean = snap.fs.exists(snap.dir)
+
+  protected override def dropped(snap: Snap): Unit =
+    condemned.add((snap, java.lang.System.nanoTime()))
+
+  private[graft] override def stats: Map[String, Double] =
+    super.stats + ("bypasses" -> bypasses.get().toDouble)
+
+  private[graft] override def resetStats(): Unit = {
+    super.resetStats(); bypasses.set(0)
   }
 
   /** Drop every entry; directories are condemned (grace-deferred), not
     * deleted — an in-flight consumer planned before a publish keeps its
     * files until the grace window lapses. */
-  def invalidate(): Unit = {
-    synchronized {
-      cache.values().asScala.foreach(condemn)
-      cache.clear()
-    }
+  override def invalidate(): Unit = {
+    super.invalidate()
     sweep()
   }
-
-  private def condemn(snap: Snap): Unit =
-    condemned.add((snap, java.lang.System.nanoTime()))
 
   /** Delete condemned directories older than the grace window. Runs
     * inside getOrCompute/invalidate AND on [[Memo]]'s background tick,
     * so a traffic-less server still reaps. */
-  private[analytics] def sweep(): Unit = {
+  private[analytics] override def sweep(): Unit = {
     val cutoff = java.lang.System.nanoTime() - Memo.graceMs * 1000000L
     var head = condemned.peek()
     while (head != null && head._2 <= cutoff) {
@@ -400,7 +394,7 @@ private[graft] final class FrameMemo(name: String, maxEntries: Int = 32)
 
   /** JVM-exit cleanup: delete every snapshot this memo created — live
     * and condemned, no grace. */
-  private[graft] def purge(): Unit = {
+  private[analytics] override def purge(): Unit = {
     invalidate()
     var next = condemned.poll()
     while (next != null) { deleteDir(next._1); next = condemned.poll() }
@@ -409,4 +403,8 @@ private[graft] final class FrameMemo(name: String, maxEntries: Int = 32)
   private def deleteDir(snap: Snap): Unit =
     try snap.fs.delete(snap.dir, true)
     catch { case _: java.io.IOException => () }
+}
+
+private[graft] object FrameMemo {
+  private[graft] final case class Snap(fs: FileSystem, dir: HPath)
 }

@@ -284,74 +284,26 @@ object Selection {
   private def half6(v: Double): Double =
     BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Session-scoped memo of TRAINED logreg models. Training is fully
-    * deterministic (zero init, fixed iters, round-6 gradient exchange),
-    * so a (input-plan, label, hyperparams) key returns bit-identical
-    * weights to a retrain — consumers stay independently verifiable
-    * while a session that scores one model several ways (AUC, AP,
-    * calibration, artifact-score: seven catalog queries share two
-    * trainings) pays the 30-iteration recurrence once. Keys hold the
-    * CANONICALIZED analyzed plan (expr ids normalized, so two reads of
-    * the same table match) plus the per-session UUID from
-    * [[Memo.sessionId]] (a new session may see new data at the same
-    * path; never an identity hash, which can collide across session
-    * restarts). LRU-capped: model arrays are
-    * ~1.5 KB, 64 entries bound a long-lived serving session. */
-  private case class ModelKey(
-      session: String,
-      // the CANONICALIZED analyzed plan object of the training
-      // PROJECTION docs.select(id, text, label), compared by plan
-      // equality — NOT any string form: LocalRelation.toString prints
-      // only the schema (two in-memory inputs with equal schemas but
-      // different rows would string-collide), and label.toString
-      // collided for semantically different expressions that print
-      // identically (int vs long literal in the predicate) — folding
-      // the RESOLVED label expression into the keyed plan compares it
-      // structurally, types included
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      dim: Int, iters: Int, lr: Double)
+  /** Session memo of TRAINED logreg models (Memo.scala). Training is
+    * fully deterministic (zero init, fixed iters, round-6 gradient
+    * exchange), so a hit returns bit-identical weights to a retrain —
+    * consumers stay independently verifiable while a session that
+    * scores one model several ways (AUC, AP, calibration,
+    * artifact-score: seven catalog queries share two trainings) pays
+    * the 30-iteration recurrence once. Keyed on the training
+    * PROJECTION `docs.select(id, text, label)`: folding the RESOLVED
+    * label expression into the keyed plan compares it structurally,
+    * types included (an int vs long literal in the predicate prints
+    * identically but must not collide). Model arrays are ~1.5 KB; the
+    * default 64 entries bound a long-lived serving session. */
+  private[graft] val logregModels = new ValueMemo[Array[Double]]("logreg_models")
 
-  private val modelCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[ModelKey, Array[Double]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[ModelKey, Array[Double]]): Boolean =
-          size() > 64
-      })
-  private[graft] val modelCacheHits =
-    new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val modelCacheBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val modelCacheBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Time a training build for the bench artifact's `memos` map. */
-  private def timedFit(fit: => Array[Double]): Array[Double] = {
-    val t0 = java.lang.System.nanoTime()
-    val p = fit
-    modelCacheBuilds.incrementAndGet()
-    modelCacheBuildNanos.addAndGet(java.lang.System.nanoTime() - t0)
-    p
-  }
-
-  /** Drop every memoized model. The memo keys on the input PLAN, not
-    * file contents — immutable inputs per session (the lakehouse norm)
-    * make that sound, but a long-lived serving session that overwrites
-    * a path in place must invalidate (the moral equivalent of Spark's
-    * own `REFRESH TABLE`) before retraining picks up new data. The
-    * serving layer does this automatically: GraftServer.publishStaged
-    * calls [[Memo.invalidateAll]] (which includes this) on every
-    * dataset-publishing route, so a long-lived server never scores
-    * with weights trained on a path it has since overwritten. */
-  def invalidateModels(): Unit = modelCache.clear()
-
-  private def modelKey(docs: DataFrame, idCol: String, textCol: String,
-                       label: Column, dim: Int, iters: Int,
-                       lr: Double): ModelKey =
-    ModelKey(Memo.sessionId(docs.sparkSession),
-      docs.select(col(idCol), col(textCol), label.as("_graft_label"))
-        .queryExecution.analyzed.canonicalized,
-      dim, iters, lr)
+  private def memoModel(docs: DataFrame, idCol: String, textCol: String,
+                        label: Column, dim: Int, iters: Int, lr: Double)
+                       (fit: => Array[Double]): Array[Double] =
+    logregModels.getOrCompute(
+      Seq(docs.select(col(idCol), col(textCol), label.as("_graft_label"))),
+      s"dim=$dim,iters=$iters,lr=$lr")(fit)
 
   private def logregFit(feats: DataFrame, n: Double, dim: Int,
                         iters: Int, lr: Double): Array[Double] = {
@@ -416,18 +368,13 @@ object Selection {
                   lr: Double = 0.5): DataFrame = {
     val spark = docs0.sparkSession
     import spark.implicits._
-    val key = modelKey(docs0, idCol, textCol, label, dim, iters, lr)
-    val packed = Option(modelCache.get(key)).map { p =>
-      modelCacheHits.incrementAndGet(); p
-    }.getOrElse {
+    val packed = memoModel(docs0, idCol, textCol, label, dim, iters, lr) {
       val docs = Par.ensure(docs0)
       // train-only path: the sparse features feed ONLY the densifier,
       // which materializes its own (smaller) table — stream them
       val feats = logregFeatures(docs, idCol, textCol, label, dim,
         materialize = false)
-      val p = timedFit(logregFit(feats, docs.count().toDouble, dim, iters, lr))
-      modelCache.put(key, p)
-      p
+      logregFit(feats, docs.count().toDouble, dim, iters, lr)
     }
     val (w, mu, s) = (packed.take(dim + 1), packed.slice(dim + 1, 2 * dim + 1),
       packed.drop(2 * dim + 1))
@@ -521,21 +468,18 @@ object Selection {
                     label: Column, dim: Int = 64, iters: Int = 30,
                     lr: Double = 0.5): DataFrame = {
     val docs = Par.ensure(docs0)
-    val key = modelKey(docs0, idCol, textCol, label, dim, iters, lr)
-    val hit = Option(modelCache.get(key))
-    // cache hit: the feature table is consumed ONCE (scoring) — stream
-    // it instead of repartition+materialize; miss: the densifier and
-    // the final scoring margin both read it, so one tokenization
-    // (materialized) serves both
-    val feats = logregFeatures(docs, idCol, textCol, label, dim,
-      materialize = hit.isEmpty)
-    val packed = hit.map { p =>
-      modelCacheHits.incrementAndGet(); p
-    }.getOrElse {
-      val p = timedFit(logregFit(feats, docs.count().toDouble, dim, iters, lr))
-      modelCache.put(key, p)
-      p
+    // miss: the densifier and the final scoring margin both read the
+    // feature table, so one tokenization (materialized) serves both;
+    // hit: it is consumed ONCE (scoring) — stream it instead
+    var trainFeats: Option[DataFrame] = None
+    val packed = memoModel(docs0, idCol, textCol, label, dim, iters, lr) {
+      val f = logregFeatures(docs, idCol, textCol, label, dim,
+        materialize = true)
+      trainFeats = Some(f)
+      logregFit(f, docs.count().toDouble, dim, iters, lr)
     }
+    val feats = trainFeats.getOrElse(logregFeatures(docs, idCol, textCol,
+      label, dim, materialize = false))
     val w = packed.take(dim + 1)
     val mu = packed.slice(dim + 1, 2 * dim + 1) :+ 0.0
     val s = packed.drop(2 * dim + 1) :+ 1.0

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.Pipeline
+import graft.{Json, Pipeline}
 import graft.sources.{PathGuard, XmlSource}
 
 /** The serving shim: binds the reference's 24 HTTP routes
@@ -171,16 +171,16 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
       val published = dataDir.resolve(name)
       returnUrl.filter(_.nonEmpty).foreach { cb =>
         val body =
-          s"""{"file_url": ${jsonStr(published.toString)}, """ +
-            s""""preset_id": ${jsonStr(targetNode)}, "status": "completed"}"""
+          s"""{"file_url": ${Json.str(published.toString)}, """ +
+            s""""preset_id": ${Json.str(targetNode)}, "status": "completed"}"""
         try graft.sources.HttpFetch.postJson(cb, body)
         catch { case e: Exception =>
           System.err.println(s"[serve] callback error: ${e.getMessage}")
         }
       }
       respondJson(ex, 200,
-        s"""{"file_url": ${jsonStr(downloadUrl(published))}, """ +
-          s""""preset_id": ${jsonStr(presetId)}, "status": "completed"}""")
+        s"""{"file_url": ${Json.str(downloadUrl(published))}, """ +
+          s""""preset_id": ${Json.str(presetId)}, "status": "completed"}""")
     } finally {
       val walk = Files.walk(stage)
       val all = try walk.iterator().asScala.toSeq finally walk.close()
@@ -193,7 +193,7 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
   route("/status/", ex => handled(ex) {
     val presetId = ex.getRequestURI.getPath.stripPrefix("/status/")
     respondJson(ex, 200,
-      s"""{"status": "completed", "preset_id": ${jsonStr(presetId)}}""")
+      s"""{"status": "completed", "preset_id": ${Json.str(presetId)}}""")
   })
 
   route("/download/data_files/", ex => handled(ex) {
@@ -247,7 +247,7 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
     * must not escape into the dispatcher. */
   private def handled(ex: HttpExchange)(body: => Unit): Unit = {
     def tryRespond(code: Int, detail: String): Unit =
-      try respondJson(ex, code, s"""{"detail": ${jsonStr(detail)}}""")
+      try respondJson(ex, code, s"""{"detail": ${Json.str(detail)}}""")
       catch { case _: java.io.IOException => }
     try body
     catch {
@@ -308,9 +308,9 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
         val name = out.getFileName.toString
         publishStaged(stage)
         respondJson(ex, 200,
-          s"""{"file_url": ${jsonStr(
+          s"""{"file_url": ${Json.str(
             downloadUrl(dataDir.resolve(name)))}, """ +
-            s""""status": "completed", "filename": ${jsonStr(name)}}""")
+            s""""status": "completed", "filename": ${Json.str(name)}}""")
       } finally {
         for (d <- Seq(tmpDir, stage)) {
           val walk = Files.walk(d)
@@ -358,9 +358,9 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
     // equivalent, so a long-lived server never serves results derived
     // from replaced data. Safe under concurrency: invalidation only
     // CONDEMNS snapshot directories — a query planned before this
-    // publish keeps scanning its files until the grace window
-    // (spark.graft.memo.grace.ms) lapses, so no in-flight reader loses
-    // its snapshot mid-scan (MemoSpec pins this).
+    // publish keeps scanning its files until the 15-minute grace
+    // window (Memo.graceMs) lapses, so no in-flight reader loses its
+    // snapshot mid-scan (MemoSpec pins this).
     if (staged.nonEmpty) graft.analytics.Memo.invalidateAll()
   }
 
@@ -455,17 +455,6 @@ object GraftServer {
       sb.toString
     }
   }
-
-  private[serve] def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private val IndexHtml =
     """<!doctype html><html><head><title>graft</title></head><body>

@@ -20,10 +20,4 @@ class HarnessSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"entry $bad"), e.getMessage)
     }
   }
-
-  test("json escapes quotes, backslashes and every control char") {
-    assert(Harness.json("q\"1\\\n\t\u0001") ===
-      "\"q\\\"1\\\\\\n\\t\\u0001\"")
-    assert(Harness.json("plain_q01") === "\"plain_q01\"")
-  }
 }

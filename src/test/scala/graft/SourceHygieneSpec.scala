@@ -16,6 +16,10 @@ import scala.jdk.CollectionConverters._
   *  - every driver-vs-distributed size decision routes through Par.gate
   *    (one conf namespace, one size arithmetic, one decision record) —
   *    a hand-rolled conf read elsewhere is a gate nobody can see;
+  *  - every session cache is a Memo.scala memo (one key, one stats
+  *    row, one invalidateAll) and no operator branches on where
+  *    snapshots live — a hand-rolled LRU elsewhere is a cache the
+  *    bench, the publish path and the key rules cannot see;
   *  - no raw control bytes in source: grep classifies such a file as
   *    BINARY and every text-based audit sweep (leak checks included)
   *    silently skips it (found live: a NUL literal in Excel.scala);
@@ -57,6 +61,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       if text.contains(name)
     } yield s"$p: $name"
     assert(retired.isEmpty, s"retired gate names in main source: $retired")
+  }
+
+  test("one session-memo facility: outside Memo.scala no main source " +
+       "defines an LRU, and only PartFiles reads snapshot placement") {
+    def hits(files: Seq[Path], pats: String*): Seq[String] = for {
+      p <- files
+      (l, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if pats.exists(l.contains)
+    } yield s"$p:${i + 1}"
+    val outside = mainSources.filterNot(_.endsWith("Memo.scala"))
+    val bad = hits(outside, "removeEldestEntry") ++
+      hits(outside.filterNot(_.endsWith("PartFiles.scala")),
+        "snapshotsActive", "resolveRootUri")
+    assert(bad.isEmpty, "cache through a FrameMemo or ValueMemo, whose " +
+      s"results are safe to read repeatedly wherever snapshots live: $bad")
   }
 
   test("no raw control bytes in main source (audit sweeps must see " +

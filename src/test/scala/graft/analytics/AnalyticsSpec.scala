@@ -465,6 +465,21 @@ class DedupSpec extends SparkTestBase {
     // bucket floor(1.0*8) caps to 7, every error statistic exactly 0
     assert(got.toSeq === Seq((7, 2L, 0.0, 0.0, 0.0)))
   }
+
+  test("minhashCalibration rejects a reused doc id, naming it, instead " +
+       "of silently pairing the extra row's text into the statistics") {
+    import spark.implicits._
+    val base = (1 to 40).map { i =>
+      (i.toLong, s"alpha beta gamma ${i % 8} delta epsilon zeta " +
+        s"w${i % 5} w${i % 3} tail tokens")
+    }
+    // one more row under id 3, carrying doc 10's text
+    val docs = (base :+ (3L -> base(9)._2)).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      Dedup.minhashCalibration(docs, "doc_id", "text").collect())
+    assert(e.getMessage.contains("doc_id") &&
+      e.getMessage.contains("3 appears more than once"), e.getMessage)
+  }
 }
 
 class SimilaritySpec extends SparkTestBase {

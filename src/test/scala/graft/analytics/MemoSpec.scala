@@ -289,6 +289,49 @@ class MemoSpec extends SparkTestBase {
       Dedup.sigsMemo.hits.get() > sgHits0)
   }
 
+  test("a q115-shaped call after a q90-shaped call on a 1-partition " +
+       "corpus adds no minhash_estimate, minhash_sigs or doc_shingles " +
+       "build (crossGroupNearDupMatrix keys its Par.ensure'd frame)") {
+    val d = docs("q115").repartition(1)
+      .withColumn("grp", (col("doc_id") % 3).cast("string"))
+    Memo.invalidateAll()
+    Dedup.minhashJaccardEstimate(d, "doc_id", "text", minEstimate = 0.5)
+      .count()
+    val memos = Seq(Dedup.estimateMemo, Dedup.sigsMemo, Dedup.shingleMemo)
+    val before = memos.map(_.builds.get())
+    Dedup.crossGroupNearDupMatrix(d, "doc_id", "text", "grp",
+      minEstimate = 0.5).count()
+    assert(memos.map(_.builds.get()).zip(before).map(x => x._1 - x._2)
+      === Seq(0L, 0L, 0L),
+      "the q115 call must reuse the q90 call's snapshots")
+  }
+
+  test("key: a raw frame, its Par.ensure form and its .repartition(7) " +
+       "form share one entry; a repartition under a Limit, or under a " +
+       "nondeterministic column, keys apart") {
+    val raw = spark.range(0, 80, 1, 1)
+      .select($"id".as("doc_id"), concat(lit("doc "), $"id").as("text"))
+    val ensured = Par.ensure(raw)
+    assert(!(ensured eq raw), "Par.ensure must repartition a 1-partition frame")
+    val memo = new FrameMemo("placementkey")
+    var builds = 0
+    def call(df: org.apache.spark.sql.DataFrame) =
+      memo.getOrCompute(Seq(df.select($"doc_id", $"text")), "p") {
+        builds += 1
+        df.select($"doc_id")
+      }
+    call(raw); call(ensured); call(raw.repartition(7))
+    assert(builds == 1 && memo.hits.get() == 2,
+      "placement-only repartitions must not fragment the key")
+    call(raw.limit(5)); call(raw.repartition(3).limit(5))
+    assert(builds == 3,
+      "repartition(3).limit(5) picks other rows than limit(5)")
+    call(raw.withColumn("r", rand(1)))
+    call(raw.repartition(3).withColumn("r", rand(1)))
+    assert(builds == 5,
+      "a nondeterministic column sees the partition layout")
+  }
+
   test("eviction past maxEntries CONDEMNS, never deletes under a " +
        "reader: an earlier handed-out lazy frame still reads correctly " +
        "inside the grace window") {
@@ -437,18 +480,18 @@ class MemoSpec extends SparkTestBase {
     // model memo side: train twice, second must hit
     val label = col("doc_id") % 2 === 0
     Selection.logregTrain(d, "doc_id", "text", label, dim = 8, iters = 2)
-    val mHits = Selection.modelCacheHits.get()
+    val mHits = Selection.logregModels.hits.get()
     Selection.logregTrain(d, "doc_id", "text", label, dim = 8, iters = 2)
-    assert(Selection.modelCacheHits.get() == mHits + 1)
+    assert(Selection.logregModels.hits.get() == mHits + 1)
     Memo.invalidateAll()
     // frames: same key now recomputes into a NEW snapshot
     val c2 = Dedup.minhashCandidatePairs(d, "doc_id", "text")
     assert(!c2.inputFiles.toSeq.sorted.sameElements(files1.sorted),
       "invalidateAll must drop the frame snapshot")
     // models: same key now retrains (no new hit)
-    val mHits2 = Selection.modelCacheHits.get()
+    val mHits2 = Selection.logregModels.hits.get()
     Selection.logregTrain(d, "doc_id", "text", label, dim = 8, iters = 2)
-    assert(Selection.modelCacheHits.get() == mHits2,
+    assert(Selection.logregModels.hits.get() == mHits2,
       "invalidateAll must drop trained models")
   }
 }

@@ -270,23 +270,23 @@ class SelectionSpec extends SparkTestBase {
     val first = Selection.logregQuality(docs, "doc_id", "text",
         col("y") === 1, dim = 32, iters = 7)
       .orderBy("id").collect().map(_.toString).toSeq
-    val before = Selection.modelCacheHits.get()
+    val before = Selection.logregModels.hits.get()
     val second = Selection.logregQuality(docs, "doc_id", "text",
         col("y") === 1, dim = 32, iters = 7)
       .orderBy("id").collect().map(_.toString).toSeq
-    assert(Selection.modelCacheHits.get() == before + 1,
+    assert(Selection.logregModels.hits.get() == before + 1,
       "second identical consumer must hit the model cache")
     assert(second == first, "cached model must score bit-identically")
     // a train-consumer with the same key rides the same memo
     val model = Selection.logregTrain(docs, "doc_id", "text",
       col("y") === 1, dim = 32, iters = 7)
-    assert(Selection.modelCacheHits.get() == before + 2,
+    assert(Selection.logregModels.hits.get() == before + 2,
       "logregTrain with the same key must also hit")
     assert(model.count() == 33)
     // different hyperparams miss: the key carries them
     Selection.logregQuality(docs, "doc_id", "text",
       col("y") === 1, dim = 32, iters = 8).collect()
-    assert(Selection.modelCacheHits.get() == before + 2,
+    assert(Selection.logregModels.hits.get() == before + 2,
       "a different iteration count must be a cache miss")
     // the label keys on its RESOLVED expression, not its string form:
     // an int- vs long-literal predicate prints identically ("(y = 1)")
@@ -294,15 +294,15 @@ class SelectionSpec extends SparkTestBase {
     // it must MISS, never collide
     Selection.logregQuality(docs, "doc_id", "text",
       col("y") === 1L, dim = 32, iters = 7).collect()
-    assert(Selection.modelCacheHits.get() == before + 2,
+    assert(Selection.logregModels.hits.get() == before + 2,
       "a structurally different label must be a cache miss")
     // explicit invalidation (the in-place-overwrite escape hatch)
     // forces the next identical consumer to retrain
-    Selection.invalidateModels()
+    Selection.logregModels.invalidate()
     Selection.logregQuality(docs, "doc_id", "text",
       col("y") === 1, dim = 32, iters = 7).collect()
-    assert(Selection.modelCacheHits.get() == before + 2,
-      "invalidateModels must clear the memo")
+    assert(Selection.logregModels.hits.get() == before + 2,
+      "invalidate must clear the memo")
   }
 
   test("woeBuckets: a perfectly separating feature posts symmetric " +

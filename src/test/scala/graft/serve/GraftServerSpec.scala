@@ -432,9 +432,9 @@ class GraftServerSpec extends SparkTestBase {
         spark.read.parquet(path), "doc_id", "text",
         col("doc_id") % 2 === 0, dim = 16, iters = 3).count()
       train()
-      val hits = graft.analytics.Selection.modelCacheHits.get()
+      val hits = graft.analytics.Selection.logregModels.hits.get()
       train()
-      assert(graft.analytics.Selection.modelCacheHits.get() == hits + 1,
+      assert(graft.analytics.Selection.logregModels.hits.get() == hits + 1,
         "second identical training must hit the model memo")
       // the server publishes (a route just overwrote data in dataDir)
       val stage = Files.createTempDirectory(dataDir, ".stage_")
@@ -442,9 +442,9 @@ class GraftServerSpec extends SparkTestBase {
       srv.publishStaged(stage)
       // the next identical training must MISS — fresh weights, not the
       // memo entry keyed on the pre-publish read
-      val hits2 = graft.analytics.Selection.modelCacheHits.get()
+      val hits2 = graft.analytics.Selection.logregModels.hits.get()
       train()
-      assert(graft.analytics.Selection.modelCacheHits.get() == hits2,
+      assert(graft.analytics.Selection.logregModels.hits.get() == hits2,
         "publish must invalidate the model memo (stale-weight guard)")
     } finally {
       srv.stop()
