@@ -37,15 +37,6 @@ private[graft] object Harness {
     spark.sharedState.cacheManager.clearCache()
   }
 
-  /** Delete a file tree if it exists, children before parents. */
-  def deleteTree(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
-
   /** Size-gate decisions since the last `Par.resetGateStats`, as a JSON
     * object over the gates that decided, e.g.
     * `{"cumsum":{"distributed":1,"local":2}}`. */

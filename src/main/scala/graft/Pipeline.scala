@@ -61,13 +61,6 @@ object Pipeline {
     (flat, scrubTmp)
   }
 
-  /** [[processXmlDataTracked]] for callers that keep the DataFrame: any
-    * scrubbed temp copy survives until JVM exit (deleteOnExit backstop in
-    * XmlSource.scrubbedIfNeeded). */
-  def processXmlData(spark: SparkSession, path: String,
-                     targetNode: String = "auto"): DataFrame =
-    processXmlDataTracked(spark, path, targetNode)._1
-
   /** Entry point 1 tail: flatten -> prune -> sorted ; CSV with BOM
     * (main.py:1540-1582). Returns the written path. */
   def processXmlFileToCsv(spark: SparkSession, inPath: String, outDir: String,
@@ -82,11 +75,8 @@ object Pipeline {
   }
 
   /** Entry point: URL fetch -> XML pipeline (main.py:1586-1741 + 1384).
-    * When `returnUrl` is set, the completion webhook POSTs
-    * `{"file_url", "preset_id", "status": "completed"}` to it once the
-    * CSV is written (main.py:2303-2310); a failed callback never fails
-    * the conversion — the reference logs and returns the result, so the
-    * POST here is best-effort the same way. */
+    * When `returnUrl` is set, the [[postCompletion]] webhook fires once
+    * the CSV is written. */
   def processLink(spark: SparkSession, url: String, outDir: String,
                   targetNode: String = "auto",
                   returnUrl: Option[String] = None): Path = {
@@ -97,18 +87,25 @@ object Pipeline {
         val out = Paths.get(outDir, Filenames.csvNameFor(url))
         Files.createDirectories(out.getParent)
         CsvSink.writeSingleFile(CsvSink.exportColumns(flat), out.toString)
-        returnUrl.foreach { cb =>
-          val body =
-            s"""{"file_url": ${Json.str(out.toString)}, """ +
-              s""""preset_id": ${Json.str(targetNode)}, "status": "completed"}"""
-          try HttpFetch.postJson(cb, body)
-          catch { case e: Exception =>
-            System.err.println(s"[pipeline] callback error: ${e.getMessage}")
-          }
-        }
+        returnUrl.foreach(postCompletion(_, out, targetNode))
         out
       } finally scrubTmp.foreach(Files.deleteIfExists(_))
     } finally Files.deleteIfExists(tmp) // a feed-sized temp per call
+  }
+
+  /** The completion webhook (main.py:2303-2310): POSTs
+    * `{"file_url", "preset_id", "status": "completed"}` to `callbackUrl`.
+    * A failed callback never fails the conversion — the reference logs
+    * and returns the result, so the POST is best-effort the same way. */
+  private[graft] def postCompletion(callbackUrl: String, file: Path,
+                                    presetId: String): Unit = {
+    val body =
+      s"""{"file_url": ${Json.str(file.toString)}, """ +
+        s""""preset_id": ${Json.str(presetId)}, "status": "completed"}"""
+    try HttpFetch.postJson(callbackUrl, body)
+    catch { case e: Exception =>
+      System.err.println(s"[pipeline] callback error: ${e.getMessage}")
+    }
   }
 
   /** POST /process_file dispatch by extension (main.py:1803-1812). */

@@ -2,6 +2,7 @@ package graft
 
 import graft.analytics.{Cluster, Events, Graph, Memo, Par, Similarity, Stats}
 import graft.queries.{Catalog, Tables}
+import graft.sources.FileTree
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -241,9 +242,9 @@ object ScaleBench {
         println(s"""{"k":$k,"cpus":$cpus,"query":${Json.str(name)},$fields,"gates":${Harness.gatesJson()},"sf":${Json.str(sfDir)}}""")
       }
       Memo.invalidateAll()
-      Harness.deleteTree(tmp.resolve(s"x$k"))
+      FileTree.delete(tmp.resolve(s"x$k"))
     }
-    Harness.deleteTree(tmp)
+    FileTree.delete(tmp)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.FileTree
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,7 +26,7 @@ object Verify {
         // PASS for a now-broken query
         // the scrub itself must not abort the loop: a still-flushing
         // failed task can recreate files between walk and delete
-        try Harness.deleteTree(Paths.get(s"$outDir/$name"))
+        try FileTree.delete(Paths.get(s"$outDir/$name"))
         catch { case e2: Throwable =>
           System.err.println(s"[verify] $name stale-scrub failed: ${e2.getMessage}")
         }

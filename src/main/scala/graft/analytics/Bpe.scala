@@ -67,8 +67,8 @@ object Bpe {
     *
     * TWO-TIER TRAINING (the [[graft.engine.CategoryPath]] precedent):
     * the word-frequency table is vocab-sized by construction — distinct
-    * words, not corpus tokens — so once it fits the driver
-    * (≤ `localVocabThreshold` rows) the merge loop runs DRIVER-LOCAL
+    * words, not corpus tokens — so once it fits the driver (the `bpe`
+    * gate, [[Par.gate]], over its rows) the merge loop runs DRIVER-LOCAL
     * with incremental pair-count bookkeeping (the subword-nmt
     * algorithm: only words containing the merged pair are touched, a
     * tree-ordered pair index serves argmax in O(log P)). Only the
@@ -77,48 +77,32 @@ object Bpe {
     * 32k–50k-merge tokenizer trainable: the distributed tier costs one
     * driver-synchronized pair-count job PER MERGE — 50k sequential
     * Spark rounds — where the local tier's whole loop is seconds of
-    * driver CPU on the same table. The distributed tier
-    * (`localVocabThreshold = 0`) remains for vocabularies too large to
+    * driver CPU on the same table. The distributed tier (forced by
+    * `spark.graft.gate.bpe=0`) remains for vocabularies too large to
     * collect; both tiers step through bit-identical merges (tie order
     * count desc, pair asc — spec-pinned parity). */
-  def train(docs: DataFrame, textCol: String, numMerges: Int,
-            localVocabThreshold: Int = 2000000): (DataFrame, DataFrame) = {
+  def train(docs: DataFrame, textCol: String,
+            numMerges: Int): (DataFrame, DataFrame) = {
     require(numMerges >= 1, "numMerges must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    // the ONE corpus scan, materialized — both the tier probe and
-    // whichever tier trains read the checkpointed vocab table, never the
-    // raw corpus again
+    // the ONE corpus scan, materialized — the gate's count and whichever
+    // tier trains read the checkpointed vocab table, never the raw
+    // corpus again
     val vocab = wordTable(docs, textCol).materialized()
-    if (localVocabThreshold > 0) {
-      // tier probe off the checkpoint: collect at most threshold+1 rows;
-      // spilling past the cap falls through to the distributed tier
-      // without materializing more than the cap on the driver
-      val probe = vocab.select($"w", $"f")
-        .limit(localVocabThreshold + 1).collect()
-      if (probe.length <= localVocabThreshold) {
-        val words = probe.map(r => (r.getString(0), r.getLong(1)))
-        val (merges, finalSyms) = localTrain(words, numMerges)
-        val mergeDf = spark.createDataFrame(merges)
-          .toDF("rank", "left_sym", "right_sym", "pair_count")
-        val vocabDf = spark.createDataFrame(
-            words.toIndexedSeq.zip(finalSyms.toIndexedSeq).map {
-              case ((w, f), syms) => (w, f, syms.length)
-            })
-          .toDF("w", "f", "n_tokens")
-        return (mergeDf, vocabDf)
-      }
-    }
-    trainOnTable(vocab, numMerges)
-  }
-
-  /** The distributed merge loop from raw docs — spec surface for tier
-    * parity; [[train]] itself routes through [[trainOnTable]] so the
-    * fall-through never re-scans the corpus. */
-  private[analytics] def trainDistributed(docs: DataFrame, textCol: String,
-      numMerges: Int): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    trainOnTable(wordTable(docs, textCol).materialized(), numMerges)
+    if (Par.gate(spark, "bpe", vocab.count())) {
+      val words = vocab.select($"w", $"f").collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      val (merges, finalSyms) = localTrain(words, numMerges)
+      val mergeDf = spark.createDataFrame(merges)
+        .toDF("rank", "left_sym", "right_sym", "pair_count")
+      val vocabDf = spark.createDataFrame(
+          words.toIndexedSeq.zip(finalSyms.toIndexedSeq).map {
+            case ((w, f), syms) => (w, f, syms.length)
+          })
+        .toDF("w", "f", "n_tokens")
+      (mergeDf, vocabDf)
+    } else trainOnTable(vocab, numMerges)
   }
 
   /** The distributed merge loop over an already-materialized `(w, f, s)`

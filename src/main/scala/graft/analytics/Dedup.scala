@@ -1131,10 +1131,11 @@ object Dedup {
   /** Connected components over candidate duplicate pairs — the final stage
     * of the near-dup pipeline: LSH/Jaccard emit PAIRS, but dedup decisions
     * need CLUSTERS (a~b, b~c => {a,b,c} keep one). Two physical tiers, same
-    * semantics: driver union-find when the pair set fits in memory (the
-    * common case after LSH bucket capping), else iterative min-label
-    * propagation — every node starts labeled with itself; each round pushes
-    * the smaller label across every edge until fixpoint.
+    * semantics, chosen by the `graph` gate ([[Par.gate]]) over the
+    * materialized pair rows: driver union-find when the pair set fits in
+    * memory (the common case after LSH bucket capping), else iterative
+    * min-label propagation — every node starts labeled with itself; each
+    * round pushes the smaller label across every edge until fixpoint.
     *
     * Scale shape: per round, one join of edges against the label set (both
     * keyed by node id) + one min-aggregate — linear in |E| per round, and
@@ -1150,19 +1151,16 @@ object Dedup {
     *         component = min doc id reachable. Callers left-join docs and
     *         coalesce to the doc's own id for singletons.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          localMaxPairs: Long = 1000000L): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // candidate sets after LSH capping are usually driver-sized: a local
     // union-find is one collect instead of ~4 jobs per diameter round.
-    // Probe with limit+count (never scans past the threshold); huge pair
-    // sets take the distributed propagation below. The pair plan is often
-    // the whole shingle->MinHash->LSH pipeline — materialize it ONCE so the
-    // probe, the collect/propagation, and any caller join-back all read the
-    // checkpointed blocks instead of recomputing the pipeline.
+    // The pair plan is often the whole shingle->MinHash->LSH pipeline —
+    // materialize it ONCE so the gate's count, the collect/propagation,
+    // and any caller join-back all read the checkpointed blocks instead
+    // of recomputing the pipeline.
     val p = pairs.materialized()
-    val small =
-      p.limit((localMaxPairs + 1).toInt).count() <= localMaxPairs
-    if (small) connectedComponentsLocal(p)
+    if (Par.gate(p.sparkSession, "graph", p.count()))
+      connectedComponentsLocal(p)
     else connectedComponentsIterative(p, maxIter)
   }
 
@@ -1200,7 +1198,7 @@ object Dedup {
   }
 
   /** Distributed min-label propagation — the no-collect path. */
-  private[analytics] def connectedComponentsIterative(
+  private def connectedComponentsIterative(
       pairs: DataFrame, maxIter: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._

@@ -127,7 +127,7 @@ object Par {
   /** Default threshold and (local, distributed) decision counts per gate. */
   private val gates: Map[String, (Long, AtomicLong, AtomicLong)] =
     Seq("graph" -> 500000L, "bt" -> 200000L, "mmr" -> 2000000L,
-      "cumsum" -> 4000000L)
+      "cumsum" -> 4000000L, "bpe" -> 2000000L)
       .map { case (n, d) => n -> (d, new AtomicLong, new AtomicLong) }.toMap
 
   /** The one driver-vs-distributed decision: true (take the LOCAL branch
@@ -143,12 +143,18 @@ object Par {
     * gate    conf key                 default  size counted
     * graph   spark.graft.gate.graph   500000   pageRank: canonical edge rows;
     *                                           kCore, labelPropagation:
-    *                                           non-loop edge rows
+    *                                           non-loop edge rows;
+    *                                           CategoryPath.resolveSegs:
+    *                                           dimension rows;
+    *                                           connectedComponents:
+    *                                           materialized pair rows
     * bt      spark.graft.gate.bt      200000   bradleyTerry match-table rows
     * mmr     spark.graft.gate.mmr     2000000  mmrRerankFrom shortlist rows
     *                                           + Σ per-qid candidates²
     * cumsum  spark.graft.gate.cumsum  4000000  gridCumSum grid rows (exact
     *                                           or the caller's estimate)
+    * bpe     spark.graft.gate.bpe     2000000  Bpe.train materialized vocab
+    *                                           rows
     * }}}
     * Type and null guards stay at the call sites: labelPropagation and
     * mmrRerankFrom ask only for orderable ids, and an mmr shortlist

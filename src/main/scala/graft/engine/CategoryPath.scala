@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.analytics.Par
 import graft.analytics.Par.Mat
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,23 +37,22 @@ object CategoryPath {
     * callers that post-filter segments (the reference's YML walk skips
     * 'Undefined'-named categories, main.py:1498-1501).
     *
-    * Two physical strategies, same semantics:
+    * Two physical strategies, same semantics, chosen by the `graph` gate
+    * ([[Par.gate]]) over the dimension's row count:
     *  - dimension fits in driver memory (the common case — any path set
     *    that will be broadcast-joined to facts must fit in memory anyway):
     *    collect the parent-pointer maps and walk on the driver, exactly the
     *    reference's two-hash-map walk (main.py:1477-1507). One tiny collect
-    *    job instead of ~2 jobs per hierarchy level.
+    *    job instead of ~2 jobs per hierarchy level. The result is a local
+    *    relation: its exact size estimate is what lets
+    *    `XmlSource.categoryPaths`'s unhinted join broadcast.
     *  - larger hierarchies: iterative broadcast self-join to fixpoint
     *    (bounded by maxDepth), never collecting the dimension.
     */
-  def resolveSegs(edges: DataFrame, maxDepth: Int = 20,
-                  localWalkMaxRows: Long = 1000000L): DataFrame = {
-    // probe with limit+count: never scans more than the threshold + 1 rows
-    val small =
-      edges.limit((localWalkMaxRows + 1).toInt).count() <= localWalkMaxRows
-    if (small) resolveSegsLocal(edges, maxDepth)
+  def resolveSegs(edges: DataFrame, maxDepth: Int = 20): DataFrame =
+    if (Par.gate(edges.sparkSession, "graph", edges.count()))
+      resolveSegsLocal(edges, maxDepth)
     else resolveSegsIterative(edges, maxDepth)
-  }
 
   /** Driver-side walk over collected parent-pointer maps (small dimensions).
     * Semantics identical to [[resolveSegsIterative]]: root-first segments,
@@ -91,8 +91,8 @@ object CategoryPath {
 
   /** Iterative broadcast self-join to fixpoint — the no-collect path for
     * hierarchies too large to hold on the driver. */
-  private[engine] def resolveSegsIterative(edges: DataFrame,
-                                           maxDepth: Int): DataFrame = {
+  private def resolveSegsIterative(edges: DataFrame,
+                                   maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 

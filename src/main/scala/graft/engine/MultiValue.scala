@@ -36,13 +36,7 @@ object MultiValue {
   def paramConcat(value: Column): Column =
     array_join(array_sort(collect_list(value)), ", ")
 
-  /** A3 image set-union + sort (main.py:200-244): distinct, sorted,
-    * `///`-joined — the reference uses a Python set + `sorted()`. */
-  def imageSet(url: Column): Column =
-    array_join(array_sort(array_distinct(collect_list(url))), Sep)
-
-  /** A4 stock sum + availability flag (main.py:348-365). */
-  def stockTotal(qty: Column): Column = sum(qty)
+  /** A4 availability flag over a stock total (main.py:348-365). */
   def availableFlag(totalQty: Column): Column =
     when(totalQty > 0, lit("1")).otherwise(lit("0"))
 

@@ -3031,15 +3031,7 @@ object AnalyticsQueries {
           // logregScore COLLECTS the 65-row model eagerly, so the lazy
           // scored plan no longer references the parquet — safe to
           // delete now rather than leak one model dir per invocation
-          val walk = java.nio.file.Files.walk(modelDir)
-          val all =
-            try {
-              val buf = Seq.newBuilder[java.nio.file.Path]
-              val it = walk.iterator()
-              while (it.hasNext) buf += it.next()
-              buf.result()
-            } finally walk.close()
-          all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+          graft.sources.FileTree.delete(modelDir)
         }
       }),
 

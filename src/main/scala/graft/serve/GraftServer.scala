@@ -10,7 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.{Json, Pipeline}
-import graft.sources.{PathGuard, XmlSource}
+import graft.sources.{FileTree, PathGuard, XmlSource}
 
 /** The serving shim: binds the reference's 24 HTTP routes
   * (main.py:1744–2331, client routing static/js/main.js:265–288) over
@@ -169,23 +169,11 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
       val name = out.getFileName.toString
       publishStaged(stage)
       val published = dataDir.resolve(name)
-      returnUrl.filter(_.nonEmpty).foreach { cb =>
-        val body =
-          s"""{"file_url": ${Json.str(published.toString)}, """ +
-            s""""preset_id": ${Json.str(targetNode)}, "status": "completed"}"""
-        try graft.sources.HttpFetch.postJson(cb, body)
-        catch { case e: Exception =>
-          System.err.println(s"[serve] callback error: ${e.getMessage}")
-        }
-      }
+      returnUrl.foreach(Pipeline.postCompletion(_, published, targetNode))
       respondJson(ex, 200,
         s"""{"file_url": ${Json.str(downloadUrl(published))}, """ +
           s""""preset_id": ${Json.str(presetId)}, "status": "completed"}""")
-    } finally {
-      val walk = Files.walk(stage)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.reverse.foreach(Files.deleteIfExists(_))
-    }
+    } finally FileTree.delete(stage)
   })
 
   // main.py:2321 returns a hardcoded completed body; mirror its shape
@@ -311,13 +299,7 @@ final class GraftServer(spark: SparkSession, dataDir: Path,
           s"""{"file_url": ${Json.str(
             downloadUrl(dataDir.resolve(name)))}, """ +
             s""""status": "completed", "filename": ${Json.str(name)}}""")
-      } finally {
-        for (d <- Seq(tmpDir, stage)) {
-          val walk = Files.walk(d)
-          val all = try walk.iterator().asScala.toSeq finally walk.close()
-          all.reverse.foreach(Files.deleteIfExists(_))
-        }
-      }
+      } finally Seq(tmpDir, stage).foreach(FileTree.delete)
     }
 
   /** Atomically publish every file a conversion staged: rename into

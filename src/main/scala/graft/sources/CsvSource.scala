@@ -50,8 +50,6 @@ object CsvSource {
     (sniffDelimiter(text.linesIterator.nextOption().getOrElse("")), charset)
   }
 
-  def sniffFile(path: String): String = sniffFileWithCharset(path)._1
-
   /** Distributed header'd read, all-string schema, BOM-tolerant.
     * escape=`"` matches the RFC-4180 `""` doubling our sinks (and the
     * reference's csv module) write — Spark's default escape is `\`, which

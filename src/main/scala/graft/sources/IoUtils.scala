@@ -22,6 +22,19 @@ object PathGuard {
   }
 }
 
+/** Local file trees: staging, scratch and dump directories. */
+object FileTree {
+
+  /** Delete a file tree if it exists, children before parents. */
+  def delete(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+}
+
 /** S4 — charset-fallback decode (reference main.py:1787-1797, repeated at
   * five call sites): try UTF-8, windows-1251, latin-1, iso-8859-1, cp1252
   * strictly in order; final fallback decodes UTF-8 with replacement.

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming extension over the `events` stream shape
   * (SURVEY.md §2.8: the reference is batch-only — its asyncio machinery is
   * chunk concurrency, not streaming — so this is the engine's forward
-  * surface for continuous feeds: the same windowed aggregations as the
-  * batch queries q15/q16, plus streaming dedup and stateful sessions).
+  * surface for continuous feeds: q15's windowed aggregation, plus
+  * streaming dedup and stateful sessions).
   *
   * All operators are plan-shape-only (readStream in, transformed stream
   * out): callers bind sources/sinks. Watermarks bound state; at scale the
@@ -37,15 +37,6 @@ object EventStreams {
            approx_count_distinct(col("user_id")).as("approx_users"))
       .select(col("win.start").as("hour"), col("n_events"),
               col("total_value"), col("approx_users"))
-
-  /** q16's sliding 2h/1h window as a stream. */
-  def slidingValue(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "2 hours", "1 hour").as("win"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("win.start").as("window_start"), col("n_events"),
-              col("total_value"))
 
   /** Streaming HLL register table for distinct users per tumbling hour:
     * `(win, bucket, r)` — the MERGEABLE sketch state (<= 64 small-int

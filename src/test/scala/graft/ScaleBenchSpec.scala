@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.{Catalog, Tables}
+import graft.sources.FileTree
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -20,7 +21,7 @@ class ScaleBenchSpec extends SparkTestBase with BeforeAndAfterAll {
     ScaleBench.writeScaled(spark, base, d, 2, ScaleBench.fixtures); d
   }
 
-  override def afterAll(): Unit = Harness.deleteTree(tmp)
+  override def afterAll(): Unit = FileTree.delete(tmp)
 
   private def rows(q: String, dir: String): Seq[String] =
     Catalog.byName(q).run(spark, dir).collect().map(_.toString).toSeq.sorted

@@ -299,9 +299,26 @@ class DedupSpec extends SparkTestBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("node").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val localOut = Dedup.connectedComponents(pairs) // small -> local tier
-    val iterOut  = Dedup.connectedComponentsIterative(pairs, maxIter = 20)
+    // small -> local tier
+    val (localOut, gD) = gatesOf(Dedup.connectedComponents(pairs))
+    assert(gD === Map("graph" -> (1L, 0L)), "default gate: local union-find")
+    val (iterOut, gX) = gatesOf(withConf("spark.graft.gate.graph" -> "0")(
+      Dedup.connectedComponents(pairs, maxIter = 20)))
+    assert(gX === Map("graph" -> (0L, 1L)), "gate 0: distributed propagation")
     assert(canon(localOut) === canon(iterOut))
+  }
+
+  test("connected components of an empty pair set: size 0 takes the " +
+       "distributed tier, which returns the union-find's columns and " +
+       "types and no rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.LongType
+    val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val (out, g) = gatesOf(Dedup.connectedComponents(pairs))
+    assert(g === Map("graph" -> (0L, 1L)))
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      Seq("node" -> LongType, "comp" -> LongType))
+    assert(out.isEmpty)
   }
 
   test("qualityCanonical keeps the highest-quality cluster member, " +
@@ -3290,8 +3307,12 @@ class BpeSpec extends SparkTestBase {
       (2L, "ааб test, test, test… la-la"),
       (3L, "aaa aa aaa aa aaa")).toDF("doc_id", "text")
     for (df <- Seq(corpus, messy); n <- Seq(3, 8, 40)) {
-      val (lm, lv) = Bpe.train(df, "text", n) // local tier (default)
-      val (dm, dv) = Bpe.trainDistributed(df, "text", n)
+      // local tier (default)
+      val ((lm, lv), gD) = gatesOf(Bpe.train(df, "text", n))
+      val ((dm, dv), gX) = gatesOf(
+        withConf("spark.graft.gate.bpe" -> "0")(Bpe.train(df, "text", n)))
+      assert(gD === Map("bpe" -> (1L, 0L)), s"default gate: local at n=$n")
+      assert(gX === Map("bpe" -> (0L, 1L)), s"gate 0: distributed at n=$n")
       assert(lm.orderBy("rank").collect().toSeq ===
         dm.orderBy("rank").collect().toSeq, s"merges diverge at n=$n")
       assert(lv.orderBy("w").collect().toSeq ===
@@ -3313,17 +3334,38 @@ class BpeSpec extends SparkTestBase {
       m.orderBy("rank").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
-    val l = got(Bpe.train(df, "text", 2)._1)
-    val d = got(Bpe.trainDistributed(df, "text", 2)._1)
+    val (l, gD) = gatesOf(got(Bpe.train(df, "text", 2)._1))
+    val (d, gX) = gatesOf(withConf("spark.graft.gate.bpe" -> "0")(
+      got(Bpe.train(df, "text", 2)._1)))
+    assert(gD === Map("bpe" -> (1L, 0L)), "default gate: local")
+    assert(gX === Map("bpe" -> (0L, 1L)), "gate 0: distributed")
     assert(l === d)
     assert(l(1)._2 === "～", "UTF-8 order must pick U+FF5E first")
   }
 
   test("a threshold smaller than the vocab falls through to the " +
        "distributed tier with identical results") {
-    val (lm, _) = Bpe.train(corpus, "text", 8)
-    val (dm, _) = Bpe.train(corpus, "text", 8, localVocabThreshold = 2)
+    val ((lm, _), gD) = gatesOf(Bpe.train(corpus, "text", 8))
+    val ((dm, _), gX) = gatesOf(withConf("spark.graft.gate.bpe" -> "2")(
+      Bpe.train(corpus, "text", 8)))
+    assert(gD === Map("bpe" -> (1L, 0L)), "default gate: local")
+    assert(gX === Map("bpe" -> (0L, 1L)), "gate 2: distributed")
     assert(lm.orderBy("rank").collect().toSeq ===
       dm.orderBy("rank").collect().toSeq)
+  }
+
+  test("an empty corpus: size 0 takes the distributed tier, which " +
+       "returns the local tier's columns and types and no rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val ((m, v), g) = gatesOf(Bpe.train(docs, "text", 3))
+    assert(g === Map("bpe" -> (0L, 1L)))
+    assert(m.schema.map(f => f.name -> f.dataType) ===
+      Seq("rank" -> IntegerType, "left_sym" -> StringType,
+        "right_sym" -> StringType, "pair_count" -> LongType))
+    assert(v.schema.map(f => f.name -> f.dataType) ===
+      Seq("w" -> StringType, "f" -> LongType, "n_tokens" -> IntegerType))
+    assert(m.isEmpty && v.isEmpty)
   }
 }

@@ -87,9 +87,12 @@ class ParSpec extends SparkTestBase {
     def run(): (Seq[String], Seq[String]) = (
       Graph.pageRank(edges, "a", "b", iters = 12)
         .orderBy("node").collect().map(_.toString).toSeq,
-      Bpe.train(corpus, "text", numMerges = 8, localVocabThreshold = 0)
+      withConf("spark.graft.gate.bpe" -> "0")(
+        Bpe.train(corpus, "text", numMerges = 8))
         ._1.orderBy("rank").collect().map(_.toString).toSeq)
-    val local = run()
+    val (local, g) = gatesOf(run())
+    assert(g === Map("graph" -> (1L, 0L), "bpe" -> (0L, 1L)),
+      "pageRank local, BPE forced distributed")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt2")
     spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
     try {

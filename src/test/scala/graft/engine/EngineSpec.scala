@@ -131,10 +131,13 @@ class CategoryPathStressSpec extends SparkTestBase {
     val orphan = Seq(("o", "missing", "O"))
     val edges = (chain ++ cycle ++ orphan).toDF("id", "parentId", "name")
 
-    val loc = CategoryPath.resolveSegs(edges, maxDepth = 20)
+    def segs() = CategoryPath.resolveSegs(edges, maxDepth = 20)
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val iter = CategoryPath.resolveSegsIterative(edges, maxDepth = 20)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    val (loc, gD) = gatesOf(segs())
+    assert(gD === Map("graph" -> (1L, 0L)), "default gate: local walk")
+    val (iter, gX) =
+      gatesOf(withConf("spark.graft.gate.graph" -> "0")(segs()))
+    assert(gX === Map("graph" -> (0L, 1L)), "gate 0: iterative fixpoint")
     assert(loc === iter) // both strategies, identical semantics
 
     // cycle: walk from x visits y, z, then stops at the seen x
@@ -144,6 +147,19 @@ class CategoryPathStressSpec extends SparkTestBase {
     assert(loc("c0") === (20 to 0 by -1).map(i => s"N$i"))
     // missing parent stops the walk without error
     assert(loc("o") === Seq("O"))
+  }
+
+  test("J2 empty dimension: size 0 takes the iterative branch, which " +
+       "returns the local walk's columns and types and no rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val edges =
+      Seq.empty[(String, String, String)].toDF("id", "parentId", "name")
+    val (out, g) = gatesOf(CategoryPath.resolveSegs(edges))
+    assert(g === Map("graph" -> (0L, 1L)))
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      Seq("id" -> StringType, "segs" -> ArrayType(StringType)))
+    assert(out.isEmpty)
   }
 }
 
