@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Flatten
+import graft.engine.{Flatten, Prune}
 import graft.sinks.{CsvSink, Excel, Filenames, JsonSink, XmlSink}
 import graft.sources.{CsvSource, HttpFetch, JsonSource, PdfSource, XmlSource}
 
@@ -154,8 +154,9 @@ object Pipeline {
     val base = Paths.get(jsonPath).getFileName.toString.replaceAll("(?i)\\.json$", "")
     val out = Paths.get(outDir, s"$base.csv")
     Files.createDirectories(out.getParent)
+    val sorted = Prune.sortedColumns(df)
     CsvSink.writeSingleFile(
-      df.select(df.columns.sorted.toSeq.map(c =>
+      sorted.select(sorted.columns.toSeq.map(c =>
         org.apache.spark.sql.functions.col("`" + c + "`").cast("string").as(c)): _*),
       out.toString)
     out
@@ -518,35 +519,35 @@ object Pipeline {
     * (main.py:1302-1310): alpha composites onto a white background,
     * then a JPEG encode (the JDK writer rejects ARGB rasters, so the
     * flatten is load-bearing, not just cosmetic parity). */
-  def processPngToJpg(imagePath: String, outDir: String): Path = {
-    val bytes = Files.readAllBytes(Paths.get(imagePath))
-    val img = graft.analytics.Multimodal.decodeImage(bytes).getOrElse(
-      throw new IllegalArgumentException(s"Undecodable image: $imagePath"))
-    val rgb = new java.awt.image.BufferedImage(
-      img.getWidth, img.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val g = rgb.createGraphics()
-    try {
-      g.setColor(java.awt.Color.WHITE)
-      g.fillRect(0, 0, img.getWidth, img.getHeight)
-      g.drawImage(img, 0, 0, null)
-    } finally g.dispose()
-    val base = stripExt(Paths.get(imagePath).getFileName.toString)
-    val out = Paths.get(outDir, s"$base.jpg")
-    Files.createDirectories(out.getParent)
-    Files.write(out, graft.analytics.Multimodal.encodeImage(rgb, "jpg"))
-    out
-  }
+  def processPngToJpg(imagePath: String, outDir: String): Path =
+    reencodeImage(imagePath, outDir, "jpg") { img =>
+      val rgb = new java.awt.image.BufferedImage(
+        img.getWidth, img.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = rgb.createGraphics()
+      try {
+        g.setColor(java.awt.Color.WHITE)
+        g.fillRect(0, 0, img.getWidth, img.getHeight)
+        g.drawImage(img, 0, 0, null)
+      } finally g.dispose()
+      rgb
+    }
 
   /** JPG -> PNG re-encode (main.py:886-911 + 2050-2068): decode via the
     * K9 raster codec, re-encode lossless PNG. */
-  def processJpgToPng(imagePath: String, outDir: String): Path = {
+  def processJpgToPng(imagePath: String, outDir: String): Path =
+    reencodeImage(imagePath, outDir, "png")(identity)
+
+  /** Decode `imagePath` (or fail naming it), apply `prep` to the raster,
+    * and write it as `outDir/<base>.<format>`. */
+  private def reencodeImage(imagePath: String, outDir: String, format: String)(
+      prep: java.awt.image.BufferedImage => java.awt.image.BufferedImage): Path = {
     val bytes = Files.readAllBytes(Paths.get(imagePath))
     val img = graft.analytics.Multimodal.decodeImage(bytes).getOrElse(
       throw new IllegalArgumentException(s"Undecodable image: $imagePath"))
     val base = stripExt(Paths.get(imagePath).getFileName.toString)
-    val out = Paths.get(outDir, s"$base.png")
+    val out = Paths.get(outDir, s"$base.$format")
     Files.createDirectories(out.getParent)
-    Files.write(out, graft.analytics.Multimodal.encodeImage(img, "png"))
+    Files.write(out, graft.analytics.Multimodal.encodeImage(prep(img), format))
     out
   }
 }

@@ -2,8 +2,11 @@ package graft.analytics
 
 import Par.Mat
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Distributed byte-pair-encoding tokenizer training + application — the
   * subword vocabulary step of an LLM data pipeline (Sennrich et al. 2016
@@ -97,10 +100,11 @@ object Bpe {
       val mergeDf = spark.createDataFrame(merges)
         .toDF("rank", "left_sym", "right_sym", "pair_count")
       val vocabDf = spark.createDataFrame(
-          words.toIndexedSeq.zip(finalSyms.toIndexedSeq).map {
-            case ((w, f), syms) => (w, f, syms.length)
-          })
-        .toDF("w", "f", "n_tokens")
+        words.toIndexedSeq.zip(finalSyms.toIndexedSeq).map {
+          case ((w, f), syms) => Row(w, f, syms.length)
+        }.asJava,
+        StructType(Seq(vocab.schema("w"), vocab.schema("f"),
+          StructField("n_tokens", IntegerType, nullable = false))))
       (mergeDf, vocabDf)
     } else trainOnTable(vocab, numMerges)
   }
@@ -262,8 +266,9 @@ object Bpe {
 
   /** Segment one word under a trained merge list (rank order replay —
     * the original subword-nmt application rule). For words seen in
-    * training this reproduces the vocab table's segmentation exactly. */
-  def segment(word: String, merges: Seq[(String, String)]): Seq[String] = {
+    * training this reproduces the vocab table's segmentation exactly —
+    * the reference replay specs check [[train]]'s vocab against. */
+  private[graft] def segment(word: String, merges: Seq[(String, String)]): Seq[String] = {
     val init = word.toCharArray.map(_.toString).toSeq :+ "</w>"
     merges.foldLeft(init) { case (s, (a, b)) => mergePair(s, a, b) }
   }

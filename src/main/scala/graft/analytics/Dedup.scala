@@ -146,7 +146,7 @@ object Dedup {
 
   /** The composed-expression form of [[shingles]], kept as the differential-
     * test reference for the native expression. */
-  def shinglesComposed(docs0: DataFrame, idCol: String, textCol: String,
+  private[graft] def shinglesComposed(docs0: DataFrame, idCol: String, textCol: String,
                        n: Int = 3): DataFrame = {
     val docs = Par.ensure(docs0)
     val spark = docs.sparkSession
@@ -199,9 +199,11 @@ object Dedup {
     * quadratic on that key. Dropping hot shingles only shrinks the observed
     * intersection (CCNet-style common-shingle filtering); `n_a`/`n_b` stay
     * exact, so `jaccard` is a lower bound — and the oracle applies the
-    * identical cap, so results stay bit-for-bit comparable.
+    * identical cap, so results stay bit-for-bit comparable. Kept as the
+    * exploded-shingle reference specs compare
+    * [[ngramJaccardPairsFromDocs]] against.
     */
-  def ngramJaccardPairs(sh: DataFrame, minJaccard: Double,
+  private[graft] def ngramJaccardPairs(sh: DataFrame, minJaccard: Double,
                         maxDocFreq: Int = 1000): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -567,15 +569,6 @@ object Dedup {
           .otherwise(lit("changed")).as("status"))
   }
 
-  /** [[incrementalDedup]] against a persisted [[CorpusIndex]]: the probe
-    * reuses the index's OWN sketch parameters (shingle n, numHashes,
-    * bandSize travel with the artifact), so a mismatched probe cannot
-    * happen by construction. */
-  def screenShard(newDocs: DataFrame, idCol: String, textCol: String,
-                  index: CorpusIndex, maxBucket: Int = 1000): DataFrame =
-    incrementalDedup(newDocs, idCol, textCol, index.fingerprints,
-      index.bands, index.n, index.numHashes, index.bandSize, maxBucket)
-
   /** Edit-distance verification of candidate pairs — the exact final
     * stage of a dedup pipeline: sketch stages (MinHash/LSH/SimHash)
     * nominate candidates, THIS confirms them with a real Levenshtein
@@ -831,9 +824,9 @@ object Dedup {
   }
 
   /** MinHash signatures: for seed k in [0, numHashes), sig_k =
-    * min(md5(k || '|' || shingle)). Long format (doc, k, sig), kept for
-    * callers that want raw signatures. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 8): DataFrame = {
+    * min(md5(k || '|' || shingle)). Long format (doc, k, sig), kept as
+    * the definition specs check [[minhashBands]] against. */
+  private[graft] def minhashSignatures(sh: DataFrame, numHashes: Int = 8): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
     sh.withColumn("k", explode(sequence(lit(0), lit(numHashes - 1))))
@@ -847,8 +840,9 @@ object Dedup {
     * numHashes exploded rows), then band buckets are a map-side explode of
     * md5s over adjacent signature pairs. Identical math to
     * [[minhashSignatures]] + per-band string_agg: bucket = md5 of the
-    * band's sigs in seed order. */
-  def minhashBands(sh: DataFrame, numHashes: Int = 8,
+    * band's sigs in seed order. Kept as the reference specs compare
+    * [[minhashBandsFromDocs]] against. */
+  private[graft] def minhashBands(sh: DataFrame, numHashes: Int = 8,
                    bandSize: Int = 2): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -1189,12 +1183,12 @@ object Dedup {
       if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val out = parent.keys.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
-    val dt = pairs.schema("doc_a").dataType
+    val (a, b) = (pairs.schema("doc_a"), pairs.schema("doc_b"))
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, math.max(1, out.size / 100000)),
       org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", dt),
-        org.apache.spark.sql.types.StructField("comp", dt))))
+        a.copy(name = "node", nullable = a.nullable || b.nullable),
+        org.apache.spark.sql.types.StructField("comp", a.dataType))))
   }
 
   /** Distributed min-label propagation — the no-collect path. */

@@ -191,7 +191,8 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy($"src").agg(count(lit(1)).cast("long").as("deg"))
     val n = deg.count() // node count: the one driver scalar
-    var ranks = deg.select($"src".as("n"), (lit(1.0) / n).as("r"))
+    // safeDiv: an empty graph (n = 0) would fail ANSI constant folding
+    var ranks = deg.select($"src".as("n"), Par.safeDiv(lit(1.0), lit(n)).as("r"))
     var prev: DataFrame = null
     for (i <- 1 to iters) {
       if (emitDelta && i == iters) prev = ranks
@@ -200,7 +201,8 @@ object Graph {
         .join(deg, Seq("src"))
         .select($"dst".as("n"), ($"r" / $"deg").as("c"))
         .groupBy($"n")
-        .agg((lit(teleport) / n + lit(damping) * sum($"c")).as("r"))
+        .agg((Par.safeDiv(lit(teleport), lit(n)) + lit(damping) * sum($"c"))
+          .as("r"))
       // deep iteration: truncate lineage every 5 rounds (node-keyed
       // table, one row per node — cheap to materialize)
       if (iters > 10 && i < iters && i % 5 == 0)
@@ -624,7 +626,7 @@ object Graph {
       }
       return Par.localFrame(spark,
         Seq(StructField("node", nodeDt), StructField("label", nodeDt),
-          StructField("community_size", LongType)),
+          StructField("community_size", LongType, nullable = false)),
         outRows)
     }
     val half = edges.select($"a".as("node"), $"b".as("nb"))

@@ -120,11 +120,6 @@ object Multimodal {
     }
   }
 
-  /** A resized payload (decode -> scale -> re-encode in a real pipeline). */
-  final case class MediaResized(doc_id: Long, media_type: String,
-                                width: Int, height: Int, n_bytes_in: Long,
-                                n_bytes_out: Long)
-
   /** Real decode via `javax.imageio` (ships with the JDK): PNG/JPEG/BMP/GIF
     * payloads become a [[java.awt.image.BufferedImage]]; anything the JDK
     * readers don't recognize (and any truncated/corrupt image) is None.
@@ -165,67 +160,6 @@ object Multimodal {
     val baos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, format, baos)
     baos.toByteArray
-  }
-
-  /** Partition-wise resize: REAL `javax.imageio` decode, deterministic
-    * nearest-neighbor scale, real PNG re-encode (`n_bytes_out` is the
-    * actual encoded length; `media_type` flips to image/png). Payloads the
-    * JDK readers can't decode (the audio/video stand-ins) keep the
-    * documented stub arithmetic so the pipeline shape stays total. */
-  def resize(blobs: Dataset[MediaBlob], width: Int, height: Int): Dataset[MediaResized] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      // per-partition scaler scope: ImageIO reader/writer instances are
-      // looked up once per partition by the first call and reused
-      it.map { b =>
-        val n = if (b.data == null) 0L else b.data.length.toLong
-        decodeImage(b.data) match {
-          case Some(img) =>
-            val png = encodeImage(scaleNearest(img, width, height), "png")
-            MediaResized(b.doc_id, "image/png", width, height, n, png.length.toLong)
-          case None =>
-            MediaResized(b.doc_id, b.media_type, width, height, n,
-                         math.min(n, width.toLong * height))
-        }
-      }
-    }
-  }
-
-  /** A format-converted payload (the reference's png<->jpg converters,
-    * main.py:886-911 — K9's one live capability). */
-  final case class MediaConverted(doc_id: Long, from_type: String,
-                                  to_type: String, width: Int, height: Int,
-                                  n_bytes_in: Long, n_bytes_out: Long,
-                                  data: Array[Byte])
-
-  /** Real image format conversion: decode any JDK-readable payload,
-    * re-encode to `format` ("png" / "jpg" / "bmp" / "gif"). JPEG has no
-    * alpha channel, so frames are first flattened to RGB (which
-    * [[scaleNearest]]'s identity-size path does — it also makes the
-    * conversion deterministic across source raster layouts). Undecodable
-    * payloads are dropped: a converter, unlike [[resize]]'s metadata
-    * contract, has nothing meaningful to emit for them. */
-  def convertImages(blobs: Dataset[MediaBlob], format: String): Dataset[MediaConverted] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    val fmt = format.toLowerCase match {
-      case "jpg" | "jpeg" => "jpg"
-      case f @ ("png" | "bmp" | "gif") => f
-      case f => throw new IllegalArgumentException(s"unsupported image format: $f")
-    }
-    blobs.mapPartitions { it =>
-      it.flatMap { b =>
-        decodeImage(b.data).map { img =>
-          val rgb = scaleNearest(img, img.getWidth, img.getHeight)
-          val out = encodeImage(rgb, fmt)
-          MediaConverted(b.doc_id,
-            ImageHeaders.parse(b.data).map(_._1).getOrElse(b.media_type),
-            s"image/$fmt", img.getWidth, img.getHeight,
-            b.data.length.toLong, out.length.toLong, out)
-        }
-      }
-    }
   }
 
   // ---------------------------------------------------------------------
@@ -530,7 +464,7 @@ object Multimodal {
     * reproduces every bit). Returned as two 32-bit halves so oracles
     * never touch the 2^63 sign bit. Map-side only: one decoder pass per
     * partition, no shuffle. Payloads the JDK cannot decode are dropped
-    * (same contract as the resize/convert paths). */
+    * (same contract as [[decodeResizeChecksum]]). */
   def perceptualHash(blobs: Dataset[MediaBlob]): DataFrame = {
     val spark = blobs.sparkSession
     import spark.implicits._

@@ -136,7 +136,9 @@ object Par {
     * `Long.MaxValue`. At dictionary size a distributed loop costs pure
     * per-round stage scheduling (the q199 A/B measured the per-round
     * work at milliseconds); above the gate it is the 100-TB path. Both
-    * branches fold the same arithmetic, spec-pinned per operator. A
+    * branches fold the same arithmetic, spec-pinned per operator, and
+    * return the same schema, nullability included: a local epilogue
+    * declares each field as the distributed plan derives it. A
     * threshold of 0 forces the distributed branch, a large one the local
     * branch; every decision is counted in [[gateStats]].
     * {{{
@@ -194,9 +196,6 @@ object Par {
       StructType(fields))
 
   def ensure(df: DataFrame): DataFrame = {
-    // streaming plans have no .rdd and micro-batch sizing is the
-    // scheduler's concern — pass through untouched
-    if (df.isStreaming) return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     // getNumPartitions plans the RDD but runs no job
     if (df.rdd.getNumPartitions * 2 < want) df.repartition(want) else df

@@ -269,9 +269,9 @@ object Similarity {
           }
         }
         return Par.localFrame(spark,
-          Seq(StructField("qid", cand.schema("qid").dataType),
+          Seq(cand.schema("qid"),
             StructField("step", IntegerType, nullable = false),
-            StructField("neighbor_id", cand.schema("vid").dataType),
+            cand.schema("vid").copy(name = "neighbor_id"),
             StructField("mmr_score", DoubleType)),
           out.toSeq)
       }

@@ -215,20 +215,4 @@ object TfIdf {
           $"cls")).as("best"))
       .select($"id", $"best.cls".as("pred_cls"), $"best.score".as("score"))
   }
-
-  /** [[hashingTf]] densified to one `Array[Double]` row per document —
-    * the shape the vector operators take. Same hashing rule; empty
-    * buckets are 0. */
-  def hashingTfVectors(docs: DataFrame, idCol: String, textCol: String,
-                       dim: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    hashingTf(docs, idCol, textCol, dim)
-      .groupBy($"id")
-      .agg(map_from_entries(collect_list(struct($"bucket", $"tf"))).as("m"))
-      .select($"id",
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => coalesce(element_at($"m", i.cast("int")), lit(0L))
-            .cast("double")).as("vec"))
-  }
 }

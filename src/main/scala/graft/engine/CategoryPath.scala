@@ -3,8 +3,11 @@ package graft.engine
 import graft.analytics.Par
 import graft.analytics.Par.Mat
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** J1/J2 — category dimension lookup + hierarchical path materialization
   * (reference `build_category_path` main.py:1487-1507; maps built
@@ -59,10 +62,10 @@ object CategoryPath {
     * cycle guard via visited set, missing parents stop the walk. */
   private def resolveSegsLocal(edges: DataFrame, maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
+    // the walk keys on string ids; the raw id (last) is what the row emits
     val rows = edges
       .select(col("id").cast("string"), col("parentId").cast("string"),
-              col("name").cast("string"))
+              col("name").cast("string"), col("id"))
       .collect()
     val parentOf = new scala.collection.mutable.HashMap[String, String]()
     val nameOf   = new scala.collection.mutable.HashMap[String, String]()
@@ -84,9 +87,14 @@ object CategoryPath {
         cur = parentOf(cur)
         iter += 1
       }
-      (id, segs.toSeq)
+      Row(r.get(3), segs.toSeq)
     }
-    out.toDF("id", "segs")
+    // the iterative branch's schema: the input's id, a never-null path
+    // whose segments come out of a left join
+    spark.createDataFrame(out.asJava, StructType(Seq(
+      edges.schema("id"),
+      StructField("segs", ArrayType(StringType, containsNull = true),
+        nullable = false))))
   }
 
   /** Iterative broadcast self-join to fixpoint — the no-collect path for

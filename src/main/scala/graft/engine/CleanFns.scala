@@ -58,7 +58,7 @@ object CleanFns {
 
   /** The composed-expression form of F3, kept as the differential-test
     * reference for the native expression. */
-  def dedupDelimitedComposed(c: Column, delimiter: String = Sep): Column =
+  private[graft] def dedupDelimitedComposed(c: Column, delimiter: String = Sep): Column =
     array_join(
       array_distinct(
         filter(transform(split(c, java.util.regex.Pattern.quote(delimiter)), x => trim(x)),
@@ -127,6 +127,7 @@ object CleanFns {
     * — accepts '.5' and '5.' (one optional dot, at least one digit). */
   def isNumericString(c: Column): Column = c.rlike("^(\\d+\\.?\\d*|\\.\\d+)$")
 
-  /** P8 availability defaulting (main.py:322-323). */
-  def defaultAvailable(c: Column): Column = coalesce(c, lit("1"))
+  /** P8 availability defaulting (main.py:322-323): the flattened
+    * `available` cell when there is one, else "1". */
+  def defaultAvailable(c: Option[Column]): Column = coalesce(c.toSeq :+ lit("1"): _*)
 }

@@ -181,7 +181,7 @@ object Flatten {
       else coalesce(CleanFns.cleanDescription(coalesce(descCandidates: _*)), lit(""))
 
     // -- available default (P8, main.py:322-323)
-    cols("available") = coalesce(cols.get("available").toSeq :+ lit("1"): _*)
+    cols("available") = CleanFns.defaultAvailable(cols.get("available"))
 
     val flat = base.select(cols.map { case (k, v) =>
       v.cast("string").as(k)
@@ -592,7 +592,7 @@ object Flatten {
     }
 
     // defaults + ID alias (main.py:440-450)
-    cols("available") = coalesce(cols.get("available").toSeq :+ lit("1"): _*)
+    cols("available") = CleanFns.defaultAvailable(cols.get("available"))
     cols("category_path") =
       coalesce(cols.get("category_path").toSeq :+ lit("Undefined"): _*)
     cols("categoryId") =
@@ -640,7 +640,7 @@ object Flatten {
 
     // defaults (main.py:475-487): category_path uses the UNsanitized name,
     // THEN name is sanitized
-    cols("available") = coalesce(cols.get("available").toSeq :+ lit("1"): _*)
+    cols("available") = CleanFns.defaultAvailable(cols.get("available"))
     cols("category_path") = coalesce(
       (cols.get("category_path").toSeq ++ cols.get("name").toSeq :+ lit("Service")): _*)
     cols("categoryId") = coalesce(

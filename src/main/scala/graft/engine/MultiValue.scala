@@ -20,17 +20,6 @@ object MultiValue {
   def collectDistinctSorted(value: Column, sep: String = Sep): Column =
     array_join(array_sort(array_distinct(collect_list(value))), sep)
 
-  /** A1 first-occurrence-ordered variant (exact reference semantics,
-    * main.py:87-95): pair each value with an arrival-order key, keep the
-    * minimum key per value upstream, sort by it here. Use after a
-    * `groupBy(id, value).agg(min(pos))` pre-step, passing that min-pos.
-    */
-  def collectFirstOccurrence(value: Column, pos: Column, sep: String = Sep): Column =
-    array_join(
-      transform(array_sort(collect_list(struct(pos.as("p"), value.as("v")))),
-                s => s.getField("v")),
-      sep)
-
   /** A2 param concat (main.py:263-266): same-key values joined with ", "
     * in deterministic (sorted) order. */
   def paramConcat(value: Column): Column =

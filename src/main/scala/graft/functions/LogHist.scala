@@ -132,8 +132,9 @@ object LogHist {
   }
 
   /** Inclusive lower bound of bucket `idx` (the quantile estimate the
-    * sketch reports: largest representable value `<=` every member). */
-  def lowerBound(idx: Int, s: Int): Long =
+    * sketch reports: largest representable value `<=` every member) —
+    * the scalar form specs check the Column pipeline's bound against. */
+  private[graft] def lowerBound(idx: Int, s: Int): Long =
     if (idx < (1 << s)) idx.toLong
     else ((idx % (1 << s)) + (1L << s)) << ((idx >> s) - 1)
 
@@ -141,33 +142,4 @@ object LogHist {
   def histCounts(c: Column, subBits: Int): Column =
     ColumnBridge.column(
       LogHist(ColumnBridge.expression(c), subBits).toAggregateExpression())
-
-  /** Quantile extraction from a counts array under the SAME rule the
-    * Column pipeline ([[graft.analytics.Sketches.logHistQuantiles]])
-    * applies — `r = ceil(q*n)`, first non-empty bucket whose cumulative
-    * count reaches r, that bucket's lower bound — for callers that hold
-    * the counts directly (a streaming state store, a persisted sketch
-    * table read back). Returns `(n, estimates)`; an all-zero histogram
-    * returns `(0, zeros)`. */
-  def quantilesFromCounts(counts: Array[Long], s: Int,
-                          qs: Seq[Double]): (Long, Seq[Long]) = {
-    var n = 0L
-    var i = 0
-    while (i < counts.length) { n += counts(i); i += 1 }
-    if (n == 0L) return (0L, qs.map(_ => 0L))
-    val ests = qs.map { q =>
-      val r = math.ceil(q * n.toDouble).toLong
-      var cum = 0L
-      var j = 0
-      var res = 0L
-      var found = false
-      while (j < counts.length && !found) {
-        cum += counts(j)
-        if (counts(j) > 0 && cum >= r) { res = lowerBound(j, s); found = true }
-        j += 1
-      }
-      res
-    }
-    (n, ests)
-  }
 }

@@ -4289,10 +4289,10 @@ object AnalyticsQueries {
           .orderBy("id")
       }),
 
-    // ----- hourly PSI serving monitor, batch-replayed -----
+    // ----- hourly PSI serving monitor -----
     Q("q278_psi_hourly_monitor",
-      "the streaming PSI drift monitor (EventStreams.psiMonitor) " +
-        "batch-replayed: every feed hour's value distribution scored " +
+      "the hourly PSI drift monitor (EventStreams.psiMonitorBatch): " +
+        "every feed hour's value distribution scored " +
         "against the even-user reference slice with the q195 " +
         "expression tree verbatim (eps floor, 1e9-scaled integer " +
         "terms, 0.1/0.25 verdicts) — raw volume stops at ONE " +

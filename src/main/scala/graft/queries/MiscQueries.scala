@@ -390,10 +390,10 @@ object MiscQueries {
           .orderBy("c_nationkey")
       }),
 
-    // ----- extension: batch gap sessionization (streaming-equivalent) -----
+    // ----- extension: batch gap sessionization -----
     Q("q54_sessionize",
-      "30-minute-gap sessions per user from the events history (same " +
-        "semantics as the streaming sessionizer, window form)",
+      "30-minute-gap sessions per user from the events history: gap " +
+        "flags, a running sum into session indexes, one user-keyed aggregate",
       Some("""WITH flagged AS (
              |  SELECT user_id, ts, event_id,
              |         CASE WHEN lag(ts) OVER w IS NULL
@@ -1299,12 +1299,11 @@ object MiscQueries {
           .orderBy("tbl", "chk")
       }),
 
-    // ----- streaming ingest gate, batch-replayed (q54 precedent) -----
+    // ----- corpus ingest gate -----
     Q("q191_ingest_gate",
-      "the streaming corpus ingest gate replayed over the historical " +
-        "documents table: min-id-per-fingerprint dedup (the batch " +
-        "stand-in for first-arrival), quality + language via the SAME " +
-        "corpusFlags expressions the stream runs, and the q60-split " +
+      "the corpus ingest gate over the historical documents table: " +
+        "min-id-per-fingerprint dedup, quality + language via the SAME " +
+        "corpusFlags expressions corpusFilter uses, and the q60-split " +
         "eval fingerprints anti-joined broadcast — one ~50-byte/row " +
         "exchange on fp, text never shuffles",
       Some("""WITH flags AS (
@@ -4456,15 +4455,12 @@ object MiscQueries {
             Tables(s, dir, "documents"), "source", "text")
           .orderBy("key_a", "key_b")),
 
-    // ----- hourly value percentiles (the percentileMonitor batch twin) -----
+    // ----- hourly value percentiles -----
     Q("q284_hourly_percentiles",
       "per-(type, hour) p50/p90/p99 of the value metric from the " +
-        "bounded log_hist sketch in micro-units — the BATCH REPLAY of " +
-        "the streaming percentileMonitor (q191/q192/q278 precedent: " +
-        "the stream emits each hour's row once on watermark close, " +
-        "bit-equal to this operator over the same slice — " +
-        "EventStreamsSpec pins that differential; this row hash-pins " +
-        "the shared sketch against DuckDB); 960 integer counters per " +
+        "bounded log_hist sketch in micro-units " +
+        "(Sketches.logHistQuantiles; this row hash-pins the sketch " +
+        "against DuckDB); 960 integer counters per " +
         "(type, hour), map-side partials, the quantile walk " +
         "dictionary x calendar bounded",
       Some("""WITH e AS (SELECT event_type,

@@ -14,11 +14,9 @@ import graft.engine.{CleanFns, Prune}
   * `?`-strip and ROOM_TYPE/PURPOSE re-delimiting.
   *
   * Split into a pure `exportColumns` transform (oracle-checkable: pruning +
-  * sorting + scrubbing as Column expressions) and the physical write. The
-  * write has two modes: distributed part files (the 100 TB path — quoting
-  * and escaping are the Spark CSV writer's, identical per part), or a
-  * single reference-parity file with BOM, assembled by streaming partitions
-  * driver-side (test/converter scale only).
+  * sorting + scrubbing as Column expressions) and the physical write: one
+  * reference-parity file with BOM, whose rows serialize in distributed
+  * text parts that the driver concatenates.
   */
 object CsvSink {
 
@@ -52,27 +50,13 @@ object CsvSink {
   /** The pure export transform: prune (P1-P4) + sorted header (T1) +
     * per-field scrubs, everything string-typed, nulls as empty cells. */
   def exportColumns(df: DataFrame): DataFrame = {
-    val pruned = Prune.prune(df, exclude = Excluded, important = Important)
-    pruned.select(pruned.columns.sorted.toSeq.map { n =>
+    val sorted = Prune.sortedColumns(
+      Prune.prune(df, exclude = Excluded, important = Important))
+    sorted.select(sorted.columns.toSeq.map { n =>
       coalesce(scrubField(n, col("`" + n + "`").cast("string")), lit(""))
         .as(n)
     }: _*)
   }
-
-  /** Distributed write: Spark CSV part files, `;`-delimited, quoted
-    * minimally with `""` doubling (writer default), headers per part. */
-  def writeParts(df: DataFrame, dir: String): Unit =
-    df.write
-      .option("header", "true")
-      .option("sep", ";")
-      .option("encoding", "UTF-8")
-      .option("escape", "\"") // double quotes, csv.QUOTE_MINIMAL style
-      // QUOTE_MINIMAL parity: the writer's default renders an empty string
-      // as a quoted "" token, where the reference (and writeSingleFile)
-      // emit an empty cell
-      .option("emptyValue", "")
-      .mode("overwrite")
-      .csv(dir)
 
   /** Reference-parity single file: utf-8-sig BOM + header + rows. Row
     * serialization (quote-minimal with `""` doubling, `;` join) runs as

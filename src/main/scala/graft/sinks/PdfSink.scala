@@ -238,19 +238,6 @@ object PdfSink {
     Files.write(Paths.get(path), out.toByteArray)
   }
 
-  /** A binary image column as a one-page-per-image PDF in `orderCol`
-    * order — bounded driver collect (≤ maxImages), the report-sink
-    * contract shared with [[writeTableGridPdf]]. */
-  def writeImagesPdf(df: org.apache.spark.sql.DataFrame, orderCol: String,
-                     blobCol: String, path: String,
-                     maxImages: Int = 50): Unit = {
-    import org.apache.spark.sql.functions.col
-    val blobs = df.orderBy(col(orderCol)).limit(maxImages)
-      .select(col(blobCol)).collect()
-      .map(_.getAs[Array[Byte]](0)).toSeq
-    writeImagePdf(blobs, path)
-  }
-
   /** The K8 report as a real PDF artifact: [[Reports.tableReportLines]]
     * content (title, header, first-50 rows) through [[writeTextPdf]]. */
   def writeTableReportPdf(df: org.apache.spark.sql.DataFrame,

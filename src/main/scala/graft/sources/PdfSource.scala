@@ -392,26 +392,6 @@ object PdfSource {
     }
   }
 
-  /** K9 distributed pdf→image read: every PDF under `path` rasterized
-    * partition-wise into (file, page, width, height, image) rows — the
-    * same `binaryFile` → per-partition decode shape as [[readTextRows]];
-    * pages of one PDF stay in its partition, no driver funnel. */
-  def readPageImages(spark: SparkSession, path: String,
-                     format: String = "png", dpi: Int = 150): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (p, bytes) =>
-          pdfToImages(bytes, format, dpi).map { case (pg, w, h, b) =>
-            (p, pg, w, h, b)
-          }
-        }
-      }
-      .toDF("file", "page", "width", "height", "image")
-  }
-
   /** Extract text lines from raw PDF bytes as (page, line_no, text).
     * "Page" is the 1-based index of the text-bearing content stream —
     * exact for PDFs with one content stream per page (the common report

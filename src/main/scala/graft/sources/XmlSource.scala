@@ -59,14 +59,6 @@ object XmlSource {
   private def stripBom(s: String): String =
     if (s.startsWith("﻿")) s.substring(1) else s
 
-  /** F8 scrub (main.py:1434-1437, 1446): control chars out, bare `&` fixed
-    * to `&amp;` (the reference's parse-repair retry, applied up front). */
-  def scrub(raw: String): String = {
-    val noCtl = stripBom(raw.trim)
-      .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")
-    noCtl.replaceAll("&(?![a-zA-Z0-9#]+;)", "&amp;")
-  }
-
   /** S1 dialect auto-detect (main.py:1463-1473) from a document sample:
     * first matching marker wins, in the reference's priority order. */
   def detect(sample: String): Dialect = {

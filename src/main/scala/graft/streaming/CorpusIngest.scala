@@ -3,61 +3,29 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming corpus ingestion: the batch training-data gate
-  * ([[graft.analytics.TextAnalysis.corpusFilter]] — dedup + quality +
-  * language, plus q60's decontamination) applied to continuously-arriving
-  * documents. The flag expressions are the SAME code as batch
-  * (`TextAnalysis.corpusFlags`), so the two paths cannot drift; the spec
-  * differentially tests the streamed verdicts against the batch operator
-  * on identical input.
+/** Corpus ingestion over arriving documents: the training-data gate
+  * ([[graft.analytics.TextAnalysis.corpusFilter]]'s dedup + quality +
+  * language, plus q60's decontamination) as one batch operator, and a
+  * stateless scorer under a persisted quality-filter model. The gate's
+  * flag expressions are the SAME code as batch (`TextAnalysis.corpusFlags`);
+  * q191 runs [[ingestGateBatch]] and q277 runs [[scoreStream]].
   *
-  * Scale shape: flags are map-side; exact dedup is
-  * `dropDuplicatesWithinWatermark` on the 32-char fingerprint (state
-  * bounded by the watermark — the streaming stand-in for the batch
-  * min-id-per-fingerprint window, with first-ARRIVAL rather than min-id
-  * as the keep rule, the honest streaming semantics); decontamination is
-  * a stream-static left-anti join against the benchmark-sized eval
-  * fingerprint set, broadcast per micro-batch exactly like q60's batch
-  * form.
-  *
-  * Publish safety: a [[graft.serve.GraftServer]] publish mid-stream
-  * calls `Memo.invalidateAll()`. No streaming plan here scans a memo
-  * snapshot — the gate is map-side flag expressions plus watermark
-  * state, and [[scoreStream]] collects its model artifact into plan
-  * literals before the query starts — so invalidation cannot remove
-  * files under an in-flight micro-batch; a future memo-consuming
-  * stream would additionally be covered by the memo's grace-deferred
-  * snapshot deletion (Memo.scala). EventStreamsSpec pins a mid-stream
-  * invalidateAll end-to-end.
+  * Scale shape: flags are map-side; exact dedup keeps the min id per
+  * 32-char fingerprint (one window over the fingerprint); decontamination
+  * is a left-anti join against the benchmark-sized eval fingerprint set,
+  * broadcast exactly like q60's batch form. [[scoreStream]] collects its
+  * model artifact into plan literals, so it also runs unchanged over a
+  * `readStream` frame (EventStreamsSpec runs it over a memory stream).
   */
 object CorpusIngest {
 
-  /** Gate a document stream: emit only docs that are first-of-fingerprint
-    * within the watermark, pass the quality bar, match `keepLang`, and do
-    * not collide with the static eval set. `evalFps` must carry an `fp`
-    * column of md5(text) fingerprints (dimension/benchmark-sized). */
-  def ingestGate(docs: DataFrame, idCol: String, textCol: String,
-                 tsCol: String, evalFps: DataFrame,
-                 watermark: String = "1 hour",
-                 keepLang: String = "en"): DataFrame = {
-    val flagged = graft.analytics.TextAnalysis.corpusFlags(docs, textCol)
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("fp")
-    flagged
-      .filter(col("q_ok") && col("lang_guess") === keepLang)
-      .join(broadcast(evalFps.select(col("fp"))), Seq("fp"), "left_anti")
-      .select(col(idCol), col(tsCol), col(textCol), col("lang_guess"))
-  }
-
-  /** Batch replay of [[ingestGate]] — the same gate semantics over a
-    * historical documents table, oracle-checkable (the q54
-    * sessionizeBatch precedent). The one semantic substitution is the
-    * dedup keep rule: a batch table has no arrival order, so
-    * first-of-fingerprint becomes MIN-ID-of-fingerprint (one window
-    * over the 32-byte fp — a ~50-byte/row exchange, text never
-    * shuffles); quality, language, and the eval-set anti join are the
-    * identical `corpusFlags` expressions and broadcast pattern.
-    * Output: (id, lang_guess), gated rows only. */
+  /** Gate a documents table: keep only docs that are the min id of their
+    * fingerprint (one window over the 32-byte fp — a ~50-byte/row
+    * exchange, text never shuffles), pass the quality bar, match
+    * `keepLang`, and do not collide with the eval set. `evalFps` must
+    * carry an `fp` column of md5(text) fingerprints
+    * (dimension/benchmark-sized). Output: (id, lang_guess), gated rows
+    * only. */
   def ingestGateBatch(docs: DataFrame, idCol: String, textCol: String,
                       evalFps: DataFrame,
                       keepLang: String = "en"): DataFrame = {

@@ -24,16 +24,27 @@ import scala.jdk.CollectionConverters._
   *    BINARY and every text-based audit sweep (leak checks included)
   *    silently skips it (found live: a NUL literal in Excel.scala);
   *  - no Scala UDFs (`udf(`), no `???` stubs, no TODO/FIXME — the
-  *    codegen-or-native rule and the no-padding rule, kept hard.
+  *    codegen-or-native rule and the no-padding rule, kept hard;
+  *  - every public def is named by main or perfbench source besides its
+  *    own definition — a def only specs call is code no entry point
+  *    runs (spec reference kernels are `private[graft]`; the few that
+  *    stay public carry their reason in [[uncalledPublicDefs]]).
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[Path] = {
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
+  private def sourcesUnder(dir: String): Seq[Path] = {
+    val walk = Files.walk(Paths.get(dir))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     finally walk.close()
   }
+
+  private def mainSources: Seq[Path] = sourcesUnder("src/main/scala")
+
+  /** Public defs that no main or perfbench source names, each with the
+    * reason it stays public. */
+  private val uncalledPublicDefs = Map(
+    "hllUserRegisters" -> ("stream-safe register builder: EventStreamsSpec " +
+      "runs it over a memory stream against q118's batch registers"))
 
   test("no direct localCheckpoint outside Par.materialize") {
     val offenders = mainSources.filterNot(_.endsWith("Par.scala"))
@@ -111,5 +122,44 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     } yield s"$p: $pat"
     assert(bad.isEmpty, s"banned markers in main source: $bad")
+  }
+
+  test("census: every public def in src/main is named in src/main or " +
+       "perfbench/src outside its own definition, comments and strings") {
+    val q3 = "\"" * 3
+    // one left-to-right scan over comments, char literals and string
+    // literals; a string keeps only its interpolated names
+    val lexeme = ("(?s)/\\*.*?\\*/|//[^\\n]*|'(?:\\\\[^']*|[^'\\\\\\n])'|" +
+      q3 + ".*?" + q3 + "|\"(?:\\\\.|[^\"\\\\\\n])*\"").r
+    val interp = """\$\{([^}]*)\}|\$(\w+)""".r
+    def code(p: Path): String = lexeme.replaceAllIn(Files.readString(p), m =>
+      java.util.regex.Matcher.quoteReplacement(
+        if (!m.matched.startsWith("\"")) " "
+        else interp.findAllMatchIn(m.matched)
+          .map(i => Option(i.group(1)).getOrElse(i.group(2)))
+          .mkString(" ", " ", " ")))
+    def counts(it: Iterator[String]): Map[String, Int] =
+      it.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    val texts = (mainSources ++ sourcesUnder("perfbench/src"))
+      .map(p => p -> code(p))
+    val all = texts.map(_._2).mkString("\n")
+    val named = counts("""[A-Za-z_]\w*""".r.findAllIn(all))
+    val defined = counts("""(?<![\w$])def\s+([A-Za-z_]\w*)""".r
+      .findAllMatchIn(all).map(_.group(1)))
+    val defLine = ("""(?m)^[ \t]*((?:(?:private|protected)(?:\[\w+\])?\s+|""" +
+      """override\s+|final\s+|implicit\s+|@\w+\s+)*)def\s+([A-Za-z_]\w*)""").r
+    val uncalled = for {
+      (p, text) <- texts if p.startsWith("src")
+      m <- defLine.findAllMatchIn(text)
+      if """\b(private|protected|override)\b""".r.findFirstIn(m.group(1)).isEmpty
+      name = m.group(2)
+      if name != "main" && named(name) <= defined(name)
+    } yield (p.getFileName.toString, name)
+    val (allowed, bad) = uncalled.partition(u => uncalledPublicDefs.contains(u._2))
+    assert(bad.isEmpty, "public defs that no entry-point source names — " +
+      "delete them, narrow a spec reference kernel to private[graft], or " +
+      s"list the def with its reason: ${bad.mkString(", ")}")
+    assert(allowed.map(_._2).toSet === uncalledPublicDefs.keySet,
+      "an allowed def is named now or gone: drop it from the list")
   }
 }

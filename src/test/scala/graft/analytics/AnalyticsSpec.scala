@@ -431,9 +431,13 @@ class DedupSpec extends SparkTestBase {
     idx.write(dir)
     val loaded = CorpusIndex.read(spark, dir)
     assert((loaded.n, loaded.numHashes, loaded.bandSize) === ((2, 6, 3)))
-    val direct = Dedup.screenShard(shard, "doc_id", "text", idx)
+    val direct = Dedup.incrementalDedup(shard, "doc_id", "text",
+        idx.fingerprints, idx.bands, idx.n, idx.numHashes,
+        idx.bandSize)
       .orderBy("doc_id").collect().map(_.toSeq)
-    val viaDisk = Dedup.screenShard(shard, "doc_id", "text", loaded)
+    val viaDisk = Dedup.incrementalDedup(shard, "doc_id", "text",
+        loaded.fingerprints, loaded.bands, loaded.n, loaded.numHashes,
+        loaded.bandSize)
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(direct.toSeq === viaDisk.toSeq)
     assert(direct(0)(1) === true && direct(1)(3) === true)
@@ -442,7 +446,9 @@ class DedupSpec extends SparkTestBase {
     val grown = idx.merged(accepted, "doc_id", "text")
     val next = Seq((201L, "a wholly new document sharing no phrasing with anything"))
       .toDF("doc_id", "text")
-    val verdict = Dedup.screenShard(next, "doc_id", "text", grown)
+    val verdict = Dedup.incrementalDedup(next, "doc_id", "text",
+        grown.fingerprints, grown.bands, grown.n, grown.numHashes,
+        grown.bandSize)
       .collect().head
     assert(verdict.getBoolean(1) && !verdict.getBoolean(3),
       s"merged index must catch the accepted doc's copy: $verdict")
@@ -2117,37 +2123,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(out === Seq((1L, 3L, 1)), s"got $out")
   }
 
-  test("resize plumbing: typed partition-wise transform, deterministic " +
-       "output contract") {
-    import spark.implicits._
-    val blobs = Multimodal.asBlobs(
-      Seq((1L, "x" * 100), (2L, "y" * 100000)).toDF("doc_id", "text"),
-      "doc_id", "text")
-    val out = Multimodal.resize(blobs, 224, 224).orderBy("doc_id").collect()
-    assert(out.map(_.width).toSeq === Seq(224, 224))
-    assert(out(0).n_bytes_out === 100L)            // smaller than target area
-    assert(out(1).n_bytes_out === 224L * 224L)     // capped at target area
-  }
-
-  test("real resize: PNG payload is decoded, nearest-neighbor scaled, and " +
-       "re-encoded with the actual output byte length") {
-    import spark.implicits._
-    val img = new java.awt.image.BufferedImage(
-      4, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4; y <- 0 until 2) img.setRGB(x, y, (x * 50 + y * 7) << 8)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    val blobs = Seq(Multimodal.MediaBlob(1L, "image/png", baos.toByteArray)).toDS()
-    val out = Multimodal.resize(blobs, 8, 8).collect().head
-    assert(out.media_type === "image/png")
-    assert(out.width === 8 && out.height === 8)
-    assert(out.n_bytes_in === baos.toByteArray.length.toLong)
-    // the real encoded length of the same scale in the same JVM
-    val expected = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(Multimodal.scaleNearest(img, 8, 8), "png", expected)
-    assert(out.n_bytes_out === expected.toByteArray.length.toLong)
-  }
-
   test("syntheticBmp round-trips through the JDK decoder pixel-for-pixel") {
     for (id <- Seq(0L, 7L, 123L)) {
       val w = (id % 4 + 2).toInt; val h = (id % 3 + 2).toInt
@@ -2176,28 +2151,6 @@ class MultimodalSpec extends SparkTestBase {
       }).sum
       assert(r.getLong(6) === expected, s"checksum of doc $id")
     }
-  }
-
-  test("convertImages png->jpg: real re-encode, dims preserved, JPEG " +
-       "magic bytes; undecodable payloads dropped") {
-    import spark.implicits._
-    val img = new java.awt.image.BufferedImage(
-      6, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 6; y <- 0 until 4) img.setRGB(x, y, x * 40 + (y * 60 << 16))
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    val blobs = Seq(
-      Multimodal.MediaBlob(1L, "image/png", baos.toByteArray),
-      Multimodal.MediaBlob(2L, "text/plain", "not an image".getBytes)).toDS()
-    val out = Multimodal.convertImages(blobs, "jpg").collect()
-    assert(out.length === 1) // undecodable row dropped
-    assert(out.head.from_type === "image/png" && out.head.to_type === "image/jpg")
-    assert(out.head.width === 6 && out.head.height === 4)
-    assert(out.head.data(0) === 0xff.toByte && out.head.data(1) === 0xd8.toByte)
-    // and the converted payload itself decodes at the same dimensions
-    val back = Multimodal.decodeImage(out.head.data).get
-    assert(back.getWidth === 6 && back.getHeight === 4)
-    intercept[IllegalArgumentException] { Multimodal.convertImages(blobs, "webp") }
   }
 
   test("WavHeaders parses the canonical PCM layout, skips odd-sized " +

@@ -45,9 +45,13 @@ class CorpusIndexFsSpec extends SparkTestBase {
       val loaded = CorpusIndex.read(spark, uri)
       assert((loaded.n, loaded.numHashes, loaded.bandSize) === ((2, 6, 3)),
         "sketch params must be recovered from the scheme path's listing")
-      val direct = Dedup.screenShard(shard, "doc_id", "text", idx)
+      val direct = Dedup.incrementalDedup(shard, "doc_id", "text",
+        idx.fingerprints, idx.bands, idx.n, idx.numHashes,
+        idx.bandSize)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val viaDisk = Dedup.screenShard(shard, "doc_id", "text", loaded)
+      val viaDisk = Dedup.incrementalDedup(shard, "doc_id", "text",
+        loaded.fingerprints, loaded.bands, loaded.n, loaded.numHashes,
+        loaded.bandSize)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(viaDisk === direct,
         "an index reloaded through the wrapper scheme must screen " +

@@ -221,4 +221,65 @@ class ParSpec extends SparkTestBase {
     assert(empty.collect().isEmpty)
     assert(empty.schema === full.schema)
   }
+
+  test("every Par.gate site returns one schema, nullability included, " +
+       "from both branches on non-empty and on empty input") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("a", "b")
+    // numeric ids: the local walk keys on their string form
+    val cats = Seq((1L, None: Option[Long], "Lighting"),
+      (2L, Some(1L), "Chandeliers")).toDF("id", "parentId", "name")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
+    val games = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
+      .toDF("w", "l")
+    val emb = Seq((0L, Array(1.0f, 0.2f)), (1L, Array(1.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val shortlist = Seq((0L, 1L, 0.9), (0L, 2L, 0.1))
+      .toDF("qid", "vid", "simq")
+    val grid = Seq((1L, 2L), (3L, 4L)).toDF("v", "cnt")
+    val corpus = Seq((1L, "low lower newest widest")).toDF("doc_id", "text")
+    // (gate, site, input, the site's output frames)
+    val sites: Seq[(String, String, DataFrame, DataFrame => Seq[DataFrame])] =
+      Seq(
+        ("graph", "pageRank", edges,
+          e => Seq(Graph.pageRank(e, "a", "b", iters = 2))),
+        ("graph", "kCore", edges, e => Seq(Graph.kCore(e, "a", "b"))),
+        ("graph", "labelPropagation", edges,
+          e => Seq(Graph.labelPropagation(e, "a", "b", rounds = 2))),
+        ("graph", "resolveSegs", cats,
+          c => Seq(graft.engine.CategoryPath.resolveSegs(c))),
+        ("graph", "connectedComponents", pairs,
+          p => Seq(Dedup.connectedComponents(p))),
+        ("bt", "bradleyTerry", games,
+          g => Seq(Preference.bradleyTerry(g, "w", "l", iters = 2))),
+        ("mmr", "mmrRerankFrom", shortlist,
+          sl => Seq(Similarity.mmrRerankFrom(sl, emb, "vec_id", "embedding",
+            k = 2))),
+        ("cumsum", "gridCumSum", grid,
+          g => Seq(Stats.gridCumSum(g, "v", "cnt", "cum"))),
+        ("bpe", "Bpe.train", corpus, d => {
+          val (merges, vocab) = Bpe.train(d, "text", numMerges = 2)
+          Seq(merges, vocab)
+        }))
+    val problems = sites.flatMap { case (gate, site, input, run) =>
+      def schemas(in: DataFrame, forced: Boolean) = {
+        val (out, g) = gatesOf(
+          if (forced) withConf(s"spark.graft.gate.$gate" -> "0")(run(in))
+          else run(in))
+        (out.map(_.schema), g.get(gate))
+      }
+      val (local, gLocal) = schemas(input, forced = false)
+      val others = Seq(
+        "gate=0" -> schemas(input, forced = true),
+        "empty input" -> schemas(input.filter(lit(false)), forced = false),
+        "empty input, gate=0" ->
+          schemas(input.filter(lit(false)), forced = true))
+      (if (gLocal.exists(_._1 > 0)) Nil
+       else Seq(s"$site: the default run did not take the local branch")) ++
+        others.collect { case (how, (schema, _)) if schema != local =>
+          s"$site: $how returned $schema, the local branch $local" }
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
 }

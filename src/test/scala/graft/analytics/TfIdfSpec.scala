@@ -94,27 +94,4 @@ class HashingTfSpec extends SparkTestBase {
     assert(out.map(r => r.getInt(1) -> r.getLong(2)).toMap === expected)
     assert(out.forall(_.getLong(0) === 1L)) // doc 2 absent
   }
-
-  test("dense hashingTfVectors agrees with the sparse form and feeds the " +
-       "cosine kernel") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = Seq((1L, "x y z x"), (2L, "x y z x"), (3L, "totally other words"))
-      .toDF("doc_id", "text")
-    val dense = TfIdf.hashingTfVectors(docs, "doc_id", "text", dim = 16)
-    val sparse = TfIdf.hashingTf(docs, "doc_id", "text", dim = 16)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    dense.collect().foreach { r =>
-      val id = r.getLong(0)
-      r.getSeq[Double](1).zipWithIndex.foreach { case (v, i) =>
-        assert(v === sparse.getOrElse((id, i), 0L).toDouble, s"doc $id bucket $i")
-      }
-    }
-    // identical docs -> cosine 1 over their hashed vectors
-    val sim = Similarity.bruteForceTopK(
-        dense.withColumnRenamed("vec", "embedding"), "id", "embedding",
-        col("id") === 1, k = 1).collect().head
-    assert(sim.getAs[Long]("neighbor_id") === 2L)
-    assert(math.abs(sim.getAs[Double]("cos_sim") - 1.0) < 1e-9)
-  }
 }

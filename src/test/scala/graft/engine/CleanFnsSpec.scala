@@ -98,8 +98,9 @@ class CleanFnsSpec extends SparkTestBase {
 
   // ----- P8 -----
   test("P8 availability defaulting") {
-    assert(evalStr(CleanFns.defaultAvailable(lit(null).cast("string"))) === "1")
-    assert(evalStr(CleanFns.defaultAvailable(lit("0"))) === "0")
+    assert(evalStr(CleanFns.defaultAvailable(Some(lit(null).cast("string")))) === "1")
+    assert(evalStr(CleanFns.defaultAvailable(Some(lit("0")))) === "0")
+    assert(evalStr(CleanFns.defaultAvailable(None)) === "1")
   }
 }
 

@@ -15,16 +15,6 @@ class MultiValueSpec extends SparkTestBase {
     assert(out.map(_.getString(1)).toSeq === Seq("a///b", "z"))
   }
 
-  test("A1 collectFirstOccurrence preserves arrival order (reference main.py:87-95)") {
-    import spark.implicits._
-    val df = Seq((1, "z", 0), (1, "a", 1), (1, "z", 2), (1, "m", 3)).toDF("id", "v", "pos")
-    val out = df.groupBy("id", "v").agg(min($"pos").as("p"))
-      .groupBy("id")
-      .agg(MultiValue.collectFirstOccurrence($"v", $"p").as("vs"))
-      .collect()
-    assert(out.head.getString(1) === "z///a///m")
-  }
-
   test("A4/A5 stock flag and price resolution") {
     import spark.implicits._
     val stock = Seq(("o1", 0.0), ("o1", 5.0), ("o2", 0.0)).toDF("id", "qty")

@@ -41,41 +41,6 @@ class ConvertersSpec extends SparkTestBase {
     assert(out.collect().head.getString(2) === "52") // important + ?-strip
   }
 
-  test("K1 distributed part-file mode: parallel parts read back losslessly") {
-    import spark.implicits._
-    val df = (1 to 100).map(i => (i.toString, s"name $i", s"v;$i"))
-      .toDF("id", "name", "v")
-    val dir = tmp("parts")
-    CsvSink.writeParts(CsvSink.exportColumns(df), dir)
-    val back = spark.read.option("header", "true").option("sep", ";")
-      .option("escape", "\"").csv(dir)
-    assert(back.count() === 100)
-    assert(back.columns.toSeq === Seq("id", "name", "v"))
-    assert(back.filter($"id" === "7").collect().head.getString(2) === "v;7")
-  }
-
-  test("K1 parts mode and single-file mode encode cells equivalently " +
-       "(quotes, delimiters, empties round-trip to the same values)") {
-    import spark.implicits._
-    val df = Seq(
-      ("1", "plain", "x"),
-      ("2", "semi;colon", ""),
-      ("3", "with \"quotes\"", "both;\"mixed\""),
-      ("4", "", "юникод")).toDF("id", "name", "v")
-    val dir = tmp("parts_eq"); val single = tmp("single_eq") + ".csv"
-    CsvSink.writeParts(df, dir)
-    CsvSink.writeSingleFile(df, single)
-    def load(p: String) = CsvSource.read(spark, p)
-      .na.fill("") // the parts reader yields null for empty cells
-      .orderBy($"id".cast("int"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    val fromParts = spark.read.option("header", "true").option("sep", ";")
-      .option("escape", "\"").csv(dir)
-      .na.fill("").orderBy($"id".cast("int"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    assert(load(single) === fromParts)
-  }
-
   // ---------------- S5 CSV source ----------------
 
   test("S5 delimiter sniff: ',' only wins when strictly more frequent") {
@@ -499,57 +464,6 @@ class ConvertersSpec extends SparkTestBase {
     // outside the placement box the page is white
     val off = pages.head._2.getRGB(300, 400)
     assert((off & 0xffffff) === 0xffffff)
-  }
-
-  test("K9 writeImagesPdf: DataFrame blob column to one-page-per-image " +
-       "PDF in order, capped, null-safe") {
-    import spark.implicits._
-    def enc(rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        4, 3, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 3; x <- 0 until 4) img.setRGB(x, y, rgb)
-      val b = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", b)
-      b.toByteArray
-    }
-    val df = Seq((2L, enc(0x00ff00)), (1L, enc(0xff0000)), (3L, enc(0x0000ff)))
-      .toDF("id", "blob")
-    val path = tmp("frames.pdf")
-    PdfSink.writeImagesPdf(df, "id", "blob", path, maxImages = 2)
-    val bytes = Files.readAllBytes(Paths.get(path))
-    // cap cut after ordering: ids 1,2 embed; id 3 dropped
-    val imgs = graft.sources.PdfSource.extractImages(bytes)
-    assert(imgs.map(i => (i._1, i._2, i._3)) === Seq((1, 4, 3), (2, 4, 3)))
-    assert(graft.sources.PdfSource.rasterize(bytes, dpi = 72).map(_._1)
-      === Seq(1, 2))
-    // a null blob cell must fail loudly, not NPE-in-executor obscurely
-    val withNull = Seq((1L, enc(0xff0000)), (2L, null.asInstanceOf[Array[Byte]]))
-      .toDF("id", "blob")
-    intercept[IllegalArgumentException] {
-      PdfSink.writeImagesPdf(withNull, "id", "blob", tmp("nulls.pdf"))
-    }
-  }
-
-  test("K9 distributed pdf->image: readPageImages emits one decodable " +
-       "PNG row per page across files") {
-    val dir = Files.createTempDirectory("graft_pdfpages")
-    PdfSink.writeTextPdf(Seq("only page"), dir.resolve("a.pdf").toString)
-    PdfSink.writeTextPdf((1 to 60).map(_.toString),
-      dir.resolve("b.pdf").toString, linesPerPage = 55)
-    val rows = graft.sources.PdfSource
-      .readPageImages(spark, dir.toString, format = "png", dpi = 72)
-      .collect()
-      .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2),
-        r.getInt(3), r.getAs[Array[Byte]](4)))
-      .sortBy(r => (r._1, r._2))
-    assert(rows.map(r => (r._1, r._2, r._3, r._4)).toSeq === Seq(
-      ("a.pdf", 1, 595, 842),
-      ("b.pdf", 1, 595, 842), ("b.pdf", 2, 595, 842)))
-    // every payload is a real PNG whose header dims match the row's
-    rows.foreach { r =>
-      assert(graft.analytics.ImageHeaders.parse(r._5)
-        === Some(("image/png", r._3, r._4)))
-    }
   }
 
   test("K8 report is deterministic under orderCol ties (cap cut and " +

@@ -37,8 +37,15 @@ class XmlSourceSpec extends SparkTestBase {
     XmlSource.validate("<?xml version=\"1.0\"?><yml_catalog><offer/></yml_catalog>")
   }
 
+  private def scrubbedText(raw: String): String = {
+    val tmp = java.nio.file.Files.createTempFile("graft_scrub_in", ".xml")
+    java.nio.file.Files.writeString(tmp, raw)
+    java.nio.file.Files.readString(
+      java.nio.file.Paths.get(XmlSource.scrubbedIfNeeded(tmp.toString)))
+  }
+
   test("F8 scrub strips control chars and fixes bare ampersands") {
-    assert(XmlSource.scrub("<a>xy &amp; z & w</a>")
+    assert(scrubbedText("<a>xy &amp; z & w</a>")
       === "<a>xy &amp; z &amp; w</a>")
   }
 
@@ -46,11 +53,11 @@ class XmlSourceSpec extends SparkTestBase {
     val malformed = "\ufeff<?xml version=\"1.0\"?><yml_catalog><shop><offers>" +
       "<offer id=\"1\"><name>A & B</name><price>10</price></offer>" +
       "</offers></shop></yml_catalog>"
-    val repaired = XmlSource.scrub(malformed)
     val tmp = java.nio.file.Files.createTempFile("graft_repair", ".xml")
-    java.nio.file.Files.writeString(tmp, repaired)
+    java.nio.file.Files.writeString(tmp, malformed)
+    val repaired = XmlSource.scrubbedIfNeeded(tmp.toString)
     val flat = Flatten.flattenOffers(
-      XmlSource.read(spark, tmp.toString, XmlSource.Yml), XmlSource.Yml)
+      XmlSource.read(spark, repaired, XmlSource.Yml), XmlSource.Yml)
     val row = flat.collect().head
     assert(row.getAs[String]("name") === "A & B")
     assert(row.getAs[String]("price") === "10")

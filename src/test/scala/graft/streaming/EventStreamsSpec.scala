@@ -23,18 +23,6 @@ class EventStreamsSpec extends SparkTestBase {
     spark.table(name)
   }
 
-  test("hourlyCounts aggregates tumbling windows (complete mode snapshot)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 10), ev(2, 20), ev(3, 70), ev(4, 80, value = 2.0))
-    val out = runAll("hourly", EventStreams.hourlyCounts(in.toDF()), "complete")
-      .orderBy("hour").collect()
-    assert(out.length === 2)
-    assert(out(0).getAs[Long]("n_events") === 2)
-    assert(out(1).getAs[Double]("total_value") === 3.0)
-  }
-
   test("hllUserRegisters: streamed registers equal the batch registers " +
        "and fold to the same estimate (shared expression builder)") {
     import spark.implicits._
@@ -62,31 +50,6 @@ class EventStreamsSpec extends SparkTestBase {
       s"estimate $e far from 13 distinct users"))
   }
 
-  test("dedupEvents drops duplicate event_ids within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 10), ev(1, 11), ev(2, 12), ev(2, 12), ev(3, 13))
-    val out = runAll("dedup", EventStreams.dedupEvents(in.toDF()))
-    assert(out.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-      === Seq(1L, 2L, 3L))
-  }
-
-  test("enrich joins the stream to a static dim per micro-batch, broadcast, " +
-       "with Undefined defaulting for unmatched keys") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 10, user = 1), ev(2, 11, user = 2), ev(3, 12, user = 99))
-    val dim = Seq((1L, "alpha"), (2L, "beta")).toDF("user_id", "segment")
-    val out = runAll("enriched",
-      EventStreams.enrich(in.toDF(), dim, "user_id",
-                          Map("segment" -> "Undefined")))
-      .orderBy("event_id").collect()
-    assert(out.map(_.getAs[String]("segment")).toSeq
-      === Seq("alpha", "beta", "Undefined"))
-  }
-
   test("stream-stream click attribution joins purchases to clicks within " +
        "the window, across micro-batches, bounded state") {
     import spark.implicits._
@@ -107,244 +70,6 @@ class EventStreamsSpec extends SparkTestBase {
     assert(out.map(r => (r.getAs[Long]("purchase_id"),
                          r.getAs[Long]("click_id"))).toSeq ===
       Seq((50L, 1L))) // purchase 51 has no in-window click
-  }
-
-  test("csvBatchSink exports each micro-batch through the flagship CSV " +
-       "path into a per-batch directory") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_csv")
-      .toString
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 10, user = 7, value = 2.5), ev(2, 11, user = 8))
-    val q = EventStreams.csvBatchSink(in.toDF(), dir).start()
-    q.processAllAvailable(); q.stop()
-    val batch0 = spark.read
-      .option("header", "true").option("sep", ";")
-      .csv(s"$dir/batch_0")
-    assert(batch0.count() === 2)
-    // flagship path applied: sorted header, string cells
-    assert(batch0.columns.toSeq === batch0.columns.sorted.toSeq)
-    assert(batch0.columns.contains("event_id"))
-  }
-
-  test("batch sessionization == streaming sessionization on the same " +
-       "events (gap semantics differential)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // two users; gaps of exactly 30min (continue), 31min (split), repeats
-    val events = Seq(
-      ev(1, 0, user = 1), ev(2, 30, user = 1), ev(3, 61, user = 1),
-      ev(4, 200, user = 1),
-      ev(5, 10, user = 2), ev(6, 100, user = 2))
-    val batch = graft.streaming.EventStreams.sessionizeBatch(
-        events.toDF(), gapMinutes = 30)
-      .orderBy("user_id", "session_idx").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(2), r.getTimestamp(3),
-                 r.getLong(4), r.getDouble(5))).toSeq
-    val in = MemoryStream[Event]
-    in.addData(events: _*)
-    // advance the watermark far enough to close every session
-    in.addData(ev(99, 2000, user = 99))
-    val stream = runAll("sess_diff",
-      EventStreams.sessionize(in.toDS(), gapMinutes = 30).toDF())
-      .filter(col("user_id") =!= 99)
-      .orderBy("user_id", "session_start").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-                 r.getLong(3), r.getDouble(4))).toSeq
-    assert(stream === batch)
-  }
-
-  test("sessionize handles late events: mildly-late extends session_start " +
-       "backward, very-late forms its own immediate session") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    // batch 1: session [120, 125] for user 1 (watermark still far behind)
-    in.addData(ev(1, 120), ev(2, 125))
-    // batch 2: 110 is 10min before start -> merges, start moves to 110;
-    // 30 is 80min before start -> its own session, emitted closed
-    in.addData(ev(3, 110), ev(4, 30))
-    // advance watermark (2h) far enough to close the open session
-    in.addData(ev(99, 500, user = 99))
-    val out = runAll("sess_late",
-      EventStreams.sessionize(in.toDS(), gapMinutes = 30).toDF())
-      .filter(col("user_id") === 1)
-      .orderBy("session_start").collect()
-    assert(out.length === 2)
-    assert(out(0).getTimestamp(1) === ts(30))  // the very-late singleton
-    assert(out(0).getLong(3) === 1L)
-    assert(out(1).getTimestamp(1) === ts(110)) // start extended backward
-    assert(out(1).getTimestamp(2) === ts(125))
-    assert(out(1).getLong(3) === 3L)
-  }
-
-  test("sessionize merges a very-late BURST into one session, not one " +
-       "session per event (matches sessionizeBatch gap semantics)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    // batch 1: open session [200, 205] for user 1
-    in.addData(ev(1, 200), ev(2, 205))
-    // batch 2: three very-late events at 30, 40, 100 — 30/40 are within
-    // the 30min gap of each other (one session); 100 is 60min after 40
-    // (its own session); neither can join [200, 205]
-    in.addData(ev(3, 30), ev(4, 40), ev(5, 100))
-    // advance the watermark far enough to close the open session
-    in.addData(ev(99, 600, user = 99))
-    val out = runAll("sess_burst",
-      EventStreams.sessionize(in.toDS(), gapMinutes = 30).toDF())
-      .filter(col("user_id") === 1)
-      .orderBy("session_start").collect()
-    assert(out.length === 3)
-    assert(out(0).getTimestamp(1) === ts(30) &&
-           out(0).getTimestamp(2) === ts(40) && out(0).getLong(3) === 2L)
-    assert(out(1).getTimestamp(1) === ts(100) && out(1).getLong(3) === 1L)
-    assert(out(2).getTimestamp(1) === ts(200) && out(2).getLong(3) === 2L)
-  }
-
-  test("sessionize merges the late chain into the open session when a " +
-       "later same-batch event pulls session_start back within the gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    // batch 1: open session [200, 205] for user 1
-    in.addData(ev(1, 200), ev(2, 205))
-    // batch 2: 160 is 40min before start -> goes to the late chain; 175
-    // then merges into the open session and pulls start back to 175 —
-    // leaving the [160] chain only 15min from the new start. Batch
-    // semantics (all four events at once) give ONE session [160, 205];
-    // the within-batch merge must match that.
-    in.addData(ev(3, 160), ev(4, 175))
-    // advance the watermark far enough to close the open session
-    in.addData(ev(99, 600, user = 99))
-    val out = runAll("sess_late_chain",
-      EventStreams.sessionize(in.toDS(), gapMinutes = 30).toDF())
-      .filter(col("user_id") === 1)
-      .orderBy("session_start").collect()
-    assert(out.length === 1)
-    assert(out(0).getTimestamp(1) === ts(160))
-    assert(out(0).getTimestamp(2) === ts(205))
-    assert(out(0).getLong(3) === 4L)
-  }
-
-  test("sessionize closes a session after the gap and a watermark advance") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = EventStreams.sessionize(in.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    // session 1: events at 0,10,20; then silence; event at 120 starts
-    // session 2 and (after watermark passes) closes session 1
-    in.addData(ev(1, 0), ev(2, 10), ev(3, 20, value = 3.0))
-    q.processAllAvailable()
-    in.addData(ev(4, 300)) // pushes watermark (300min - 120min wm) past s1
-    q.processAllAvailable()
-    in.addData(ev(5, 600)) // one more advance to flush timeouts
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sessions").orderBy("session_start").collect()
-    assert(out.length >= 1)
-    val s1 = out.head
-    assert(s1.getAs[Long]("n_events") === 3)
-    assert(s1.getAs[Double]("total_value") === 5.0)
-    assert(s1.getAs[Timestamp]("session_start") === ts(0))
-    assert(s1.getAs[Timestamp]("session_end") === ts(20))
-  }
-
-  test("ingestGate drops a cross-batch duplicate while the watermark " +
-       "holds its state (the streaming dedup contract)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val good = "the cat sat on the mat and the dog is in the house today"
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val stream = CorpusIngest.ingestGate(
-      in.toDF().toDF("doc_id", "ts", "text"),
-      "doc_id", "text", "ts", Seq.empty[String].toDF("text")
-        .select(md5(col("text")).as("fp")),
-      watermark = "2 hours")
-    val q = stream.writeStream.format("memory").queryName("xbatch")
-      .outputMode("append").start()
-    in.addData((1L, ts(10), good))
-    q.processAllAvailable()
-    // second batch, same text, still within the watermark -> deduped
-    in.addData((2L, ts(30), good))
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("xbatch").collect().map(_.getLong(0)).toSet
-    assert(ids === Set(1L),
-      s"the in-watermark cross-batch duplicate must be dropped: $ids")
-  }
-
-  test("a publish-triggered Memo.invalidateAll MID-STREAM is safe: the " +
-       "long-lived ingest query keeps its dedup state and gates later " +
-       "micro-batches correctly (no snapshot is yanked under it — the " +
-       "streaming plans scan no memo snapshot, and the memo's " +
-       "grace-deferred deletion covers any future one)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val good = "the cat sat on the mat and the dog is in the house today"
-    val good2 = "a fine day for the park and the sun is out in the town now"
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val stream = CorpusIngest.ingestGate(
-      in.toDF().toDF("doc_id", "ts", "text"),
-      "doc_id", "text", "ts", Seq.empty[String].toDF("text")
-        .select(md5(col("text")).as("fp")),
-      watermark = "2 hours")
-    val q = stream.writeStream.format("memory").queryName("midpub")
-      .outputMode("append").start()
-    in.addData((1L, ts(10), good))
-    q.processAllAvailable()
-    // what GraftServer.publishStaged does on every publish
-    graft.analytics.Memo.invalidateAll()
-    in.addData((2L, ts(30), good), (3L, ts(31), good2))
-    q.processAllAvailable()
-    assert(q.exception.isEmpty,
-      s"mid-stream invalidation must not fail the query: ${q.exception}")
-    q.stop()
-    val ids = spark.table("midpub").collect().map(_.getLong(0)).toSet
-    assert(ids === Set(1L, 3L),
-      s"dedup state must survive the publish (dup 2 dropped): $ids")
-  }
-
-  test("streaming ingestGate emits exactly the docs the batch corpusFilter " +
-       "keeps, minus eval collisions (differential on identical input)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val good1 = "the cat sat on the mat and the dog is in the house today"
-    val good2 = "a fine day for the park and the sun is out in the town now"
-    val evald = "the exam answer is in the key and the test is in the book"
-    val rows = Seq(
-      (1L, ts(10), good1),                 // keep
-      (2L, ts(11), good1),                 // dup of 1 -> dropped
-      (3L, ts(12), "short text"),          // low quality
-      (4L, ts(13), "der hund ist nicht hier und das haus ist gross heute ja"), // non-en
-      (5L, ts(14), good2),                 // keep
-      (6L, ts(15), evald))                 // eval collision -> dropped
-    val evalFps = Seq(evald).toDF("text")
-      .select(md5(col("text")).as("fp"))
-    val in = MemoryStream[(Long, Timestamp, String)]
-    in.addData(rows: _*)
-    val stream = CorpusIngest.ingestGate(
-      in.toDF().toDF("doc_id", "ts", "text"),
-      "doc_id", "text", "ts", evalFps)
-    val q = stream.writeStream.format("memory").queryName("ingested")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("ingested")
-      .select("text").collect().map(_.getString(0)).toSet
-    // batch reference on the same rows: corpusFilter keeps, minus eval fps
-    val batchDocs = rows.toDF("doc_id", "ts", "text")
-    val batchKept = graft.analytics.TextAnalysis
-      .corpusFilter(batchDocs, "doc_id", "text")
-      .filter(col("keep") === 1)
-      .join(batchDocs, Seq("doc_id"))
-      .join(evalFps.withColumn("hit", lit(1)),
-            md5(col("text")) === col("fp"), "left_anti")
-      .select("text").collect().map(_.getString(0)).toSet
-    assert(streamed === batchKept, s"stream=$streamed batch=$batchKept")
-    assert(streamed === Set(good1, good2))
   }
 
   test("scoreStream serves the persisted logreg artifact statelessly and " +
@@ -380,126 +105,9 @@ class EventStreamsSpec extends SparkTestBase {
       "the served model must still separate prose from spam")
   }
 
-  test("rateMonitor: streamed hourly z-scores equal the batch " +
-       "rateAnomaly on every closed hour (gates, spike flag, timing)") {
+  test("psiMonitorBatch: per-hour PSI vs the reference slice equals " +
+       "batch psiDrift on every live hour; unknown key is no_data") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Timestamp.valueOf("2025-01-01 00:00:00").getTime
-    var id = 0L
-    def burst(tpe: String, h: Int, n: Int): Seq[Event] =
-      (0 until n).map { i =>
-        id += 1
-        Event(id, new Timestamp(base + h * 3600000L + i * 1000L),
-          1L, tpe, 1.0, "{}")
-      }
-    // type A: 26 hours cycling 10/11/12 (real variance), then a spike;
-    // type B: 6 sparse hours — never clears minHist
-    val evs =
-      (0 to 25).flatMap(h => burst("A", h, 10 + h % 3)) ++
-      burst("A", 26, 60) ++
-      (0 to 5).flatMap(h => burst("B", h, 3))
-    val batch = graft.analytics.Stats.rateAnomaly(
-        evs.toDF(), "event_type", "ts")
-      .orderBy("event_type", "hr").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        Option(r.get(4)).map(_.asInstanceOf[Double]), r.getBoolean(5)))
-    val in = MemoryStream[Event]
-    val q = EventStreams.rateMonitor(in.toDS()).toDF()
-      .writeStream.format("memory").queryName("rate_mon")
-      .outputMode("append").start()
-    in.addData(evs: _*); q.processAllAvailable()
-    // sentinels (their own type, never closes) advance the watermark in
-    // two steps; each subsequent DATA batch fires the armed event-time
-    // timeouts, so closed hours emit without relying on no-data batches
-    in.addData(burst("zz", 66, 1): _*); q.processAllAvailable()
-    in.addData(burst("zz", 67, 1): _*); q.processAllAvailable()
-    q.stop()
-    val stream = spark.table("rate_mon")
-      .filter(col("event_type") =!= "zz")
-      .orderBy("event_type", "hr").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        Option(r.get(4)).map(_.asInstanceOf[Double]), r.getBoolean(5)))
-    assert(stream.map(t => (t._1, t._2, t._3, t._4)) ===
-      batch.map(t => (t._1, t._2, t._3, t._4)),
-      "same (type, hour, count, history) rows")
-    stream.zip(batch).foreach { case (s, b) =>
-      (s._5, b._5) match {
-        case (None, None) => ()
-        case (Some(zs), Some(zb)) =>
-          // both sides round HALF_UP to 6 places but accumulate variance
-          // in different orders — adjacent 6-dp grid points are possible
-          assert(math.abs(zs - zb) <= 1.1e-6, s"z at ${s._2}: $zs vs $zb")
-        case other => fail(s"z gate mismatch at hour ${s._2}: $other")
-      }
-      assert(s._6 === b._6, s"anomaly flag at hour ${s._2}")
-    }
-    assert(stream.count(_._6) === 1 &&
-      stream.find(_._6).get._2 === Math.floorDiv(base, 3600000L) + 26,
-      "exactly the injected spike flags")
-  }
-
-  test("percentileMonitor: streamed per-hour p50/p90/p99 equal the " +
-       "batch log-hist sketch BIT-FOR-BIT on every closed hour") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Timestamp.valueOf("2025-01-01 00:00:00").getTime
-    var id = 0L
-    def burst(tpe: String, h: Int, values: Seq[Double]): Seq[Event] =
-      values.map { v =>
-        id += 1
-        Event(id, new Timestamp(base + h * 3600000L + id % 3000 * 1000L),
-          1L, tpe, v, "{}")
-      }
-    val rnd = new scala.util.Random(23)
-    // heavy-tailed values across 3 closed hours x 2 types, plus a tiny
-    // hour (exact small-count regime) and sub-micro values that drop
-    val evs =
-      (0 to 2).flatMap(h => burst("A", h,
-        Seq.fill(200)(math.pow(10, rnd.nextDouble() * 4) / 100))) ++
-      (0 to 2).flatMap(h => burst("B", h,
-        Seq.fill(50)(rnd.nextDouble() * 500))) ++
-      burst("B", 3, Seq(7.25, 0.0000001)) // second value rounds to 0 micro
-    val batch = graft.analytics.Sketches.logHistQuantiles(
-        evs.toDF()
-          .withColumn("hr", floor(unix_timestamp(col("ts")) / 3600L)
-            .cast("long"))
-          .withColumn("key", concat_ws("|", col("event_type"), col("hr"))),
-        "key", round(col("value") * 1e6).cast("long"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toMap
-    val in = MemoryStream[Event]
-    val q = EventStreams.percentileMonitor(in.toDS()).toDF()
-      .writeStream.format("memory").queryName("pct_mon")
-      .outputMode("append").start()
-    in.addData(evs: _*); q.processAllAvailable()
-    in.addData(burst("zz", 66, Seq(1.0)): _*); q.processAllAvailable()
-    in.addData(burst("zz", 67, Seq(1.0)): _*); q.processAllAvailable()
-    q.stop()
-    val stream = spark.table("pct_mon")
-      .filter(col("event_type") =!= "zz")
-      .orderBy("event_type", "hr").collect()
-      .map(r => s"${r.getString(0)}|${r.getLong(1)}" ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    // every closed (type, hour) must match the batch sketch exactly —
-    // same integer histogram, same ceil-rank rule
-    val closed = batch.keys.filter { k =>
-      val hr = k.split('|')(1).toLong
-      hr <= Math.floorDiv(base, 3600000L) + 3 // all data hours closed
-    }
-    assert(closed.nonEmpty && stream.keySet === closed.toSet)
-    closed.foreach { k =>
-      assert(stream(k) === batch(k), s"key $k: ${stream(k)} vs ${batch(k)}")
-    }
-    // the dropped sub-micro value: hour 3 of B counted only one event
-    assert(stream(s"B|${Math.floorDiv(base, 3600000L) + 3}")._1 === 1L)
-  }
-
-  test("psiMonitor: streamed per-hour PSI vs the static reference " +
-       "equals batch psiDrift on every closed hour; unknown key is " +
-       "no_data") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val base = Timestamp.valueOf("2025-01-01 00:00:00").getTime
     val baseHr = Math.floorDiv(base, 3600000L)
     var id = 0L
@@ -514,9 +122,6 @@ class EventStreamsSpec extends SparkTestBase {
     val refVals = Map(
       "A" -> Seq.fill(300)(rnd.nextDouble() * 60),
       "B" -> Seq.fill(300)(rnd.nextDouble() * 200))
-    val refDf = refVals.toSeq.flatMap { case (t, vs) => vs.map(t -> _) }
-      .toDF("event_type", "value")
-    val ref = EventStreams.psiReferenceBins(refDf, "event_type", "value")
     // live hours: h0 matches training, h1 shifts A's mass, h2 extreme;
     // type "C" has no reference -> no_data
     val evs =
@@ -525,23 +130,27 @@ class EventStreamsSpec extends SparkTestBase {
       burst("A", 2, Seq.fill(150)(190.0 + rnd.nextDouble() * 5)) ++
       burst("B", 0, Seq.fill(100)(rnd.nextDouble() * 200)) ++
       burst("C", 0, Seq.fill(20)(rnd.nextDouble() * 10))
-    val in = MemoryStream[Event]
-    val q = EventStreams.psiMonitor(in.toDS(), ref).toDF()
-      .writeStream.format("memory").queryName("psi_mon")
-      .outputMode("append").start()
-    in.addData(evs: _*); q.processAllAvailable()
-    in.addData(burst("zz", 66, Seq(1.0)): _*); q.processAllAvailable()
-    in.addData(burst("zz", 67, Seq(1.0)): _*); q.processAllAvailable()
-    q.stop()
-    val stream = spark.table("psi_mon")
-      .filter(col("event_type") =!= "zz")
-      .orderBy("event_type", "hr").collect()
+    // the catalog's shape (q278): ONE frame where the reference is the
+    // refPred slice, parked at a far hour and excluded from the compare
+    val refRows = refVals.toSeq.flatMap { case (t, vs) =>
+      vs.map(v => (t, new Timestamp(base + 50 * 3600000L), 0L, v))
+    }
+    val liveRows = evs.map(e => (e.event_type, e.ts, 1L, e.value))
+    val frame = (refRows ++ liveRows)
+      .toDF("event_type", "ts", "user_id", "value")
+    val batch = EventStreams.psiMonitorBatch(frame,
+        refPred = col("user_id") === 0L,
+        keyCol = "event_type", tsCol = "ts", valueCol = "value")
+      .filter($"hr" < baseHr + 50)
+      .collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
           r.getString(4))).toMap
-    // batch replay per closed (type, hour): union the reference (side
-    // 0) with that hour's slice (side 1) and run the q195 operator
-    for (((tpe, hr), (n, psi, verdict)) <- stream if tpe != "C") {
+    assert(batch.keySet === Set(("A", baseHr), ("A", baseHr + 1),
+      ("A", baseHr + 2), ("B", baseHr), ("C", baseHr)))
+    // per (type, hour): union the reference (side 0) with that hour's
+    // slice (side 1) and run the q195 operator
+    for (((tpe, hr), (n, psi, verdict)) <- batch if tpe != "C") {
       val hourSlice = evs.filter(e => e.event_type == tpe &&
         Math.floorDiv(e.ts.getTime, 3600000L) == hr)
       assert(n === hourSlice.size.toLong)
@@ -552,33 +161,12 @@ class EventStreamsSpec extends SparkTestBase {
           refPred = col("side") === 0, curPred = col("side") === 1)
         .head()
       val bPsi = Option(b.get(3)).map(_.asInstanceOf[Double])
-      assert(psi === bPsi, s"($tpe, $hr): stream $psi vs batch $bPsi")
+      assert(psi === bPsi, s"($tpe, $hr): monitor $psi vs psiDrift $bPsi")
       assert(verdict === b.getString(4), s"($tpe, $hr) verdict")
     }
     // drift ordering: matched hour stable-or-watch, extreme hour worst
-    assert(stream(("A", baseHr))._3 !== "drifted")
-    assert(stream(("A", baseHr + 2))._3 === "drifted")
-    assert(stream(("C", baseHr)) === ((20L, None, "no_data")))
-
-    // the catalog's batch replay (q278): ONE frame where the reference
-    // is the refPred slice (parked at a far hour, excluded from the
-    // compare) must emit the IDENTICAL (n, psi, verdict) per live
-    // (key, hour) as the streamed monitor — including C's no_data
-    val refRows = refVals.toSeq.flatMap { case (t, vs) =>
-      vs.map(v => (t, new Timestamp(base + 50 * 3600000L), 0L, v))
-    }
-    val liveRows = evs.map(e => (e.event_type, e.ts, 1L, e.value))
-    val frame = (refRows ++ liveRows)
-      .toDF("event_type", "ts", "user_id", "value")
-    val batch2 = EventStreams.psiMonitorBatch(frame,
-        refPred = col("user_id") === 0L,
-        keyCol = "event_type", tsCol = "ts", valueCol = "value")
-      .filter($"hr" < baseHr + 50)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
-          r.getString(4))).toMap
-    assert(batch2 === stream,
-      s"psiMonitorBatch != streamed monitor:\n$batch2\nvs\n$stream")
+    assert(batch(("A", baseHr))._3 !== "drifted")
+    assert(batch(("A", baseHr + 2))._3 === "drifted")
+    assert(batch(("C", baseHr)) === ((20L, None, "no_data")))
   }
 }
