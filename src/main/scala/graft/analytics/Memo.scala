@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
   Project, Repartition, RepartitionByExpression}
+import org.apache.spark.sql.types.StructType
 
 import Par.Mat
 
@@ -19,7 +20,8 @@ import Par.Mat
   * ENGINE caches, the gates don't know. Two storage policies share one
   * [[SessionMemo]] base (key, LRU, counters, stats row): [[FrameMemo]]
   * snapshots derived frames, [[ValueMemo]] holds driver-side values
-  * (centroids, trained models).
+  * (centroids, trained models, and the `parquet_schema` memo of
+  * [[graft.queries.Tables]]).
   *
   * Soundness contract: memoized operators must be DETERMINISTIC
   * functions of their input frames (every candidate here is — md5-seeded
@@ -30,19 +32,25 @@ import Par.Mat
   * a restarted session can never collide into a prior session's
   * entries), the CANONICALIZED analyzed plan of each input (expr ids
   * normalized — two reads of the same table match, in-memory inputs
-  * compare their data), and the params string. Before canonicalizing,
-  * shuffle-only repartitions under nothing but deterministic row-wise
-  * operators are dropped, so a frame that went through `Par.ensure` or
-  * `.repartition(n)` keys the same entry as the raw frame; a
-  * repartition under a Limit or Sample changes content and stays.
-  * A `.materialized()` input still never hits: its checkpoint leaf
-  * carries a fresh RDD identity per materialization.
+  * compare their data), and the params string. A value that depends on
+  * no input frame keys on the session and the params string alone:
+  * `parquet_schema` keys each table on its qualified path plus its
+  * recursive file listing (names, lengths, mtimes), so a session infers
+  * each table version once and a rewritten table again. Before
+  * canonicalizing, shuffle-only repartitions under nothing but
+  * deterministic row-wise operators are dropped, so a frame that went
+  * through `Par.ensure` or `.repartition(n)` keys the same entry as the
+  * raw frame; a repartition under a Limit or Sample changes content and
+  * stays. A `.materialized()` input still never hits: its checkpoint
+  * leaf carries a fresh RDD identity per materialization.
   *
   * Frame storage: each entry is a PARQUET SNAPSHOT, NOT a
   * cached/checkpointed RDD — block-manager entries die to any
   * `unpersist`-all hygiene sweep (the bench does one per measured
   * query) and executor loss, while a file snapshot survives both and
-  * re-reads as a plain pruned columnar scan. Snapshot PLACEMENT is a
+  * re-reads as a plain pruned columnar scan. Each snapshot records the
+  * schema read back once when it is built, so a hit passes it to the
+  * reader and runs no inference job. Snapshot PLACEMENT is a
   * deployment dial (the same shape as [[Par.materialize]]'s
   * reliable-checkpoint dial):
   *
@@ -70,10 +78,8 @@ import Par.Mat
   * All snapshot IO (write, read, exists, delete) goes through the Hadoop
   * `FileSystem` resolved from the SAME qualified path, so eviction and
   * invalidation always delete the files the write produced. At cluster
-  * scale this is exactly the "build the index once, probe it many times"
-  * lake pattern (CorpusIndex.scala persists the same artifacts
-  * explicitly); the memo just manages the lifecycle for intra-session
-  * reuse.
+  * scale this is the "build the index once, probe it many times" lake
+  * pattern, with the lifecycle managed for intra-session reuse.
   *
   * Lifecycle: eviction past `maxEntries` and invalidation NEVER delete a
   * snapshot directory immediately — handed-out frames are lazy, so a
@@ -83,11 +89,12 @@ import Par.Mat
   * far beyond any plan-to-scan gap in a serving micro-batch or bench
   * pass); a JVM shutdown hook purges everything unconditionally.
   *
-  * Staleness: the memo keys on the input PLAN, not file contents —
-  * immutable inputs per session (the lakehouse norm) make that sound,
-  * but any path that OVERWRITES data a memoized operator may have read
-  * must call [[Memo.invalidateAll]] (the serving layer's publish path
-  * does; it is the moral equivalent of Spark's `REFRESH TABLE`).
+  * Staleness: frame and model memos key on the input PLAN, not file
+  * contents — immutable inputs per session (the lakehouse norm) make
+  * that sound, but any path that OVERWRITES data a memoized operator
+  * may have read must call [[Memo.invalidateAll]] (the serving layer's
+  * publish path does; it is the moral equivalent of Spark's `REFRESH
+  * TABLE`).
   */
 object Memo {
 
@@ -232,7 +239,18 @@ private[graft] abstract class SessionMemo[E](name: String, maxEntries: Int) {
     * dropped. */
   protected final def getOrBuild(inputs: Seq[DataFrame], params: String)
                                 (build: => E): E = {
-    val key = keyOf(inputs, params)
+    require(inputs.nonEmpty, "memo needs at least one input frame")
+    lookup(keyOf(inputs.head.sparkSession, inputs, params))(build)
+  }
+
+  /** The entry keyed on the session and `params` alone, for a value
+    * that depends on no input frame (`params` then names everything the
+    * value is a function of). */
+  protected final def getOrBuild(spark: SparkSession, params: String)
+                                (build: => E): E =
+    lookup(keyOf(spark, Nil, params))(build)
+
+  private def lookup(key: Key)(build: => E): E =
     synchronized { Option(entries.get(key)) }.filter(live) match {
       case Some(e) => hits.incrementAndGet(); e
       case None =>
@@ -247,15 +265,13 @@ private[graft] abstract class SessionMemo[E](name: String, maxEntries: Int) {
           }
         }
     }
-  }
 
-  private def keyOf(inputs: Seq[DataFrame], params: String): Key = {
-    require(inputs.nonEmpty, "memo needs at least one input frame")
-    Key(Memo.sessionId(inputs.head.sparkSession),
+  private def keyOf(spark: SparkSession, inputs: Seq[DataFrame],
+                    params: String): Key =
+    Key(Memo.sessionId(spark),
       inputs.map(df => SessionMemo.placementFree(df.queryExecution.analyzed)
         .canonicalized),
       params)
-  }
 
   /** Whether a stored entry can still be served. */
   protected def live(e: E): Boolean = true
@@ -306,6 +322,10 @@ private[graft] final class ValueMemo[V](name: String, maxEntries: Int = 64)
 
   def getOrCompute(inputs: Seq[DataFrame], params: String)(build: => V): V =
     getOrBuild(inputs, params)(build)
+
+  /** The value keyed on the session and `params` alone. */
+  def getOrCompute(spark: SparkSession, params: String)(build: => V): V =
+    getOrBuild(spark, params)(build)
 }
 
 /** Plan-keyed LRU of parquet-snapshot directories on the filesystem
@@ -354,9 +374,11 @@ private[graft] final class FrameMemo(name: String, maxEntries: Int = 32)
             s"${Memo.sessionId(spark)}/${name}_" +
               java.util.UUID.randomUUID().toString.take(12)))
           build.write.mode("overwrite").parquet(dir.toString)
-          Snap(fs, dir)
+          // read back once: every hit then passes the schema and runs
+          // no inference job
+          Snap(fs, dir, spark.read.parquet(dir.toString).schema)
         }
-        spark.read.parquet(snap.dir.toString)
+        spark.read.schema(snap.schema).parquet(snap.dir.toString)
     }
   }
 
@@ -406,5 +428,6 @@ private[graft] final class FrameMemo(name: String, maxEntries: Int = 32)
 }
 
 private[graft] object FrameMemo {
-  private[graft] final case class Snap(fs: FileSystem, dir: HPath)
+  private[graft] final case class Snap(fs: FileSystem, dir: HPath,
+                                       schema: StructType)
 }

@@ -359,9 +359,8 @@ object Selection {
 
   /** Train the [[logregQuality]] model and return it as a persistable
     * artifact: `(b, wt, mu, s)` rows for b in 0..dim (the bias row
-    * carries mu = 0, s = 1) — parquet-writable like [[CorpusIndex]];
-    * the standardization stats travel WITH the weights so a mismatched
-    * probe cannot happen. Train once, [[logregScore]] many: at 100 TB
+    * carries mu = 0, s = 1) — parquet-writable; the standardization
+    * stats travel WITH the weights so a mismatched probe cannot happen. Train once, [[logregScore]] many: at 100 TB
     * nobody retrains the quality filter per scoring batch. */
   def logregTrain(docs0: DataFrame, idCol: String, textCol: String,
                   label: Column, dim: Int = 64, iters: Int = 30,

@@ -1,7 +1,11 @@
 package graft.queries
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
+
+import graft.analytics.ValueMemo
 
 /** One registered operator-query: the Spark implementation plus (when
   * SQL-expressible) the DuckDB oracle the driver hash-compares against.
@@ -18,6 +22,13 @@ final case class Q(
 object Tables {
   import org.apache.spark.sql.functions._
 
+  /** The schema this session inferred for each table version. Keyed on
+    * the session, the qualified path and the path's recursive file
+    * listing (names, lengths, mtimes): a rewritten table lists
+    * differently and is inferred again, and `Memo.invalidateAll` drops
+    * every entry like any other memo's. */
+  private[graft] val schemas = new ValueMemo[StructType]("parquet_schema")
+
   /** Load a testdata table, normalizing `events.ts` to a session-TZ
     * (UTC) microsecond TIMESTAMP whichever physical form the driver wrote:
     *  - TIMESTAMP(NANOS) + `nanosAsLong=true` → LONG nanoseconds,
@@ -26,14 +37,36 @@ object Tables {
     *  - timestamp[us] without UTC adjustment → TIMESTAMP_NTZ, cast to
     *    TIMESTAMP (the UTC session TZ makes the wall clock the instant).
     * DuckDB oracles read either form natively as a naive timestamp, and
-    * both engines agree at `date_trunc`/`epoch_us` granularity. */
+    * both engines agree at `date_trunc`/`epoch_us` granularity.
+    *
+    * One inference per table version: the first read of a version in a
+    * session runs Spark's footer-inference job; every later read passes
+    * the schema it learned and runs no job until its consumer's action. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
       df.withColumn("ts", col("ts").cast(TimestampType))
     else df
+  }
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val raw = new HPath(path)
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(raw)
+    val root = qualified.toString
+    val files = fs.listFiles(qualified, true)
+    val listing = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (files.hasNext) {
+      val f = files.next()
+      listing += s"${f.getPath.toString.stripPrefix(root)}|${f.getLen}|" +
+        f.getModificationTime
+    }
+    schemas.getOrCompute(spark, (root +: listing.sorted).mkString("\n")) {
+      spark.read.parquet(path).schema
+    }
   }
 }
 

@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared single-file assembly: serialize rows DISTRIBUTED via the text
   * writer, then byte-concatenate the part files on the driver in partition
@@ -70,18 +70,10 @@ object PartFiles {
           "scratch_parts_" + java.util.UUID.randomUUID().toString.take(12)))
         registerScratch(fs, dir)
         try {
-          // AQE's partition coalescing sees a few-MB shuffle and folds the
-          // whole write into ONE task — which serializes every row's string
-          // building onto one core (the sink's only CPU-heavy stage). Keep
-          // the planned partitioning for this write; part-file name order
-          // is partition order, so the concatenated bytes are unchanged.
-          val conf = "spark.sql.adaptive.coalescePartitions.enabled"
-          val prev = spark.conf.getOption(conf)
-          spark.conf.set(conf, "false")
-          try
+          withoutCoalescing(spark) {
             lines.write.mode("overwrite").option("lineSep", lineSep)
               .text(dir.toString)
-          finally prev.foreach(spark.conf.set(conf, _))
+          }
           val parts = fs.listStatus(dir).map(_.getPath)
             .filter(_.getName.startsWith("part-"))
             .sortBy(_.getName)
@@ -107,6 +99,38 @@ object PartFiles {
           each(b, b.length)
           each(sepBytes, sepBytes.length)
         }
+    }
+  }
+
+  // AQE's partition coalescing sees a few-MB shuffle and folds the whole
+  // write into ONE task — which serializes every row's string building
+  // onto one core (the sink's only CPU-heavy stage). Drains keep the
+  // planned partitioning; part-file name order is partition order, so the
+  // concatenated bytes are unchanged. The conf is the shared session's,
+  // so overlapping drains share one scope per session: the first saves
+  // the caller's value and switches coalescing off, the last restores it.
+  private val CoalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
+  private val coalesceScopes =
+    scala.collection.mutable.HashMap.empty[SparkSession, (Int, Option[String])]
+
+  private def withoutCoalescing[A](spark: SparkSession)(body: => A): A = {
+    coalesceScopes.synchronized {
+      val (depth, saved) = coalesceScopes.getOrElse(spark,
+        (0, spark.conf.getOption(CoalesceConf)))
+      if (depth == 0) spark.conf.set(CoalesceConf, "false")
+      coalesceScopes(spark) = (depth + 1, saved)
+    }
+    try body
+    finally coalesceScopes.synchronized {
+      val (depth, saved) = coalesceScopes(spark)
+      if (depth > 1) coalesceScopes(spark) = (depth - 1, saved)
+      else {
+        coalesceScopes.remove(spark)
+        saved match {
+          case Some(v) => spark.conf.set(CoalesceConf, v)
+          case None => spark.conf.unset(CoalesceConf)
+        }
+      }
     }
   }
 

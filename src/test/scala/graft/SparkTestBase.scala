@@ -24,6 +24,9 @@ object TestSpark {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** The sf0.001 testdata tables (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
+
   /** Evaluate a scalar Column expression over a one-row frame. */
   def evalStr(c: org.apache.spark.sql.Column): String = {
     val row = spark.range(1).select(c.as("v")).collect().head
@@ -41,6 +44,48 @@ abstract class SparkTestBase extends AnyFunSuite {
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The call sites of the Spark jobs `body` runs on this thread, in
+    * start order. A job of a SQL execution is named by the execution's
+    * call site (`collect at CategoryPath.scala:68`), any other job by its
+    * own (`parquet at Catalog.scala:67`, a schema inference). Jobs carry
+    * the job group of the thread that started them, so other threads'
+    * jobs are not counted. */
+  def jobsOf[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val group = "jobs-of-" + java.util.UUID.randomUUID()
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId.toString, x.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(props.flatMap(p =>
+              Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => Option(executions.get(id)))
+            .getOrElse(e.stageInfos.maxBy(_.stageId).name))
+      }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, null) // no description: executions keep their call sites
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, sites.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
     }
   }
 

@@ -415,45 +415,6 @@ class DedupSpec extends SparkTestBase {
     assert(capped(101L)._1 && capped(102L)._2 === 0L && capped(102L)._3)
   }
 
-  test("CorpusIndex: write -> read round-trips the probe verdicts, " +
-       "params travel with the artifact, merged() catches the next dup") {
-    import spark.implicits._
-    val base = "the quick brown fox jumps over the lazy dog again and again"
-    val corpus = Seq((10L, base),
-      (30L, "some totally separate corpus document about other things"))
-      .toDF("doc_id", "text")
-    val shard = Seq((101L, base),
-      (103L, "a wholly new document sharing no phrasing with anything"))
-      .toDF("doc_id", "text")
-    val idx = CorpusIndex.build(corpus, "doc_id", "text",
-      n = 2, numHashes = 6, bandSize = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cidx").toString
-    idx.write(dir)
-    val loaded = CorpusIndex.read(spark, dir)
-    assert((loaded.n, loaded.numHashes, loaded.bandSize) === ((2, 6, 3)))
-    val direct = Dedup.incrementalDedup(shard, "doc_id", "text",
-        idx.fingerprints, idx.bands, idx.n, idx.numHashes,
-        idx.bandSize)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val viaDisk = Dedup.incrementalDedup(shard, "doc_id", "text",
-        loaded.fingerprints, loaded.bands, loaded.n, loaded.numHashes,
-        loaded.bandSize)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(direct.toSeq === viaDisk.toSeq)
-    assert(direct(0)(1) === true && direct(1)(3) === true)
-    // accept doc 103, merge it in: its exact copy is now screened out
-    val accepted = shard.filter($"doc_id" === 103L)
-    val grown = idx.merged(accepted, "doc_id", "text")
-    val next = Seq((201L, "a wholly new document sharing no phrasing with anything"))
-      .toDF("doc_id", "text")
-    val verdict = Dedup.incrementalDedup(next, "doc_id", "text",
-        grown.fingerprints, grown.bands, grown.n, grown.numHashes,
-        grown.bandSize)
-      .collect().head
-    assert(verdict.getBoolean(1) && !verdict.getBoolean(3),
-      s"merged index must catch the accepted doc's copy: $verdict")
-  }
-
   test("editDistanceVerify: exact distances under the threshold, -1 " +
        "above it, only candidate pairs scored") {
     import spark.implicits._

@@ -24,6 +24,18 @@ class MemoSpec extends SparkTestBase {
     (i.toLong, text)
   }.toDF("doc_id", "text")
 
+  private def rmTree(dir: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(dir)
+    val all = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.toSeq
+    } finally walk.close()
+    all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("getOrCompute builds once per key, hits on the identical key " +
        "bit-for-bit, and fragments the key on params") {
     val memo = new FrameMemo("spec")
@@ -62,14 +74,7 @@ class MemoSpec extends SparkTestBase {
       memo.invalidate()
       call()
       assert(builds == 2, "invalidate must force a rebuild")
-    } finally {
-      val walk = java.nio.file.Files.walk(dir)
-      val all = try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq
-      } finally walk.close()
-      all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally rmTree(dir)
   }
 
   test("LSH candidate graph: the second gate-shaped consumer reads the " +
@@ -142,7 +147,7 @@ class MemoSpec extends SparkTestBase {
   test("gate-level cold/warm differential: representative memoized " +
        "catalog gates return IDENTICAL rows with the memos invalidated " +
        "vs warm (the driver-gate soundness claim, end-to-end)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sf0001
     val spark0 = spark
     // one consumer per memo family: candidate graph (graph gate),
     // jaccard superset (histogram gate), basket pairs (rules gate),
@@ -196,12 +201,7 @@ class MemoSpec extends SparkTestBase {
         "second call must hit the configured-dir snapshot")
     } finally {
       spark.conf.unset("spark.graft.memo.dir")
-      val walk = java.nio.file.Files.walk(root)
-      val all = try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq
-      } finally walk.close()
-      all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      rmTree(root)
     }
   }
 
@@ -493,5 +493,81 @@ class MemoSpec extends SparkTestBase {
     Selection.logregTrain(d, "doc_id", "text", label, dim = 8, iters = 2)
     assert(Selection.logregModels.hits.get() == mHits2,
       "invalidateAll must drop trained models")
+  }
+
+  test("parquet_schema: for all ten sf0.001 tables the memo read has the " +
+       "schema and rows of a plain read (events.ts normalized), and a " +
+       "second read is a hit that runs no job") {
+    import graft.queries.Tables
+    import org.apache.spark.sql.types._
+    val dir = sf0001
+    Memo.invalidateAll()
+    for (t <- Seq("customer", "documents", "embeddings", "events",
+        "lineitem", "nation", "orders", "part", "region", "supplier")) {
+      val raw = spark.read.parquet(s"$dir/$t.parquet")
+      val plain = if (t != "events") raw else raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+        case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+        case _ => raw
+      }
+      Tables(spark, dir, t)
+      val hits = Tables.schemas.hits.get()
+      val (memo, jobs) = jobsOf(Tables(spark, dir, t))
+      assert(Tables.schemas.hits.get() == hits + 1, s"$t: second read must hit")
+      assert(jobs.isEmpty, s"$t: a memo read must run no job: $jobs")
+      assert(memo.schema == plain.schema, s"$t: schema differs")
+      assert(rows(memo) == rows(plain), s"$t: rows differ")
+      if (t == "events") assert(memo.schema("ts").dataType == TimestampType)
+    }
+  }
+
+  test("parquet_schema: a table rewritten at the same path with another " +
+       "schema is inferred again (the key holds the file listing), and " +
+       "invalidateAll drops the memo") {
+    import graft.queries.Tables
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema_memo")
+    val path = s"$dir/t.parquet"
+    try {
+      Seq((1L, "a"), (2L, "b")).toDF("id", "t").write.parquet(path)
+      assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("id", "t"))
+      val builds = Tables.schemas.builds.get()
+      Tables(spark, dir.toString, "t")
+      assert(Tables.schemas.builds.get() == builds, "same version must hit")
+      Seq((3L, "c", 0.5)).toDF("id", "t", "x")
+        .write.mode("overwrite").parquet(path)
+      val v2 = Tables(spark, dir.toString, "t")
+      assert(Tables.schemas.builds.get() == builds + 1,
+        "a rewritten table must be inferred again")
+      assert(v2.columns.toSeq == Seq("id", "t", "x"))
+      assert(rows(v2) == Seq("[3,c,0.5]"))
+      Memo.invalidateAll()
+      Tables(spark, dir.toString, "t")
+      assert(Tables.schemas.builds.get() == builds + 2,
+        "invalidateAll must drop the schema memo")
+    } finally rmTree(dir)
+  }
+
+  test("a FrameMemo hit runs no job before its consumer's action") {
+    val memo = new FrameMemo("nojobhit")
+    val in = Seq((1, "a"), (2, "b")).toDF("k", "v")
+    def call() = memo.getOrCompute(Seq(in), "p") {
+      in.groupBy($"k").agg(count(lit(1)).as("n"))
+    }
+    val built = rows(call())
+    val (hit, jobs) = jobsOf(call())
+    assert(memo.hits.get() == 1)
+    assert(jobs.isEmpty, s"a snapshot hit must run no job: $jobs")
+    assert(rows(hit) == built)
+  }
+
+  test("q90 followed by q19 builds doc_shingles and minhash_sigs once each") {
+    val dir = sf0001
+    Memo.invalidateAll()
+    val sh0 = Dedup.shingleMemo.builds.get()
+    val sg0 = Dedup.sigsMemo.builds.get()
+    for (q <- Seq("q90_minhash_estimate", "q19_minhash_lsh"))
+      graft.queries.Catalog.byName(q).run(spark, dir).collect()
+    assert(Dedup.shingleMemo.builds.get() - sh0 === 1)
+    assert(Dedup.sigsMemo.builds.get() - sg0 === 1)
   }
 }

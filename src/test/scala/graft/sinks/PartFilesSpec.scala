@@ -120,4 +120,59 @@ class PartFilesSpec extends SparkTestBase {
     assert(viaParts === viaIter)
     assert(viaParts.contains("\"total\": 97"))
   }
+
+  test("overlapping drains keep coalescing off until the last one ends, " +
+       "then restore the caller's setting once") {
+    import java.util.concurrent.TimeUnit.SECONDS
+    import PartFilesSpec.{gates, rowOf}
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(key)
+    gates.clear()
+    Seq("a", "b").foreach(g => gates.put(g, PartFilesSpec.Gate()))
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def drainIn(g: String): Thread = {
+      val frame = spark.range(1)
+        .map(i => rowOf(g, i))(org.apache.spark.sql.Encoders.STRING).toDF()
+      val t = new Thread(() =>
+        try drained(frame, "\n") catch { case e: Throwable => err.set(e) })
+      t.start()
+      t
+    }
+    try {
+      val a = drainIn("a")
+      assert(gates.get("a").started.await(60, SECONDS))
+      assert(spark.conf.get(key) == "false")
+      val b = drainIn("b")
+      assert(gates.get("b").started.await(60, SECONDS))
+      gates.get("a").release.countDown()
+      a.join(60000)
+      assert(spark.conf.get(key) == "false",
+        "a drain still running must keep coalescing off")
+      gates.get("b").release.countDown()
+      b.join(60000)
+      assert(err.get() == null, s"a drain failed: ${err.get()}")
+      assert(spark.conf.getOption(key) == before,
+        "the last drain must restore the pre-drain setting")
+    } finally {
+      gates.values().forEach(_.release.countDown())
+      before.foreach(spark.conf.set(key, _))
+    }
+  }
+}
+
+object PartFilesSpec {
+  import java.util.concurrent.CountDownLatch
+
+  /** A drain's one row signals `started` and waits for `release`; tasks
+    * run in this JVM, so the spec orders two drains through these. */
+  final case class Gate(started: CountDownLatch = new CountDownLatch(1),
+                        release: CountDownLatch = new CountDownLatch(1))
+
+  val gates = new java.util.concurrent.ConcurrentHashMap[String, Gate]()
+
+  def rowOf(g: String, i: Long): String = {
+    gates.get(g).started.countDown()
+    gates.get(g).release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    s"$g$i"
+  }
 }
