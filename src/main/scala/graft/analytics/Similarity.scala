@@ -49,7 +49,7 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  def norm(a: Column): Column =
+  private[graft] def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
   /** Cosine via the native codegen'd [[graft.functions.CosineSimilarity]]

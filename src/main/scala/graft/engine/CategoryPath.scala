@@ -13,12 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
   * (reference `build_category_path` main.py:1487-1507; maps built
   * main.py:1477-1485).
   *
-  * The reference walks a parent-pointer hash map per row on the driver. At
-  * scale the right shape is: materialize `id -> path` ONCE on the (small)
-  * dimension via an iterative self-join to fixpoint, then broadcast-join the
-  * result to the fact table. The per-iteration join is dimension×dimension
-  * (tiny, broadcast); the single fact-side join is broadcast too, so path
-  * resolution adds NO shuffle to the fact table at any scale.
+  * The reference walks a parent-pointer hash map per row on the driver.
+  * Here `id -> path` is materialized ONCE on the (small) dimension — by the
+  * same driver walk, or past the `graph` gate by an iterative self-join to
+  * fixpoint — and [[attach]] broadcast-joins the result to the fact table,
+  * so path resolution adds NO shuffle to the fact table at any scale.
   */
 object CategoryPath {
 
@@ -38,7 +37,9 @@ object CategoryPath {
 
   /** Like [[resolvePaths]] but returns the raw root-first segment array, for
     * callers that post-filter segments (the reference's YML walk skips
-    * 'Undefined'-named categories, main.py:1498-1501).
+    * 'Undefined'-named categories, main.py:1498-1501). One row per id; a
+    * duplicate id takes its last definition in input order, like the
+    * reference's dicts, and the last segment is always the id's own name.
     *
     * Two physical strategies, same semantics, chosen by the `graph` gate
     * ([[Par.gate]]) over the dimension's row count:
@@ -47,8 +48,8 @@ object CategoryPath {
     *    collect the parent-pointer maps and walk on the driver, exactly the
     *    reference's two-hash-map walk (main.py:1477-1507). One tiny collect
     *    job instead of ~2 jobs per hierarchy level. The result is a local
-    *    relation: its exact size estimate is what lets
-    *    `XmlSource.categoryPaths`'s unhinted join broadcast.
+    *    relation, so every later action on it reads driver memory, not
+    *    the dimension's source.
     *  - larger hierarchies: iterative broadcast self-join to fixpoint
     *    (bounded by maxDepth), never collecting the dimension.
     */
@@ -74,7 +75,9 @@ object CategoryPath {
       parentOf(id) = r.getString(1)
       nameOf(id) = r.getString(2)
     }
-    val out = rows.toSeq.map { r =>
+    // one row per id, at its first position; the maps hold its last
+    // definition
+    val out = rows.toSeq.distinctBy(_.getString(0)).map { r =>
       val id   = r.getString(0)
       val segs = scala.collection.mutable.ListBuffer(nameOf(id))
       val seen = scala.collection.mutable.HashSet(id)
@@ -99,10 +102,19 @@ object CategoryPath {
 
   /** Iterative broadcast self-join to fixpoint — the no-collect path for
     * hierarchies too large to hold on the driver. */
-  private def resolveSegsIterative(edges: DataFrame,
+  private def resolveSegsIterative(all: DataFrame,
                                    maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
+    val spark = all.sparkSession
     import spark.implicits._
+    // each id's last definition in input order, the one the local walk's
+    // maps keep
+    val edges = all
+      .withColumn("__pos", monotonically_increasing_id())
+      .groupBy($"id")
+      .agg(max_by(struct($"parentId", $"name"), $"__pos").as("__def"))
+      .select($"id", $"__def.parentId".as("parentId"),
+              $"__def.name".as("name"))
+      .materialized()
 
     // state: (id, cur = next ancestor to visit, segs = path so far root-first,
     //         seen = visited ids for cycle guard)

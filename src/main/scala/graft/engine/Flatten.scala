@@ -189,14 +189,7 @@ object Flatten {
 
     // -- J1 category broadcast join (YML)
     if (isYml) categoryPaths match {
-      case Some(paths) =>
-        flat
-          .join(broadcast(paths.select(col("id").as("__cid"),
-                                       col("category_path"))),
-                flat("categoryId") === col("__cid"), "left")
-          .drop("__cid")
-          .withColumn("category_path",
-                      coalesce(col("category_path"), lit("Undefined")))
+      case Some(paths) => CategoryPath.attach(flat, "categoryId", paths)
       case None => flat.withColumn("category_path", lit("Undefined"))
     } else flat
   }

@@ -1994,11 +1994,10 @@ object AnalyticsQueries {
 
     // ----- hourly distinct-user HLL over the events stream shape -----
     Q("q118_hourly_hll_users",
-      "distinct users per hour via the HLL register fold — the SAME " +
-        "register expressions stream as one watermarked agg " +
-        "(EventStreams.hllUserRegisters, differential spec) where " +
-        "count(distinct) cannot stream; linear-counting regime at this " +
-        "cardinality",
+      "distinct users per hour via the HLL register fold — per-(hour, " +
+        "bucket) max registers (Sketches.withHllCols) folded to an " +
+        "estimate (Sketches.estimateFromRegisters); linear-counting " +
+        "regime at this cardinality",
       Some("""WITH h AS (
              |  SELECT date_trunc('hour', ts) AS hour,
              |         ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h

@@ -222,10 +222,7 @@ object XmlSource {
       .xml(elems)
   }
 
-  /** YML category dimension: `<category id parentId>name</category>` rows
-    * (reference builds two hash maps, main.py:1477-1485). The element shape
-    * is fixed, so the schema is supplied explicitly — skipping the
-    * inference pass halves the file scans. */
+  /** The category element's fixed shape (the parse infers nothing). */
   private val CatSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -233,23 +230,26 @@ object XmlSource {
       StructField(ValueTag, StringType)))
   }
 
-  /** Bounded head scan for the category dictionary: YML feeds put
-    * `<categories>` in the head, so the driver streams the file only until
-    * `</categories>` (capped), then the collected block parses as element
-    * strings. A whole-file approach — multiLine scan OR lineSep split on
-    * `</category>` — would walk/materialize the entire feed for a
-    * dictionary-sized result (the split variant is worse: everything after
-    * the LAST category becomes one text record, multi-GB on a large feed).
-    */
-  def readCategoriesSplit(spark: SparkSession, path: String,
-                          maxHeadBytes: Long = 256L << 20): DataFrame = {
+  /** How far [[readCategories]] streams looking for `</categories>`. */
+  private val CategoryHeadCapBytes = 256L << 20
+
+  /** YML category dimension: `<category id parentId>name</category>` rows
+    * (reference builds two hash maps, main.py:1477-1485), by one bounded
+    * head scan at every file size: YML feeds put `<categories>` in the
+    * head, so the driver streams the file only until `</categories>` and
+    * the matched elements parse as a local dataset with a fixed schema.
+    * No later action re-reads the feed for categories; a whole-file
+    * multiLine `rowTag=category` read would re-scan it on every action. A
+    * self-closing `<category .../>` is one element; `<categoryId>` and
+    * `<categories>` are not categories. Names are trimmed; a missing or
+    * blank name is `Undefined`. */
+  def readCategories(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val endMark = "</categories>"
     // accumulate BYTES and decode once: per-chunk decoding would corrupt
     // multibyte (Cyrillic) names straddling a chunk boundary; the ASCII
     // end marker is searched in the byte domain with a carry for the
     // straddling case
-    val marker = endMark.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    val marker = "</categories>".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     def indexOfBytes(hay: Array[Byte], needle: Array[Byte]): Int = {
       var i = 0
       while (i <= hay.length - needle.length) {
@@ -266,7 +266,7 @@ object XmlSource {
       val buf = new Array[Byte](1 << 20)
       var carry = Array.empty[Byte]
       var done = false
-      while (!done && out.size < maxHeadBytes) {
+      while (!done && out.size < CategoryHeadCapBytes) {
         val n = in.read(buf)
         if (n < 0) done = true
         else {
@@ -279,9 +279,11 @@ object XmlSource {
     } finally in.close()
     val head = new String(out.toByteArray,
       java.nio.charset.StandardCharsets.UTF_8)
-    val catRe =
-      java.util.regex.Pattern.compile("<category[\\s/>].*?</category>",
-        java.util.regex.Pattern.DOTALL)
+    // start tag with quoted attribute values (a `/` or `>` inside quotes
+    // does not end it), then either `/>` or a body up to `</category>`
+    val catRe = java.util.regex.Pattern.compile(
+      "<category(?:\\s(?:[^>\"'/]|\"[^\"]*\"|'[^']*')*+)?(?:/>|>.*?</category>)",
+      java.util.regex.Pattern.DOTALL)
     val m = catRe.matcher(head)
     val elems = scala.collection.mutable.ArrayBuffer.empty[String]
     while (m.find()) elems += m.group()
@@ -291,44 +293,27 @@ object XmlSource {
       .option("valueTag", ValueTag)
       .schema(CatSchema)
       .xml(spark.createDataset(elems.toSeq))
+      .select(
+        col("_id").as("id"),
+        col("_parentId").as("parentId"),
+        coalesce(nullif(trim(col(ValueTag)), lit("")), lit("Undefined"))
+          .as("name"))
   }
 
-  def readCategories(spark: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    val df =
-      if (f.isFile && f.length >= SplitThresholdBytes)
-        readCategoriesSplit(spark, path)
-      else spark.read
-        .format("xml")
-        .option("rowTag", "category")
-        .option("attributePrefix", AttrPrefix)
-        .option("valueTag", ValueTag)
-        .schema(CatSchema)
-        .load(path)
-    val name =
-      if (df.columns.contains(ValueTag)) col(ValueTag).cast("string")
-      else lit(null).cast("string")
-    val parent =
-      if (df.columns.contains("_parentId")) col("_parentId").cast("string")
-      else lit(null).cast("string")
-    df.select(
-      col("_id").cast("string").as("id"),
-      parent.as("parentId"),
-      coalesce(nullif(trim(name), lit("")), lit("Undefined")).as("name"))
-  }
-
-  /** Materialized `id -> category_path` with the reference's walk semantics
+  /** `id -> category_path` with the reference's walk semantics
     * (main.py:1487-1507): 'Undefined'-named segments are skipped; an empty
-    * filtered path falls back to the category's own name. */
+    * filtered path falls back to the category's own name, which is the
+    * last segment of the walk. Each id has one path (a duplicate id's last
+    * definition, like the reference's dicts). No join: the path table is
+    * the walk's own result, which no later action recomputes. */
   def categoryPaths(cats: DataFrame): DataFrame = {
     val spark = cats.sparkSession
     import spark.implicits._
-    val segs = CategoryPath.resolveSegs(cats)
-    segs
-      .join(cats.select($"id", $"name"), Seq("id"))
+    val kept = filter($"segs", s => s =!= "Undefined")
+    CategoryPath.resolveSegs(cats)
       .select($"id",
-        when(size(filter($"segs", s => s =!= "Undefined")) === 0, $"name")
-          .otherwise(array_join(filter($"segs", s => s =!= "Undefined"), "///"))
+        when(size(kept) === 0, element_at($"segs", -1))
+          .otherwise(array_join(kept, "///"))
           .as("category_path"))
   }
 }

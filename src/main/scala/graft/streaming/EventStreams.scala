@@ -8,36 +8,15 @@ import org.apache.spark.sql.functions._
 /** Event-log operators over the `events` table shape (SURVEY.md §2.8:
   * the reference is batch-only). The catalog runs the batch operators —
   * q54's [[sessionizeBatch]] and q278's [[psiMonitorBatch]] — and q192
-  * runs [[clickAttribution]] on batch frames. [[clickAttribution]] and
-  * [[hllUserRegisters]] are also stream-safe: watermarked, with
-  * state bounded by the watermark, so a caller may hand them a
-  * `readStream` frame unchanged (EventStreamsSpec runs both over a
-  * memory stream against their batch forms).
+  * runs [[clickAttribution]] on batch frames. [[clickAttribution]] is
+  * also stream-safe: watermarked, with state bounded by the watermark,
+  * so a caller may hand it a `readStream` frame unchanged
+  * (EventStreamsSpec runs it over memory streams).
   */
 object EventStreams {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                          event_type: String, value: Double, props: String)
-
-  /** Streaming HLL register table for distinct users per tumbling hour:
-    * `(win, bucket, r)` — the MERGEABLE sketch state (<= 64 small-int
-    * rows per window), as ONE watermarked aggregation. This is how
-    * distinct-per-window streams at scale: `count(distinct)` cannot
-    * stream at all (unbounded state, and the estimate fold would be a
-    * second chained aggregation); the register stream keeps
-    * watermark-bounded state and downstream (foreachBatch / the batch
-    * reader) folds registers with
-    * [[graft.analytics.Sketches.estimateFromRegisters]]. Registers are
-    * built by the SAME expression builder as the batch estimator
-    * ([[graft.analytics.Sketches.withHllCols]]), so stream and batch
-    * cannot drift — the q118 differential spec pins it. */
-  def hllUserRegisters(events: DataFrame,
-                       watermark: String = "2 hours"): DataFrame =
-    graft.analytics.Sketches.withHllCols(
-        events.withWatermark("ts", watermark),
-        col("user_id").cast("string"))
-      .groupBy(window(col("ts"), "1 hour").as("win"), col("bucket"))
-      .agg(max(col("rho")).as("r"))
 
   /** Stream-STREAM interval join: attribute each purchase to a click by
     * the same user within the preceding `windowMinutes`. Both sides are

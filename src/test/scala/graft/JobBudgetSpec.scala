@@ -6,7 +6,8 @@ import graft.analytics.Memo
 import graft.queries.Catalog
 
 /** Spark jobs per query for the nine queries of the `catalog_core`
-  * benchmark workload, at sf0.001, checked against a committed budget.
+  * benchmark workload, at sf0.001, and per XML feed route on the four
+  * FIXTURES.md dialect files, checked against a committed budget.
   * PlanShapeSpec pins plan shapes, not how many times a plan runs; a
   * recompute, an extra `count()` or a schema-inference read adds jobs
   * and fails here, naming every job's call site.
@@ -30,6 +31,13 @@ class JobBudgetSpec extends SparkTestBase {
     "q90_minhash_estimate" -> (18, 3),
     "q19_minhash_lsh" -> (17, 3))
 
+  /** fixture -> (target node, jobs of one XML -> CSV conversion) */
+  private val feedBudget = Map(
+    "yml_offer.xml" -> ("auto", 11),
+    "product.xml" -> ("product", 8),
+    "russian_1c.xml" -> ("auto", 4),
+    "service.xml" -> ("auto", 4))
+
   private def consume(q: String): Unit = {
     val df = Catalog.byName(q).run(spark, sf0001)
     df.select(xxhash64(df.columns.map(c => col("`" + c + "`")).toIndexedSeq: _*))
@@ -47,6 +55,23 @@ class JobBudgetSpec extends SparkTestBase {
             sites.mkString("\n    ")
       }
     }
+    if (over.nonEmpty) fail("job counts off budget (a count below " +
+      "budget lowers the budget):\n  " + over.mkString("\n  "))
+  }
+
+  test("XML feed routes convert to CSV within their job budgets") {
+    val out = java.nio.file.Files.createTempDirectory("graft_jobbudget")
+    val over = feedBudget.toSeq.sortBy(_._1).flatMap {
+      case (f, (node, want)) =>
+        val in = getClass.getResource(s"/fixtures/$f").getPath
+        val (csv, sites) = jobsOf(
+          Pipeline.processXmlFileToCsv(spark, in, out.toString, node))
+        java.nio.file.Files.delete(csv)
+        if (sites.size == want) Nil
+        else Seq(s"$f ($node): ${sites.size} jobs, budget $want:\n    " +
+          sites.mkString("\n    "))
+    }
+    java.nio.file.Files.delete(out)
     if (over.nonEmpty) fail("job counts off budget (a count below " +
       "budget lowers the budget):\n  " + over.mkString("\n  "))
   }

@@ -27,8 +27,7 @@ import scala.jdk.CollectionConverters._
   *    codegen-or-native rule and the no-padding rule, kept hard;
   *  - every public def is named by main or perfbench source besides its
   *    own definition — a def only specs call is code no entry point
-  *    runs (spec reference kernels are `private[graft]`; the few that
-  *    stay public carry their reason in [[uncalledPublicDefs]]).
+  *    runs (spec reference kernels are `private[graft]`).
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -39,12 +38,6 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   private def mainSources: Seq[Path] = sourcesUnder("src/main/scala")
-
-  /** Public defs that no main or perfbench source names, each with the
-    * reason it stays public. */
-  private val uncalledPublicDefs = Map(
-    "hllUserRegisters" -> ("stream-safe register builder: EventStreamsSpec " +
-      "runs it over a memory stream against q118's batch registers"))
 
   test("no direct localCheckpoint outside Par.materialize") {
     val offenders = mainSources.filterNot(_.endsWith("Par.scala"))
@@ -155,11 +148,8 @@ class SourceHygieneSpec extends AnyFunSuite {
       name = m.group(2)
       if name != "main" && named(name) <= defined(name)
     } yield (p.getFileName.toString, name)
-    val (allowed, bad) = uncalled.partition(u => uncalledPublicDefs.contains(u._2))
-    assert(bad.isEmpty, "public defs that no entry-point source names — " +
-      "delete them, narrow a spec reference kernel to private[graft], or " +
-      s"list the def with its reason: ${bad.mkString(", ")}")
-    assert(allowed.map(_._2).toSet === uncalledPublicDefs.keySet,
-      "an allowed def is named now or gone: drop it from the list")
+    assert(uncalled.isEmpty, "public defs that no entry-point source " +
+      "names — delete them or narrow a spec reference kernel to " +
+      s"private[graft]: ${uncalled.mkString(", ")}")
   }
 }

@@ -331,22 +331,102 @@ class XmlSourceSpec extends SparkTestBase {
     }
   }
 
-  test("S2 split category read matches the multiLine category read " +
-       "(categoryId tags in offers must not confuse the splitter)") {
-    val path = fixture("yml_offer.xml")
-    val plain = spark.read.format("xml")
-      .option("rowTag", "category")
-      .option("attributePrefix", XmlSource.AttrPrefix)
-      .option("valueTag", XmlSource.ValueTag)
-      .load(path)
-      .select(col("_id").cast("string"), col("_parentId").cast("string"),
-              col(XmlSource.ValueTag).cast("string"))
-      .orderBy("_id").collect().toSeq
-    val split = XmlSource.readCategoriesSplit(spark, path)
-      .select(col("_id").cast("string"), col("_parentId").cast("string"),
-              col(XmlSource.ValueTag).cast("string"))
-      .orderBy("_id").collect().toSeq
-    assert(split === plain)
-    assert(split.nonEmpty)
+  private def feedFile(name: String, text: String): String = {
+    val f = java.nio.file.Files.createTempFile(name, ".xml")
+    f.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(f, text)
+    f.toString
+  }
+
+  private def ymlFeed(categories: String, offers: String = ""): String =
+    "<?xml version=\"1.0\" encoding=\"UTF-8\"?><yml_catalog><shop>" +
+      categories + "<offers>" + offers + "</offers></shop></yml_catalog>"
+
+  private def catRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("id"), col("parentId"), col("name"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+
+  test("S2 the head-scan category read matches the multiLine category read " +
+       "(self-closing elements, entities, CDATA, a multibyte name across " +
+       "the read chunk, categoryId tags, no categories block)") {
+    import org.apache.spark.sql.functions.{coalesce, lit, nullif, trim}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    // the name straddles the scan's 1 MiB read chunk: its first Cyrillic
+    // character's two bytes sit on either side of the boundary
+    val open = "<?xml version=\"1.0\"?><yml_catalog><shop><company>"
+    val catOpen = "</company><categories><category id=\"1\">"
+    val pad = (1 << 20) - 1 - open.length - catOpen.length
+    val straddle = open + "x" * pad + catOpen + "Люстры</category>" +
+      "<category id=\"2\" parentId=\"1\">Бра</category></categories>" +
+      "<offers><offer id=\"9\"><categoryId>2</categoryId></offer></offers>" +
+      "</shop></yml_catalog>"
+    val cases = Seq(
+      "FIXTURES yml_offer.xml" -> fixture("yml_offer.xml"),
+      // past the split threshold: the scan once read a self-closing
+      // element and the next one as one record there
+      "self-closing category" -> feedFile("cat_selfclose", ymlFeed(
+        "<categories><category id=\"1\">A</category>" +
+          "<category id=\"2\" parentId=\"1\"/>" +
+          "<category id=\"3\" parentId=\"2\">C</category>" +
+          "<category id=\"4\" parentId=\"1\" /></categories>",
+        "<offer id=\"1\"><description>" +
+          "x" * XmlSource.SplitThresholdBytes.toInt + "</description></offer>")),
+      "entities and CDATA" -> feedFile("cat_entities", ymlFeed(
+        "<categories><category id=\"1\">Tools &amp; Hardware</category>" +
+          "<category id=\"2\" parentId=\"1\"><![CDATA[Lamps & <Shades>]]>" +
+          "</category><category id=\"3\" parentId=\"1\">  </category>" +
+          "</categories>")),
+      "multibyte name across the read chunk" -> feedFile("cat_chunk", straddle),
+      "categoryId inside offers" -> feedFile("cat_offers_first",
+        "<yml_catalog><shop><offers>" +
+          "<offer id=\"7\"><categoryId>2</categoryId></offer></offers>" +
+          "<categories><category id=\"2\">Two</category></categories>" +
+          "</shop></yml_catalog>"),
+      "no categories block" -> feedFile("cat_none", ymlFeed("",
+        "<offer id=\"1\"><categoryId>5</categoryId></offer>")))
+    val schema = StructType(Seq(StructField("_id", StringType),
+      StructField("_parentId", StringType),
+      StructField(XmlSource.ValueTag, StringType)))
+    for ((what, path) <- cases) {
+      val multiLine = spark.read.format("xml")
+        .option("rowTag", "category")
+        .option("attributePrefix", XmlSource.AttrPrefix)
+        .option("valueTag", XmlSource.ValueTag)
+        .schema(schema)
+        .load(path)
+        .select(col("_id").as("id"), col("_parentId").as("parentId"),
+          coalesce(nullif(trim(col(XmlSource.ValueTag)), lit("")),
+            lit("Undefined")).as("name"))
+      assert(catRows(XmlSource.readCategories(spark, path)) ===
+        catRows(multiLine), what)
+    }
+    assert(catRows(XmlSource.readCategories(spark, cases(1)._2)) === Seq(
+      ("1", null, "A"), ("2", "1", "Undefined"), ("3", "2", "C"),
+      ("4", "1", "Undefined")))
+    assert(catRows(XmlSource.readCategories(spark, cases(3)._2)).map(_._3) ===
+      Seq("Люстры", "Бра"))
+  }
+
+  test("J2 a duplicate category id has one path, its last definition, " +
+       "so each offer is emitted once (both gate branches)") {
+    val path = feedFile("cat_dup", ymlFeed(
+      "<categories><category id=\"1\">Old</category>" +
+        "<category id=\"2\" parentId=\"1\">Child</category>" +
+        "<category id=\"1\">New</category></categories>",
+      "<offer id=\"10\"><categoryId>1</categoryId></offer>" +
+        "<offer id=\"20\"><categoryId>2</categoryId></offer>"))
+    def offers() = Flatten.flattenOffers(
+        XmlSource.read(spark, path, XmlSource.Yml), XmlSource.Yml,
+        Some(XmlSource.categoryPaths(XmlSource.readCategories(spark, path))))
+      .select("attr_id", "category_path").collect()
+      .map(r => r.getString(0) -> r.getString(1)).sorted.toSeq
+    val want = Seq("10" -> "New", "20" -> "New///Child")
+    val (local, gL) = gatesOf(offers())
+    assert(gL === Map("graph" -> (1L, 0L)))
+    assert(local === want)
+    val (iter, gI) = gatesOf(withConf("spark.graft.gate.graph" -> "0")(offers()))
+    assert(gI === Map("graph" -> (0L, 1L)))
+    assert(iter === want)
   }
 }

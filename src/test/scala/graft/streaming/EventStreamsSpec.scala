@@ -23,33 +23,6 @@ class EventStreamsSpec extends SparkTestBase {
     spark.table(name)
   }
 
-  test("hllUserRegisters: streamed registers equal the batch registers " +
-       "and fold to the same estimate (shared expression builder)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val events = (1 to 40).map(i => ev(i, minute = (i % 2) * 60 + i % 50,
-      user = (i % 13).toLong)) // 13 distinct users across 2 hours
-    in.addData(events: _*)
-    val streamed = runAll("hllregs",
-        EventStreams.hllUserRegisters(in.toDF()), "complete")
-      .select(col("win.start").as("hour"), col("bucket"), col("r"))
-    val batchDf = events.toDF()
-    val batch = graft.analytics.Sketches.withHllCols(
-        batchDf, col("user_id").cast("string"))
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("bucket"))
-      .agg(max(col("rho")).as("r"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getInt(2))).toSet
-    assert(rows(streamed) === rows(batch), "register tables must match")
-    val est = graft.analytics.Sketches
-      .estimateFromRegisters(streamed, Seq("hour"))
-      .collect().map(r => r.getTimestamp(0) -> r.getDouble(2)).toMap
-    // small-cardinality regime -> linear counting, near-exact
-    est.values.foreach(e => assert(math.abs(e - 13.0) / 13.0 < 0.3,
-      s"estimate $e far from 13 distinct users"))
-  }
-
   test("stream-stream click attribution joins purchases to clicks within " +
        "the window, across micro-batches, bounded state") {
     import spark.implicits._
