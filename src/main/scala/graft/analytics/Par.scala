@@ -162,6 +162,31 @@ object Par {
     * mmrRerankFrom ask only for orderable ids, and an mmr shortlist
     * holding nulls falls through after a local decision. */
   def gate(spark: SparkSession, name: String, sizes: Long*): Boolean = {
+    val total = sizes.foldLeft(0L)((acc, n) =>
+      if (acc > Long.MaxValue - n) Long.MaxValue else acc + n)
+    decide(spark, name)(t => total > 0 && total <= t)
+  }
+
+  /** [[gate]] decided on the rows themselves, for a site whose local
+    * branch walks the input: one bounded collect of at most threshold + 1
+    * rows, `Some(rows)` iff 0 < rows <= threshold, else `None`. The local
+    * branch reuses the collected rows, so there is no count first; a
+    * local relation collects with no job. `limit` takes an `Int`, so the
+    * probe is capped at `Int.MaxValue` rows, more than a driver holds. */
+  def gateRows(spark: SparkSession, name: String,
+               df: DataFrame): Option[Array[Row]] = {
+    var rows = Array.empty[Row]
+    val isLocal = decide(spark, name) { t =>
+      val probe = math.min(t, Int.MaxValue - 1L) + 1
+      if (t >= 1) rows = df.limit(probe.toInt).collect()
+      rows.nonEmpty && rows.length < probe
+    }
+    Option.when(isLocal)(rows)
+  }
+
+  /** Reads the gate's threshold, lets `isLocal` answer, counts the answer. */
+  private def decide(spark: SparkSession, name: String)(
+      isLocal: Long => Boolean): Boolean = {
     val (default, local, distributed) = gates.getOrElse(name,
       throw new IllegalArgumentException(s"unknown size gate '$name' " +
         s"(known: ${gates.keys.toSeq.sorted.mkString(", ")})"))
@@ -170,11 +195,9 @@ object Par {
     val threshold = raw.trim.toLongOption.getOrElse(
       throw new IllegalArgumentException(
         s"$key must be a whole number of rows, got '$raw'"))
-    val total = sizes.foldLeft(0L)((acc, n) =>
-      if (acc > Long.MaxValue - n) Long.MaxValue else acc + n)
-    val isLocal = total > 0 && total <= threshold
-    (if (isLocal) local else distributed).incrementAndGet()
-    isLocal
+    val answer = isLocal(threshold)
+    (if (answer) local else distributed).incrementAndGet()
+    answer
   }
 
   /** Decisions per gate since the last [[resetGateStats]], every gate

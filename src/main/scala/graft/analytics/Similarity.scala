@@ -46,7 +46,7 @@ object Similarity {
   /** Sequential-fold dot product — deterministic order, no reassociation.
     * (Composed HOF form, kept for reference/tests; the hot path uses the
     * codegen'd expression below.) */
-  def dot(a: Column, b: Column): Column =
+  private[graft] def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   private[graft] def norm(a: Column): Column =

@@ -5,7 +5,7 @@ import graft.analytics.Par.Mat
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
@@ -42,32 +42,34 @@ object CategoryPath {
     * reference's dicts, and the last segment is always the id's own name.
     *
     * Two physical strategies, same semantics, chosen by the `graph` gate
-    * ([[Par.gate]]) over the dimension's row count:
+    * ([[Par.gateRows]]) over the dimension's rows:
     *  - dimension fits in driver memory (the common case — any path set
     *    that will be broadcast-joined to facts must fit in memory anyway):
-    *    collect the parent-pointer maps and walk on the driver, exactly the
-    *    reference's two-hash-map walk (main.py:1477-1507). One tiny collect
-    *    job instead of ~2 jobs per hierarchy level. The result is a local
-    *    relation, so every later action on it reads driver memory, not
-    *    the dimension's source.
+    *    the gate's one bounded collect (`limit(threshold + 1)`) hands the
+    *    parent-pointer rows to a driver walk, exactly the reference's
+    *    two-hash-map walk (main.py:1477-1507). No count runs first, and a
+    *    local-relation dimension (the feed's categories) collects with no
+    *    job. The result is a local relation, so every later action on it
+    *    reads driver memory, not the dimension's source.
     *  - larger hierarchies: iterative broadcast self-join to fixpoint
     *    (bounded by maxDepth), never collecting the dimension.
     */
-  def resolveSegs(edges: DataFrame, maxDepth: Int = 20): DataFrame =
-    if (Par.gate(edges.sparkSession, "graph", edges.count()))
-      resolveSegsLocal(edges, maxDepth)
-    else resolveSegsIterative(edges, maxDepth)
+  def resolveSegs(edges: DataFrame, maxDepth: Int = 20): DataFrame = {
+    // the walk keys on string ids under their own name: a second column
+    // named `id` breaks Spark 4.1's limit-over-union plan validation
+    val walk = edges.select(col("id").cast("string").as("key"),
+      col("parentId").cast("string"), col("name").cast("string"), col("id"))
+    Par.gateRows(edges.sparkSession, "graph", walk) match {
+      case Some(rows) => resolveSegsLocal(edges, rows, maxDepth)
+      case None => resolveSegsIterative(edges, maxDepth)
+    }
+  }
 
-  /** Driver-side walk over collected parent-pointer maps (small dimensions).
+  /** Driver-side walk over the gate's rows (key, parentId, name, id).
     * Semantics identical to [[resolveSegsIterative]]: root-first segments,
     * cycle guard via visited set, missing parents stop the walk. */
-  private def resolveSegsLocal(edges: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
-    // the walk keys on string ids; the raw id (last) is what the row emits
-    val rows = edges
-      .select(col("id").cast("string"), col("parentId").cast("string"),
-              col("name").cast("string"), col("id"))
-      .collect()
+  private def resolveSegsLocal(edges: DataFrame, rows: Array[Row],
+                               maxDepth: Int): DataFrame = {
     val parentOf = new scala.collection.mutable.HashMap[String, String]()
     val nameOf   = new scala.collection.mutable.HashMap[String, String]()
     rows.foreach { r =>
@@ -94,7 +96,7 @@ object CategoryPath {
     }
     // the iterative branch's schema: the input's id, a never-null path
     // whose segments come out of a left join
-    spark.createDataFrame(out.asJava, StructType(Seq(
+    edges.sparkSession.createDataFrame(out.asJava, StructType(Seq(
       edges.schema("id"),
       StructField("segs", ArrayType(StringType, containsNull = true),
         nullable = false))))

@@ -17,8 +17,8 @@ import graft.sources.XmlSource.{AttrPrefix, ValueTag}
   * walk happens ONCE, over the inferred schema on the driver, and emits pure
   * `Column` expressions — a schema→plan compiler. Execution is a single
   * narrow projection (plus one broadcast join for the category path and one
-  * tiny distinct-scan for the param pivot), whole-stage-codegen'd, no UDFs,
-  * no shuffles of the fact data.
+  * capped distinct-scan that discovers every pivot container's names),
+  * whole-stage-codegen'd, no UDFs, no shuffles of the fact data.
   *
   * "First-wins" precedence (direct child > descendant, main.py:149-168) is
   * per-ROW: every column is a `coalesce` chain over its candidate paths in
@@ -158,17 +158,19 @@ object Flatten {
     // -- pictures (A3, main.py:200-244)
     cols("pictures") = picturesColumn(schema)
 
-    // -- params pivot (main.py:245-266): raw param names become columns
-    //    (update() overwrites), same-key values joined ", "
-    if (isYml && schema.fieldNames.contains("param"))
-      paramColumns(base).foreach { case (k, v) => cols(k) = v }
-    if (!isYml)
-      Seq("fabric" -> "fabric_", "features" -> "feature_").foreach {
-        case (container, prefix) =>
-          if (schema.fieldNames.contains(container))
-            featureColumns(base, container, prefix)
-              .foreach { case (k, v) => cols(k) = v }
+    // -- pivots (main.py:245-266, 284-307): raw param / feature names
+    //    become columns (update() overwrites), same-key values joined ", "
+    val pivots =
+      if (isYml) fieldOf(schema, "param").flatMap(f =>
+        pivot(col("param"), f.dataType, "", isParam = true)).toSeq
+      else Seq("fabric" -> "fabric_", "features" -> "feature_").flatMap {
+        case (container, prefix) => fieldOf(schema, container)
+          .collect { case StructField(_, st: StructType, _, _) => st }
+          .flatMap(fieldOf(_, "feature"))
+          .flatMap(f => pivot(col(s"$container.feature"), f.dataType, prefix,
+            isParam = false))
       }
+    pivotColumns(base, pivots).foreach { case (k, v) => cols(k) = v }
 
     // -- description: cleaned, with per-row fallback tags (main.py:309-320)
     val descSource =
@@ -348,94 +350,80 @@ object Flatten {
   }
 
   /** Hard cap on the driver-side name-discovery collect: the distinct
-    * param/feature names become COLUMNS, so the set is vocabulary-bounded
-    * for any real feed — but an adversarial feed with per-row unique names
-    * would otherwise grow the collect (and the output schema) without
-    * bound and OOM the driver at scale. `limit(cap+1)` bounds what ever
-    * reaches the driver; crossing the cap fails loudly instead of
-    * truncating, because a silently-dropped column is a wrong answer. */
+    * pivot names of one flatten become COLUMNS, so the set is
+    * vocabulary-bounded for any real feed — but an adversarial feed with
+    * per-row unique names would otherwise grow the collect (and the output
+    * schema) without bound and OOM the driver at scale. `limit(cap+1)`
+    * bounds what ever reaches the driver; crossing the cap fails loudly
+    * instead of truncating, because a silently-dropped column is a wrong
+    * answer. */
   private[engine] val MaxDiscoveredNames = 10000
 
-  private def collectNamesCapped(names: DataFrame, what: String): Seq[String] = {
-    val got = names.limit(MaxDiscoveredNames + 1).collect().map(_.getString(0))
-    if (got.length > MaxDiscoveredNames)
+  /** One pivot container: its `_name`-bearing elements as an array, the
+    * column prefix, and whether the param rules apply (numeric names
+    * dropped; size-ish keys and digit-bearing '?' values get the F5
+    * strip). */
+  private final case class Pivot(elems: Column, hasValue: Boolean,
+                                 prefix: String, isParam: Boolean)
+
+  private def pivot(c: Column, dt: DataType, prefix: String,
+                    isParam: Boolean): Option[Pivot] = {
+    val (elems, st) = dt match {
+      case ArrayType(st: StructType, _) => (c, st)
+      case st: StructType               => (array(c), st)
+      case _                            => return None
+    }
+    Option.when(st.fieldNames.contains(AttrPrefix + "name"))(
+      Pivot(elems, st.fieldNames.contains(ValueTag), prefix, isParam))
+  }
+
+  /** Dynamic pivots (main.py:245-266, 284-307): each container's distinct
+    * trimmed names become columns, in name order per container; same-key
+    * values join ", ". Names are discovered by ONE capped distinct over
+    * every container's (container, name) pairs, so a dialect with two
+    * containers still reads the feed once (the documented 2-job pattern,
+    * like P3). */
+  private def pivotColumns(df: DataFrame,
+                           pivots: Seq[Pivot]): Seq[(String, Column)] = {
+    if (pivots.isEmpty) return Nil
+    val nameF = AttrPrefix + "name"
+    val tag = ArrayType(StructType(Seq(
+      StructField("c", IntegerType, nullable = false),
+      StructField("k", StringType))))
+    // a row missing one container must not hide the others' names
+    val tagged = pivots.zipWithIndex.map { case (p, i) =>
+      coalesce(filter(
+        transform(p.elems, e =>
+          struct(lit(i).as("c"), trim(e.getField(nameF)).as("k"))),
+        e => e.getField("k") =!= "" &&
+          (if (p.isParam) !CleanFns.isNumericString(e.getField("k"))
+           else lit(true))), array().cast(tag))
+    }
+    val found = df.select(explode(concat(tagged: _*)).as("p"))
+      .select("p.c", "p.k").distinct()
+      .limit(MaxDiscoveredNames + 1).collect()
+    if (found.length > MaxDiscoveredNames)
       throw new IllegalArgumentException(
-        s"$what name discovery exceeded $MaxDiscoveredNames distinct names; " +
+        s"pivot name discovery exceeded $MaxDiscoveredNames distinct names; " +
         "this feed's names are not vocabulary-bounded (each would become an " +
         "output column) — clean the feed or pivot explicitly")
-    got.sorted.toSeq
-  }
-
-  /** Dynamic param pivot (main.py:245-266): distinct trimmed param names
-    * (numeric-named keys dropped) become columns; same-key values join
-    * ", "; size-ish keys / digit-bearing '?' values get the F5 strip.
-    * The name-discovery scan is the documented 2-job pattern (like P3):
-    * one cheap distinct over a single exploded column. */
-  private def paramColumns(df: DataFrame): Seq[(String, Column)] = {
-    val (paramArr, elemType) = df.schema("param").dataType match {
-      case ArrayType(st: StructType, _) => (col("param"), st)
-      case st: StructType               => (array(col("param")), st)
-      case _                            => return Nil
-    }
-    if (!elemType.fieldNames.contains(AttrPrefix + "name")) return Nil
-    val nameF = AttrPrefix + "name"
-    val hasValue = elemType.fieldNames.contains(ValueTag)
-
-    val names = collectNamesCapped(df
-      .select(explode(paramArr).as("p"))
-      .select(trim(col("p").getField(nameF)).as("k"))
-      .filter(col("k").isNotNull && col("k") =!= "" &&
-              !CleanFns.isNumericString(col("k")))
-      .distinct(), "param")
-
-    names.map { name =>
-      val vals = transform(
-        filter(paramArr, p => trim(p.getField(nameF)) === name),
-        p => {
-          val v =
-            if (hasValue) coalesce(trim(p.getField(ValueTag).cast("string")), lit(""))
-            else lit("")
-          when(CleanFns.sizeKeyish(lit(name)) ||
-                 (v.contains("?") && v.rlike("[0-9]")),
-               CleanFns.stripQuestion(v))
-            .otherwise(v)
-        })
-      name -> array_join(vals, ", ")
-    }
-  }
-
-  /** fabric_/feature_ pivot for the product dialect (main.py:284-307). */
-  private def featureColumns(df: DataFrame, container: String,
-                             prefix: String): Seq[(String, Column)] = {
-    val contType = df.schema(container).dataType match {
-      case st: StructType => st
-      case _              => return Nil
-    }
-    val (feats, elemType) = fieldOf(contType, "feature") match {
-      case Some(f) => f.dataType match {
-        case ArrayType(st: StructType, _) => (col(s"$container.feature"), st)
-        case st: StructType => (array(col(s"$container.feature")), st)
-        case _ => return Nil
+    val names = found.groupMap(_.getInt(0))(_.getString(1))
+    pivots.zipWithIndex.flatMap { case (p, i) =>
+      names.getOrElse(i, Array.empty[String]).sorted.map { name =>
+        val vals = transform(
+          filter(p.elems, e => trim(e.getField(nameF)) === name),
+          e => {
+            val v =
+              if (p.hasValue) coalesce(trim(e.getField(ValueTag).cast("string")), lit(""))
+              else lit("")
+            if (!p.isParam) v
+            else when(CleanFns.sizeKeyish(lit(name)) ||
+                        (v.contains("?") && v.rlike("[0-9]")),
+                      CleanFns.stripQuestion(v))
+              .otherwise(v)
+          })
+        s"${p.prefix}$name" -> array_join(vals, ", ")
       }
-      case None => return Nil
-    }
-    if (!elemType.fieldNames.contains(AttrPrefix + "name")) return Nil
-    val nameF = AttrPrefix + "name"
-    val hasValue = elemType.fieldNames.contains(ValueTag)
-
-    val names = collectNamesCapped(df
-      .select(explode(feats).as("p"))
-      .select(trim(col("p").getField(nameF)).as("k"))
-      .filter(col("k").isNotNull && col("k") =!= "")
-      .distinct(), "feature")
-
-    names.map { name =>
-      val vals = transform(
-        filter(feats, p => trim(p.getField(nameF)) === name),
-        p =>
-          if (hasValue) coalesce(trim(p.getField(ValueTag).cast("string")), lit(""))
-          else lit(""))
-      s"$prefix$name" -> array_join(vals, ", ")
     }
   }
 

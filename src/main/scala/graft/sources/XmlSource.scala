@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.analytics.Par.Mat
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.CategoryPath
@@ -222,82 +222,58 @@ object XmlSource {
       .xml(elems)
   }
 
-  /** The category element's fixed shape (the parse infers nothing). */
-  private val CatSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("_id", StringType), StructField("_parentId", StringType),
-      StructField(ValueTag, StringType)))
-  }
-
-  /** How far [[readCategories]] streams looking for `</categories>`. */
-  private val CategoryHeadCapBytes = 256L << 20
-
   /** YML category dimension: `<category id parentId>name</category>` rows
-    * (reference builds two hash maps, main.py:1477-1485), by one bounded
-    * head scan at every file size: YML feeds put `<categories>` in the
-    * head, so the driver streams the file only until `</categories>` and
-    * the matched elements parse as a local dataset with a fixed schema.
-    * No later action re-reads the feed for categories; a whole-file
-    * multiLine `rowTag=category` read would re-scan it on every action. A
-    * self-closing `<category .../>` is one element; `<categoryId>` and
-    * `<categories>` are not categories. Names are trimmed; a missing or
-    * blank name is `Undefined`. */
+    * (reference builds two hash maps, main.py:1477-1485) as a local
+    * relation, from one streaming StAX pass on the driver that keeps only
+    * category elements and stops at `</categories>` (a feed without one is
+    * read to its end): no buffer and no Spark job. Decoded as UTF-8 like
+    * the element splitter (an `encoding` declaration is ignored, a BOM
+    * skipped); DTDs and external entities are never loaded. XML that is
+    * not well-formed before the stop fails naming its position, as the
+    * reference's whole-document parse does. A self-closing `<category/>`
+    * is one element; `<categoryId>` and `<categories>` are not categories.
+    * Names are trimmed text; a missing or blank name is `Undefined`. */
   def readCategories(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    // accumulate BYTES and decode once: per-chunk decoding would corrupt
-    // multibyte (Cyrillic) names straddling a chunk boundary; the ASCII
-    // end marker is searched in the byte domain with a carry for the
-    // straddling case
-    val marker = "</categories>".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    def indexOfBytes(hay: Array[Byte], needle: Array[Byte]): Int = {
-      var i = 0
-      while (i <= hay.length - needle.length) {
-        var j = 0
-        while (j < needle.length && hay(i + j) == needle(j)) j += 1
-        if (j == needle.length) return i
-        i += 1
-      }
-      -1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(path))
+    import javax.xml.stream.{XMLInputFactory, XMLStreamException}
+    import javax.xml.stream.XMLStreamConstants._
+    val f = XMLInputFactory.newDefaultFactory()
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      new java.io.FileInputStream(path), java.nio.charset.StandardCharsets.UTF_8))
+    val rows = new java.util.ArrayList[Row]()
     try {
-      val buf = new Array[Byte](1 << 20)
-      var carry = Array.empty[Byte]
+      in.mark(1)
+      if (in.read() != '\uFEFF') in.reset()
+      val x = f.createXMLStreamReader(in)
       var done = false
-      while (!done && out.size < CategoryHeadCapBytes) {
-        val n = in.read(buf)
-        if (n < 0) done = true
-        else {
-          out.write(buf, 0, n)
-          val window = carry ++ buf.take(n)
-          if (indexOfBytes(window, marker) >= 0) done = true
-          else carry = window.takeRight(marker.length - 1)
-        }
+      while (!done && x.hasNext) x.next() match {
+        case START_ELEMENT if x.getLocalName == "category" =>
+          // attribute values trimmed, like Spark's XML reader
+          def attr(n: String) = Option(x.getAttributeValue(null, n)).map(_.trim).orNull
+          val (id, parentId) = (attr("id"), attr("parentId"))
+          val text = new StringBuilder
+          var depth = 1
+          while (depth > 0) x.next() match {
+            case START_ELEMENT => depth += 1
+            case END_ELEMENT => depth -= 1
+            case CHARACTERS | CDATA | SPACE => text ++= x.getText
+            case _ =>
+          }
+          val name = text.toString.trim
+          rows.add(Row(id, parentId, if (name.isEmpty) "Undefined" else name))
+        case END_ELEMENT if x.getLocalName == "categories" => done = true
+        case _ =>
       }
+    } catch { case e: XMLStreamException =>
+      throw new IllegalArgumentException(
+        s"Malformed XML before the end of <categories>: ${e.getMessage}", e)
     } finally in.close()
-    val head = new String(out.toByteArray,
-      java.nio.charset.StandardCharsets.UTF_8)
-    // start tag with quoted attribute values (a `/` or `>` inside quotes
-    // does not end it), then either `/>` or a body up to `</category>`
-    val catRe = java.util.regex.Pattern.compile(
-      "<category(?:\\s(?:[^>\"'/]|\"[^\"]*\"|'[^']*')*+)?(?:/>|>.*?</category>)",
-      java.util.regex.Pattern.DOTALL)
-    val m = catRe.matcher(head)
-    val elems = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (m.find()) elems += m.group()
-    spark.read
-      .option("rowTag", "category")
-      .option("attributePrefix", AttrPrefix)
-      .option("valueTag", ValueTag)
-      .schema(CatSchema)
-      .xml(spark.createDataset(elems.toSeq))
-      .select(
-        col("_id").as("id"),
-        col("_parentId").as("parentId"),
-        coalesce(nullif(trim(col(ValueTag)), lit("")), lit("Undefined"))
-          .as("name"))
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", StringType), StructField("parentId", StringType),
+      StructField("name", StringType, nullable = false))))
   }
 
   /** `id -> category_path` with the reference's walk semantics

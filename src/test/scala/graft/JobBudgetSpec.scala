@@ -22,7 +22,7 @@ class JobBudgetSpec extends SparkTestBase {
   /** query -> (cold jobs, warm jobs) */
   private val budget = Map(
     "q01_multivalue_dedup" -> (5, 4),
-    "q02_category_path" -> (10, 7),
+    "q02_category_path" -> (9, 6),
     "q03_prune_stats" -> (3, 2),
     "q06_sanitize_name" -> (4, 3),
     "q07_clean_description" -> (4, 3),
@@ -33,10 +33,13 @@ class JobBudgetSpec extends SparkTestBase {
 
   /** fixture -> (target node, jobs of one XML -> CSV conversion) */
   private val feedBudget = Map(
-    "yml_offer.xml" -> ("auto", 11),
-    "product.xml" -> ("product", 8),
+    "yml_offer.xml" -> ("auto", 8),
+    "product.xml" -> ("product", 6),
     "russian_1c.xml" -> ("auto", 4),
     "service.xml" -> ("auto", 4))
+
+  private def fixture(f: String): String =
+    getClass.getResource(s"/fixtures/$f").getPath
 
   private def consume(q: String): Unit = {
     val df = Catalog.byName(q).run(spark, sf0001)
@@ -63,7 +66,7 @@ class JobBudgetSpec extends SparkTestBase {
     val out = java.nio.file.Files.createTempDirectory("graft_jobbudget")
     val over = feedBudget.toSeq.sortBy(_._1).flatMap {
       case (f, (node, want)) =>
-        val in = getClass.getResource(s"/fixtures/$f").getPath
+        val in = fixture(f)
         val (csv, sites) = jobsOf(
           Pipeline.processXmlFileToCsv(spark, in, out.toString, node))
         java.nio.file.Files.delete(csv)
@@ -72,6 +75,27 @@ class JobBudgetSpec extends SparkTestBase {
           sites.mkString("\n    "))
     }
     java.nio.file.Files.delete(out)
+    if (over.nonEmpty) fail("job counts off budget (a count below " +
+      "budget lowers the budget):\n  " + over.mkString("\n  "))
+  }
+
+  test("CSV -> XML and XML -> JSON convert within their job budgets") {
+    val out = java.nio.file.Files.createTempDirectory("graft_jobbudget").toString
+    // (route, jobs of one conversion, the conversion) on FIXTURES.md-shaped
+    // inputs: the golden YML export as the round-trip CSV, service.xml
+    val routes = Seq[(String, Int, () => java.nio.file.Path)](
+      ("csv_to_xml", 10, () => Pipeline.processCsvToXml(spark,
+        fixture("yml_offer_expected.csv"), out, date = "2025-01-01 00:00")),
+      ("xml_to_json", 2, () =>
+        Pipeline.processXmlToJson(spark, fixture("service.xml"), out, "service")))
+    val over = routes.flatMap { case (r, want, convert) =>
+      val (file, sites) = jobsOf(convert())
+      java.nio.file.Files.delete(file)
+      if (sites.size == want) Nil
+      else Seq(s"$r: ${sites.size} jobs, budget $want:\n    " +
+        sites.mkString("\n    "))
+    }
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out))
     if (over.nonEmpty) fail("job counts off budget (a count below " +
       "budget lowers the budget):\n  " + over.mkString("\n  "))
   }

@@ -196,6 +196,28 @@ class ParSpec extends SparkTestBase {
       "bt" -> (0L, 1L)))
   }
 
+  test("row gate: one bounded collect decides and feeds the local branch; " +
+       "no threshold up to Long.MaxValue wraps the Int limit or the Long " +
+       "probe") {
+    import spark.implicits._
+    val local = Seq(1L, 2L, 3L).toDF("v")
+    val (_, g) = gatesOf {
+      for (dim <- Seq(local, spark.range(1, 4).toDF("v"));
+           t <- Seq(Long.MaxValue, Int.MaxValue + 1L, Int.MaxValue.toLong,
+             Int.MaxValue - 1L, 3L))
+        withConf("spark.graft.gate.graph" -> t.toString) {
+          assert(Par.gateRows(spark, "graph", dim).map(_.map(_.getLong(0))
+            .toSeq.sorted) === Some(Seq(1L, 2L, 3L)), s"threshold $t")
+        }
+      for (t <- Seq(2L, 0L, -1L, Long.MinValue))
+        withConf("spark.graft.gate.graph" -> t.toString) {
+          assert(Par.gateRows(spark, "graph", local).isEmpty, s"threshold $t")
+        }
+      assert(Par.gateRows(spark, "graph", local.filter(lit(false))).isEmpty)
+    }
+    assert(g === Map("graph" -> (10L, 5L)))
+  }
+
   test("size gate: an unknown gate name and a malformed threshold fail " +
        "naming what is wrong") {
     val unknown = intercept[IllegalArgumentException](

@@ -169,6 +169,20 @@ class FlattenCapSpec extends SparkTestBase {
     assert(ex.getMessage.contains("name discovery exceeded"))
   }
 
+  test("the cap counts every pivot container of one flatten: product " +
+       "fabric and feature names, each set under it, fail together") {
+    val half = Flatten.MaxDiscoveredNames / 2 + 1
+    def feats(p: String) = struct(transform(sequence(lit(1), lit(half)),
+      i => struct(concat(lit(p), i.cast("string")).as("_name"),
+        lit("v").as("_VALUE"))).as("feature"))
+    val df = spark.range(1).select(lit("1").as("_id"),
+      feats("f").as("fabric"), feats("g").as("features"))
+    val ex = intercept[IllegalArgumentException] {
+      Flatten.flattenOffers(df, graft.sources.XmlSource.Product).columns
+    }
+    assert(ex.getMessage.contains("name discovery exceeded"))
+  }
+
   test("param-name discovery at exactly the cap still pivots") {
     val n = 50 // representative bounded feed; the cap itself is 10k
     val df = spark.range(1).select(

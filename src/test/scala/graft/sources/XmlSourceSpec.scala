@@ -352,8 +352,8 @@ class XmlSourceSpec extends SparkTestBase {
        "the read chunk, categoryId tags, no categories block)") {
     import org.apache.spark.sql.functions.{coalesce, lit, nullif, trim}
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // the name straddles the scan's 1 MiB read chunk: its first Cyrillic
-    // character's two bytes sit on either side of the boundary
+    // the name straddles byte 1 MiB: its first Cyrillic character's two
+    // bytes sit on either side, where a chunked decode would cut it
     val open = "<?xml version=\"1.0\"?><yml_catalog><shop><company>"
     val catOpen = "</company><categories><category id=\"1\">"
     val pad = (1 << 20) - 1 - open.length - catOpen.length
@@ -384,7 +384,18 @@ class XmlSourceSpec extends SparkTestBase {
           "<categories><category id=\"2\">Two</category></categories>" +
           "</shop></yml_catalog>"),
       "no categories block" -> feedFile("cat_none", ymlFeed("",
-        "<offer id=\"1\"><categoryId>5</categoryId></offer>")))
+        "<offer id=\"1\"><categoryId>5</categoryId></offer>")),
+      "surrounding whitespace, empty attributes" -> feedFile("cat_ws", ymlFeed(
+        "<categories>\n\t<category id=\" 1 \" parentId=\"\">\n\t\tLamps \n\t" +
+          "</category>\n\t<category id=\"\" parentId=\" 1 \">\tWall\t" +
+          "</category>\n</categories>")),
+      // real YML feeds carry an external DTD; it is never loaded
+      "DOCTYPE with an external DTD" -> feedFile("cat_doctype",
+        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>" +
+          "<!DOCTYPE yml_catalog SYSTEM \"shops.dtd\"><yml_catalog><shop>" +
+          "<categories><category id=\"1\">Свет</category>" +
+          "<category id=\"2\" parentId=\"1\">Бра</category></categories>" +
+          "<offers/></shop></yml_catalog>"))
     val schema = StructType(Seq(StructField("_id", StringType),
       StructField("_parentId", StringType),
       StructField(XmlSource.ValueTag, StringType)))
@@ -406,6 +417,44 @@ class XmlSourceSpec extends SparkTestBase {
       ("4", "1", "Undefined")))
     assert(catRows(XmlSource.readCategories(spark, cases(3)._2)).map(_._3) ===
       Seq("Люстры", "Бра"))
+    // an encoding declaration is ignored: UTF-8, like the element splitter
+    // (the multiLine read alone decodes by the declaration, and reads
+    // these bytes as windows-1251 mojibake)
+    assert(catRows(XmlSource.readCategories(spark, feedFile("cat_cp1251",
+      "<?xml version=\"1.0\" encoding=\"windows-1251\"?>" +
+        "<yml_catalog><shop><categories><category id=\"1\">Люстры" +
+        "</category></categories></shop></yml_catalog>"))) ===
+      Seq(("1", null, "Люстры")))
+    // the read stops at </categories>, before a malformed offer (where
+    // the multiLine read adds an all-null row)
+    assert(catRows(XmlSource.readCategories(spark, feedFile("cat_bad_after",
+      ymlFeed("<categories><category id=\"1\">A</category></categories>",
+        "<offer id=\"1\"><name>x</nme></offer>")))) === Seq(("1", null, "A")))
+    // before the stop the feed must be well-formed: a malformed offer ahead
+    // of the categories fails naming its position (the reference's
+    // whole-document parse fails there too), never a partial dictionary
+    val bad = intercept[IllegalArgumentException](XmlSource.readCategories(
+      spark, feedFile("cat_bad_before", "<yml_catalog><shop><offers>" +
+        "<offer id=\"1\"><name>x</nme></offer></offers><categories>" +
+        "<category id=\"1\">A</category></categories></shop></yml_catalog>")))
+    assert(bad.getMessage.contains("Malformed XML before the end of " +
+      "<categories>") && bad.getMessage.contains("[row,col]:[1,"), bad.getMessage)
+  }
+
+  test("S2 the category read never loads an external entity") {
+    val secret = java.nio.file.Files.createTempFile("graft_secret", ".txt")
+    secret.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(secret, "TOP-SECRET")
+    val path = feedFile("cat_xxe", "<?xml version=\"1.0\"?>" +
+      "<!DOCTYPE yml_catalog [<!ENTITY e SYSTEM \"" + secret.toUri + "\">]>" +
+      "<yml_catalog><shop><categories><category id=\"1\">&e;</category>" +
+      "</categories></shop></yml_catalog>")
+    // the DTD is not read, so the entity is undeclared: the read fails
+    // without the file's content
+    val ex = intercept[IllegalArgumentException](
+      XmlSource.readCategories(spark, path))
+    assert(ex.getMessage.contains("\"e\"") &&
+      !ex.getMessage.contains("TOP-SECRET"), ex.getMessage)
   }
 
   test("J2 a duplicate category id has one path, its last definition, " +
