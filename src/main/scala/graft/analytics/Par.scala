@@ -147,7 +147,7 @@ object Par {
     *                                           kCore, labelPropagation:
     *                                           non-loop edge rows;
     *                                           CategoryPath.resolveSegs:
-    *                                           dimension rows;
+    *                                           dimension rows (gateRows);
     *                                           connectedComponents:
     *                                           materialized pair rows
     * bt      spark.graft.gate.bt      200000   bradleyTerry match-table rows
